@@ -27,13 +27,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 from super_speedy_syslog_searcher_spark import entry_queries as EQ
-from super_speedy_syslog_searcher_spark.functions.codec import explode_lines
-from super_speedy_syslog_searcher_spark.functions.parse import parse_lines, parse_messages_fused
+from super_speedy_syslog_searcher_spark.functions.parse import parse_messages_fused
 from super_speedy_syslog_searcher_spark.operators.enrich import enrich
 from super_speedy_syslog_searcher_spark.operators.merge import global_sort, with_source_order
 from super_speedy_syslog_searcher_spark.operators.route import route_write, sink_counts_from_path
-from super_speedy_syslog_searcher_spark.operators.sessionize import sessionize
-from super_speedy_syslog_searcher_spark.operators.summary import pattern_hit_miss, source_summary
+from super_speedy_syslog_searcher_spark.operators.summary import doc_pattern_hit_miss, doc_source_summary
 from super_speedy_syslog_searcher_spark.session import get_spark, warm_python_workers
 
 WORK = os.environ.get("S4SPARK_BENCH_DIR", "/tmp/s4spark_bench")
@@ -83,9 +81,10 @@ def run_bench(spark, sf_dir: str) -> dict:
         route_write(enriched, out_dir, file_tasks=2 * spark.sparkContext.defaultParallelism)
         sink_counts_from_path(spark, out_dir).collect()
 
-    # q2: parse-only throughput (the UDF hot path)
+    # q2: parse-only throughput (the fused kernel: split → parse →
+    # sessionize → year fix)
     def q_parse():
-        EQ.parse_docs(docs).filter(F.col("ts").isNotNull()).count()
+        parse_messages_fused(docs, reference_year=EQ.REFERENCE_YEAR).count()
 
     # q3: datetime-window filter + per-source agg
     def q_filter():
@@ -100,13 +99,13 @@ def run_bench(spark, sf_dir: str) -> dict:
         merged = global_sort(with_source_order(msgs, sources_in_order=[f"ev{i}" for i in range(8)]))
         merged.write.format("noop").mode("overwrite").save()
 
-    # q5: summary rollup + per-pattern hit counts (parsed feeds 3 sinks)
+    # q5: summary rollup + per-pattern hit counts from the docs table and
+    # the persisted kernel output (run_pipeline's composition, no window)
     def q_summary():
-        parsed = EQ.parse_docs(docs).persist()
-        msgs = sessionize(parsed)
-        source_summary(parsed, msgs).collect()
-        pattern_hit_miss(parsed).collect()
-        parsed.unpersist()
+        msgs = parse_messages_fused(docs, reference_year=EQ.REFERENCE_YEAR).persist()
+        doc_source_summary(docs, msgs, msgs).collect()
+        doc_pattern_hit_miss(docs, msgs).collect()
+        msgs.unpersist()
 
     # q6/q7: training-data operators over the documents/embeddings tables
     def q_dedup():

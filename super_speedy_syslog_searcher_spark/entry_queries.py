@@ -27,14 +27,12 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.codec import encode_text_udf, explode_lines
-from .functions.parse import parse_lines, vote_lines_from_docs
+from .functions.codec import encode_text_udf
+from .functions.parse import parse_messages_fused
 from .operators.enrich import enrich
 from .operators.merge import global_sort, with_source_order
 from .operators.route import sink_counts
-from .operators.sessionize import sessionize
-from .operators.summary import source_summary
-from .operators.yearfix import infer_years
+from .operators.summary import doc_pattern_hit_miss, doc_source_summary
 
 REFERENCE_YEAR = 2024  # events corpus is Jan 2024
 
@@ -181,20 +179,10 @@ def rendered_docs_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", "tokens", F.size("tokens").alias("n_tok"), "source")
 
 
-def parse_docs(docs: DataFrame, reference_year: int | None = REFERENCE_YEAR) -> DataFrame:
-    """Fused explode+parse (one Python stage) with the vote-sample cut at
-    the scan."""
-    from .functions.parse import parse_docs_fused
-
-    return parse_docs_fused(docs, reference_year=reference_year)
-
-
 def parsed_messages(spark: SparkSession, sf_dir: str, multiline: bool = False) -> DataFrame:
     """Full token→parse→sessionize run of the rendered corpus — the
     zero-shuffle fused path (docs are doc-grained, so message grouping is
     partition-local)."""
-    from .functions.parse import parse_messages_fused
-
     _utc(spark)
     docs = rendered_docs_multiline(spark, sf_dir) if multiline else rendered_docs(spark, sf_dir)
     return parse_messages_fused(docs, reference_year=REFERENCE_YEAR)
@@ -561,8 +549,7 @@ def q_pipe_summary_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _utc(spark)
     docs = rendered_docs_multiline(spark, sf_dir)
-    parsed = _persist(parse_docs(docs))
-    msgs = sessionize(parsed)
+    msgs = _persist(parse_messages_fused(docs, reference_year=REFERENCE_YEAR))
     nulls = [
         F.lit(None).cast("timestamp").alias("bucket_ts"),
         F.lit(None).cast("bigint").alias("n"),
@@ -570,7 +557,7 @@ def q_pipe_summary_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("double").alias("z"),
         F.lit(None).cast("boolean").alias("is_burst"),
     ]
-    summ = source_summary(parsed, msgs).select(
+    summ = doc_source_summary(docs, msgs, msgs).select(
         F.lit("summary").alias("kind"),
         "source",
         "lines_processed",
@@ -851,10 +838,9 @@ def q_pipe_pattern_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = rendered_docs(spark, sf_dir)
     # both union branches consume the fused Python parse — persist it
     # (the q_pipe_summary_rollup dual-consumer idiom)
-    parsed = _persist(parse_docs(docs))
+    msgs = _persist(parse_messages_fused(docs, reference_year=REFERENCE_YEAR))
     dtpd = (
-        parsed.groupBy("source", "pattern_id")
-        .agg(F.count("*").alias("n"))
+        doc_pattern_hit_miss(docs, msgs)
         .select(
             F.lit("dtpd").alias("kind"),
             "source",
@@ -865,7 +851,7 @@ def q_pipe_pattern_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("double").alias("share"),
         )
     )
-    tmpl = mine_templates(parsed, group_cols=("source",), text_col="text").select(
+    tmpl = mine_templates(msgs, group_cols=("source",), text_col="text").select(
         F.lit("template").alias("kind"),
         "source",
         F.lit(None).cast("int").alias("pattern_id"),
@@ -945,10 +931,8 @@ def q_pipe_year_rollover(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("tokens", encode_text_udf("text"))
         .select("doc_id", "tokens", F.size("tokens").alias("n_tok"), "source")
     )
-    parsed = parse_lines(explode_lines(docs), vote_lines=vote_lines_from_docs(docs))  # no reference year → dummy 1972
-    msgs = sessionize(parsed)
-    fixed = infer_years(msgs, reference_year=2024)
-    return _with_event_id(fixed).select("event_id", "ts")
+    msgs = parse_messages_fused(docs, reference_year=2024)
+    return _with_event_id(msgs).select("event_id", "ts")
 
 
 # Per-doc observability rule: a doc that never crosses midnight shows no
@@ -1136,7 +1120,6 @@ def q_pipe_rejects(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rejects table as no_syslines_found (reference
     FileErrNoSyslinesFound, syslogprocessor.rs:911). Every 10th event is
     rendered datetime-less."""
-    from .functions.parse import parse_messages_fused
     from .operators.rejects import doc_rejects
 
     _utc(spark)
@@ -1180,8 +1163,6 @@ def q_pipe_tz_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-resolution (wrong offset, failed case-fold, ambiguous not
     falling back) shifts the parsed instant by whole hours and
     hash-mismatches."""
-    from .functions.parse import parse_messages_fused
-
     _utc(spark)
     ev = _events(spark, sf_dir)
     b = F.col("event_id") % 8

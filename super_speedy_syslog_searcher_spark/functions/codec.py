@@ -25,7 +25,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -149,6 +149,17 @@ def split_docs_batch(doc_ids, sources, tokens) -> pd.DataFrame:
             "text": texts,
         }
     )
+
+
+def doc_line_stats(tokens: Column) -> tuple[Column, Column]:
+    """(lines, chars) of each doc under ``split_docs_batch``'s rule, as JVM
+    expressions over its token array: every newline ends a line except a
+    trailing one, an empty doc has no lines, and every other token is one
+    char of a line's text."""
+    n = F.size(tokens)
+    n_nl = F.size(F.filter(tokens, lambda t: t == NEWLINE_TOKEN))
+    trailing_nl = (F.get(tokens, n - 1) == NEWLINE_TOKEN).cast("int")
+    return F.when(n > 0, n_nl + 1 - trailing_nl).otherwise(0), n - n_nl
 
 
 def explode_lines(docs: DataFrame) -> DataFrame:

@@ -37,7 +37,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .patterns import DATETIME_PARSE_DATAS, DUMMY_YEAR, month_name_to_num, year2_to_year
 from .tzmap import offset_str_to_minutes, resolve_tz_abbrev
@@ -49,6 +48,12 @@ PARSE_RESULT_FIELDS = "ts timestamp, ts_ns int, dt_beg int, dt_end int, pattern_
 
 # cheap prefilter, usable both Spark-side (rlike) and pandas-side
 EZCHECK_RE = r"\d\d"
+
+# P9 vote sample: the first lines of every VOTE_DOC_SAMPLE_MOD-th doc (by
+# doc_id hash), at most VOTE_DOC_LIMIT docs on the doc-grained path
+VOTE_LINES_PER_DOC = 8
+VOTE_DOC_SAMPLE_MOD = 20
+VOTE_DOC_LIMIT = 2048
 
 
 def _frac_to_ns(col: list) -> np.ndarray:
@@ -350,29 +355,25 @@ def make_parse_udf(
     return _parse
 
 
-def vote_patterns(
-    lines: DataFrame,
-    sample_lines_per_doc: int = 8,
-    default_tz: str = "+00:00",
-    doc_sample_mod: int = 20,
-) -> dict[str, int]:
+def vote_patterns(lines: DataFrame, default_tz: str = "+00:00") -> dict[str, int]:
     """P9 pattern lock-in, pass 1 — the block-zero-analysis analogue
     (reference Stage1, syslogprocessor.rs:911; dt_patterns_analysis
     syslinereader.rs:1528).
 
-    Samples the first K lines of a deterministic ~1/doc_sample_mod subset
-    of docs (hash-based, so the vote reads a bounded fraction of the corpus
-    however docs are shaped), parses with the full table, and elects ONE
-    pattern per source (DT_PATTERN_MAX = 1): most hits wins, ties broken by
-    lowest table index. Returns a small dict {source: locked_pattern_id}
+    Samples the first VOTE_LINES_PER_DOC lines of a deterministic
+    ~1/VOTE_DOC_SAMPLE_MOD subset of docs (hash-based, so the vote parses
+    a bounded fraction of the corpus however docs are shaped), parses with
+    the full table, and elects ONE pattern per source (DT_PATTERN_MAX = 1):
+    most hits wins, ties broken by lowest table index. Returns a small dict {source: locked_pattern_id}
     destined for the parse-UDF closure (bounded by source cardinality).
     Sources whose sampled docs never match stay unlocked — the full-table
     fallback in pass 2 keeps them correct.
     """
     parse_udf = make_parse_udf(default_tz=default_tz)
-    sample = lines.filter(F.col("line_no") < sample_lines_per_doc)
-    if doc_sample_mod > 1:
-        sample = sample.filter(F.pmod(F.xxhash64("doc_id"), F.lit(doc_sample_mod)) == 0)
+    sample = lines.filter(
+        (F.col("line_no") < VOTE_LINES_PER_DOC)
+        & (F.pmod(F.xxhash64("doc_id"), F.lit(VOTE_DOC_SAMPLE_MOD)) == 0)
+    )
     # project the UDF struct ONCE before filter/groupBy — referencing
     # p.pattern_id in both would make Catalyst instantiate the python
     # stage twice (no CSE across ArrowEvalPython)
@@ -397,36 +398,30 @@ def _elect(counts: list[tuple[str, int, int]]) -> dict[str, int]:
     return {s: pid for s, (_, pid) in best.items()}
 
 
-def vote_patterns_fused(
-    docs: DataFrame,
-    sample_lines_per_doc: int = 8,
-    default_tz: str = "+00:00",
-    doc_sample_mod: int = 20,
-    doc_limit: int = 2048,
-) -> dict[str, int]:
+def vote_patterns_fused(docs: DataFrame, default_tz: str = "+00:00") -> dict[str, int]:
     """P9 vote with token-split + parse + partial count fused into ONE
-    mapInPandas stage (the two-stage ``vote_lines_from_docs`` →
-    ``vote_patterns`` path pays a second Arrow round trip just to move
-    the sampled lines between Python stages — measured ~5 s of fixed
-    cost per job at 6M docs, ~2.5 s fused).  Election semantics are
-    identical: full-table parse on the sample, most hits per source
-    wins, ties → lowest table index (datetime.rs:2517-2556); the
-    doc-hash sample cut and LIMIT early-stop still sit on the scan."""
+    mapInPandas stage (a separate explode stage would pay a second Arrow
+    round trip just to move the sampled lines between Python stages —
+    measured ~5 s of fixed cost per job at 6M docs, ~2.5 s fused).
+    Election semantics are those of ``vote_patterns``: full-table parse
+    on the sample, most hits per source wins, ties → lowest table index
+    (datetime.rs:2517-2556); the doc-hash sample cut and LIMIT
+    early-stop sit on the scan."""
     from collections.abc import Iterator
 
     from .codec import split_docs_batch
 
-    sample = docs.select("doc_id", "source", "tokens")
-    if doc_sample_mod > 1:
-        sample = sample.filter(F.pmod(F.xxhash64("doc_id"), F.lit(doc_sample_mod)) == 0)
-    if doc_limit:
-        sample = sample.limit(doc_limit)
+    sample = (
+        docs.select("doc_id", "source", "tokens")
+        .filter(F.pmod(F.xxhash64("doc_id"), F.lit(VOTE_DOC_SAMPLE_MOD)) == 0)
+        .limit(VOTE_DOC_LIMIT)
+    )
     tz_min = offset_str_to_minutes(default_tz)
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             lines = split_docs_batch(pdf["doc_id"].to_numpy(), pdf["source"].to_numpy(), pdf["tokens"])
-            lines = lines[lines["line_no"] < sample_lines_per_doc]
+            lines = lines[lines["line_no"] < VOTE_LINES_PER_DOC]
             p = parse_series(lines["text"].reset_index(drop=True), default_tz_minutes=tz_min)
             hits = pd.DataFrame({
                 "source": lines["source"].to_numpy(),
@@ -444,90 +439,35 @@ def vote_patterns_fused(
     return _elect([(r["source"], r["pid"], r["cnt"]) for r in counts])
 
 
-def parse_docs_fused(
-    docs: DataFrame,
-    default_tz: str = "+00:00",
-    reference_year: int | None = None,
-    lock_patterns: bool = True,
-    sample_lines_per_doc: int = 8,
-) -> DataFrame:
-    """Fused explode+parse: one mapInPandas stage that splits each doc's
-    token array into lines AND datetime-parses them in the same Python
-    worker pass — halving the Arrow JVM↔Python round trips of
-    ``explode_lines(docs)`` → ``parse_lines`` on the hot path. Output
-    schema matches ``parse_lines(explode_lines(docs))``.
-
-    This is the Spark shape of the reference's single-pass per-file loop
-    (find_line → find_datetime_in_line fused in one thread,
-    /root/reference/src/readers/syslinereader.rs:1976-2192).
-    """
-    from collections.abc import Iterator
-
-    from .codec import LINES_SCHEMA, split_docs_batch
-
-    locked_map: dict[str, int] = {}
-    if lock_patterns:
-        locked_map = vote_patterns_fused(
-            docs, sample_lines_per_doc=sample_lines_per_doc, default_tz=default_tz,
-        )
-    tz_min = offset_str_to_minutes(default_tz)
-    schema = T.StructType(
-        LINES_SCHEMA.fields
-        + [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("ts_ns", T.IntegerType()),
-            T.StructField("dt_beg", T.IntegerType()),
-            T.StructField("dt_end", T.IntegerType()),
-            T.StructField("pattern_id", T.IntegerType()),
-        ]
-    )
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lines = split_docs_batch(pdf["doc_id"].to_numpy(), pdf["source"].to_numpy(), pdf["tokens"])
-            locked = lines["source"].map(locked_map) if locked_map else None
-            p = parse_series(
-                lines["text"], default_tz_minutes=tz_min, reference_year=reference_year, locked=locked
-            )
-            for c in ("ts", "ts_ns", "dt_beg", "dt_end", "pattern_id"):
-                lines[c] = p[c].to_numpy() if c != "ts" else p[c]
-            yield lines
-
-    return docs.select("doc_id", "source", "tokens").mapInPandas(_gen, schema=schema)
-
-
 def parse_messages_fused(
     docs: DataFrame,
     default_tz: str = "+00:00",
     reference_year: int | None = None,
     lock_patterns: bool = True,
-    sample_lines_per_doc: int = 8,
-    vote_doc_sample_mod: int = 20,
     locked_map: dict[str, int] | None = None,
 ) -> DataFrame:
     """Fully-fused docs → MESSAGES: token split + datetime parse +
-    sessionization in ONE mapInPandas stage, ZERO shuffles.
+    sessionization + year inference in ONE mapInPandas stage, ZERO
+    shuffles.
 
     Valid because the input is doc-grained (input_hint): every doc's lines
     are contiguous inside the stage by construction, so message grouping
-    is partition-local — the Spark realization of the reference's
-    single-thread-per-file pass (find_line → find_datetime_in_line →
-    sysline assembly, /root/reference/src/readers/syslinereader.rs:
-    1976-2192) with no cross-task coordination. The line-grained
-    ``sessionize`` operator remains for inputs that arrive as loose lines.
+    and the per-doc year-rollover rule (``operators.yearfix.fix_years``,
+    applied when ``reference_year`` is set) are partition-local — the
+    Spark realization of the reference's single-thread-per-file pass
+    (find_line → find_datetime_in_line → sysline assembly, s4's
+    src/readers/syslinereader.rs:1976-2192) with no
+    cross-task coordination. The line-grained ``sessionize`` and
+    ``infer_years`` operators remain for inputs that arrive as loose lines.
     """
     from collections.abc import Iterator
 
     from ..operators.sessionize import MESSAGES_SCHEMA, _emit_messages
+    from ..operators.yearfix import fix_years
     from .codec import split_docs_batch
 
     if locked_map is None:
-        locked_map = {}
-        if lock_patterns:
-            locked_map = vote_patterns_fused(
-                docs, sample_lines_per_doc=sample_lines_per_doc,
-                default_tz=default_tz, doc_sample_mod=vote_doc_sample_mod,
-            )
+        locked_map = vote_patterns_fused(docs, default_tz=default_tz) if lock_patterns else {}
     tz_min = offset_str_to_minutes(default_tz)
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -539,27 +479,10 @@ def parse_messages_fused(
             )
             for c in ("ts", "ts_ns", "dt_beg", "dt_end", "pattern_id"):
                 lines[c] = p[c].to_numpy() if c != "ts" else p[c]
-            yield _emit_messages(lines)
+            msgs = _emit_messages(lines)
+            yield msgs if reference_year is None else fix_years(msgs)
 
     return docs.select("doc_id", "source", "tokens").mapInPandas(_gen, schema=MESSAGES_SCHEMA)
-
-
-def vote_lines_from_docs(
-    docs: DataFrame, doc_sample_mod: int = 20, doc_limit: int = 8192
-) -> DataFrame:
-    """Doc-sampled lines for the P9 vote, with the sample cut applied
-    BEFORE the explode UDF so it reaches the scan, and a LIMIT so the
-    scan STOPS once the sample is filled — without it the vote job reads
-    the whole corpus just to keep 1/mod of it (measured 6 s of fixed cost
-    per run at 6M docs; the reference's analogue reads only block zero of
-    each file, syslogprocessor.rs:911). The hash cut keeps the kept docs
-    pseudo-random within the scanned prefix."""
-    from .codec import explode_lines
-
-    sample = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(doc_sample_mod)) == 0)
-    if doc_limit:
-        sample = sample.limit(doc_limit)
-    return explode_lines(sample)
 
 
 def parse_lines(
@@ -567,8 +490,6 @@ def parse_lines(
     default_tz: str = "+00:00",
     reference_year: int | None = None,
     lock_patterns: bool = True,
-    sample_lines_per_doc: int = 8,
-    vote_lines: DataFrame | None = None,
 ) -> DataFrame:
     """Full two-pass parse over a lines DF (doc_id, source, line_no, text, ...).
 
@@ -576,21 +497,7 @@ def parse_lines(
     lets Catalyst skip digit-less rows before Python is ever invoked —
     those rows keep NULL ts and become continuation lines downstream.
     """
-    locked_map = None
-    if lock_patterns:
-        # vote_lines, when supplied, is an already doc-sampled lines DF
-        # (e.g. explode_lines(docs.filter(hash(doc_id) % k == 0))) — the
-        # sample cut then happens BEFORE the explode UDF at the scan, so
-        # the vote job reads ~1/k of the corpus instead of exploding all
-        # of it and filtering after (Catalyst cannot push filters through
-        # mapInPandas)
-        if vote_lines is not None:
-            locked_map = vote_patterns(
-                vote_lines, sample_lines_per_doc=sample_lines_per_doc,
-                default_tz=default_tz, doc_sample_mod=1,
-            )
-        else:
-            locked_map = vote_patterns(lines, sample_lines_per_doc=sample_lines_per_doc, default_tz=default_tz)
+    locked_map = vote_patterns(lines, default_tz=default_tz) if lock_patterns else None
     parse_udf = make_parse_udf(default_tz=default_tz, reference_year=reference_year, locked_map=locked_map)
 
     # NOTE: no F.when() gate around the UDF — Catalyst does not guarantee

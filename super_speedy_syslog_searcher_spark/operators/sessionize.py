@@ -127,25 +127,28 @@ def _empty_messages() -> pd.DataFrame:
     )
 
 
-def _sessionize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-partition driver: batches arrive sorted by (doc_id, line_no);
-    hold back the last (possibly incomplete) doc until the next batch."""
+def whole_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Re-cut doc-sorted batches into blocks of whole docs: a batch's last
+    doc may continue in the next batch, so it is held back until then."""
     pending: pd.DataFrame | None = None
     for pdf in batches:
         if pending is not None and len(pending):
             pdf = pd.concat([pending, pdf], ignore_index=True)
         if len(pdf) == 0:
             continue
-        last_doc = pdf["doc_id"].iloc[-1]
-        tail_mask = (pdf["doc_id"] == last_doc).to_numpy()
-        # rows of the trailing doc may continue in the next batch
+        tail_mask = (pdf["doc_id"] == pdf["doc_id"].iloc[-1]).to_numpy()
         cut = len(pdf) - int(tail_mask[::-1].argmin() if not tail_mask.all() else len(pdf))
-        pending = pdf.iloc[cut:].copy()
-        complete = pdf.iloc[:cut]
-        if len(complete):
-            yield _emit_messages(complete)
+        pending = pdf.iloc[cut:]
+        if cut:
+            yield pdf.iloc[:cut]
     if pending is not None and len(pending):
-        yield _emit_messages(pending)
+        yield pending
+
+
+def _sessionize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Per-partition loop: batches arrive sorted by (doc_id, line_no)."""
+    for block in whole_docs(batches):
+        yield _emit_messages(block)
 
 
 def sessionize(parsed_lines: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -157,21 +160,6 @@ def sessionize(parsed_lines: DataFrame, num_partitions: int | None = None) -> Da
         .sortWithinPartitions("doc_id", "line_no")
     )
     return df.mapInPandas(_sessionize_batches, schema=MESSAGES_SCHEMA)
-
-
-def dropped_leading_lines(parsed_lines: DataFrame) -> DataFrame:
-    """Summary-path helper: count per (doc, source) the leading
-    datetime-less lines that belong to no message (A2 'lines dropped')."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("doc_id").orderBy("line_no").rowsBetween(Window.unboundedPreceding, 0)
-    flag = F.when(F.col("ts").isNotNull(), 1).otherwise(0)
-    return (
-        parsed_lines.withColumn("msg_no", F.sum(flag).over(w))
-        .filter(F.col("msg_no") == 0)
-        .groupBy("source")
-        .agg(F.count("*").alias("lines_dropped"))
-    )
 
 
 def event_transitions(

@@ -10,13 +10,21 @@ Reference: per-file reader summaries + grand totals —
 The per-file + grand-total structure is a textbook 2-level rollup →
 ``df.rollup("source")``; NULL source row = grand total. Per-pattern
 hit/miss counts (north_star metric "parse hit/miss rates per DTPD
-pattern") come from the parsed lines before sessionization.
+pattern") count parsed lines.
+
+Two groundings of the same counters: ``source_summary`` /
+``pattern_hit_miss`` read parsed LINES; ``doc_source_summary`` /
+``doc_pattern_hit_miss`` read the docs table plus the messages of the
+fused kernel — what ``run_pipeline`` has, since it never materializes
+lines — and give the same rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.codec import doc_line_stats
 
 
 def source_summary(parsed_lines: DataFrame, messages: DataFrame) -> DataFrame:
@@ -67,6 +75,56 @@ def pattern_hit_miss(parsed_lines: DataFrame) -> DataFrame:
     return (
         parsed_lines.groupBy("source", "pattern_id")
         .agg(F.count("*").alias("n"))
+        .withColumn("kind", F.when(F.col("pattern_id") >= 0, "hit").otherwise("miss"))
+    )
+
+
+def doc_source_summary(docs: DataFrame, parsed: DataFrame, messages: DataFrame) -> DataFrame:
+    """``source_summary`` from doc-grained inputs: ``docs`` gives lines and
+    chars per doc (``doc_line_stats``), ``parsed`` holds every message —
+    one per datetime line — and ``messages`` is ``parsed`` after the
+    -a/-b window. Each input contributes its own counter columns to ONE
+    union, rolled up once; a doc without lines adds no row, as it adds no
+    line to ``source_summary``."""
+    lines, chars = doc_line_stats(F.col("tokens"))
+    zero, no_ts = F.lit(0), F.lit(None).cast("timestamp")
+    cols = ("lines", "chars", "with_dt", "syslines", "member_lines", "ts")
+
+    def counters(df: DataFrame, *values) -> DataFrame:
+        return df.select("source", *[v.alias(c) for v, c in zip(values, cols)])
+
+    rows = (
+        counters(docs, lines, chars, zero, zero, zero, no_ts)
+        .filter(F.col("lines") > 0)
+        .unionByName(counters(parsed, zero, zero, F.lit(1), zero, zero, no_ts))
+        .unionByName(counters(messages, zero, zero, zero, F.lit(1), F.col("n_lines"), F.col("ts")))
+    )
+    return rows.rollup("source").agg(
+        F.sum("lines").alias("lines_processed"),
+        F.sum("with_dt").alias("lines_with_dt"),
+        (F.sum("lines") - F.sum("member_lines")).alias("lines_dropped"),
+        F.sum("chars").alias("bytes_processed"),
+        F.sum("syslines").alias("syslines"),
+        F.min("ts").alias("dt_first"),
+        F.max("ts").alias("dt_last"),
+    )
+
+
+def doc_pattern_hit_miss(docs: DataFrame, parsed: DataFrame) -> DataFrame:
+    """``pattern_hit_miss`` from doc-grained inputs. A hit is a message's
+    datetime line, so hits per (source, pattern_id) count the messages in
+    ``parsed``; the misses (pattern_id = -1) are a source's lines less its
+    hits: every doc adds its lines and every message takes one away."""
+    lines, _ = doc_line_stats(F.col("tokens"))
+    signed = (
+        docs.select("source", F.lit(-1).alias("pattern_id"), lines.alias("n"))
+        .unionByName(parsed.select("source", "pattern_id", F.lit(1).alias("n")))
+        .unionByName(parsed.select("source", F.lit(-1).alias("pattern_id"), F.lit(-1).alias("n")))
+    )
+    return (
+        signed.groupBy("source", "pattern_id")
+        .agg(F.sum("n").alias("n"))
+        .filter(F.col("n") > 0)
         .withColumn("kind", F.when(F.col("pattern_id") >= 0, "hit").otherwise("miss"))
     )
 

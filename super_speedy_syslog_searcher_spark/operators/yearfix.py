@@ -2,21 +2,21 @@
 
 Reference: ``process_missing_year``
 (/root/reference/src/readers/syslogprocessor.rs:604-712). The reference
-seeds the year from the file's mtime and re-scans the file BACKWARDS; a
-backwards time jump greater than 25 hours
-(``BACKWARDS_TIME_JUMP_MEANS_NEW_YEAR``, syslogprocessor.rs:189) means a
-year rollover, so the year is decremented for all earlier messages.
+seeds the year from the file's mtime and walks the file's syslines
+BACKWARDS: a sysline more than 25 hours
+(``BACKWARDS_TIME_JUMP_MEANS_NEW_YEAR``, syslogprocessor.rs:189) after the
+sysline that follows it, both placed in the walk's current year, means a
+year rollover, so the year is decremented for it and every earlier one.
 
 Our engine has no mtimes (not reproducible — the reference's own CI resets
 them, SURVEY §5); the seed year is an explicit job parameter
-(``reference_year``) or a per-source column. The 25-hour constant is kept.
+(``reference_year``), at which the parser already places no-year rows.
+The 25-hour constant is kept.
 
-Vectorization: instead of a sequential backwards walk we compute, per doc,
-the month-day ordering at a UNIFORM year and take a reversed cumulative sum
-of ">25h forward jump" flags — equivalent to the sequential rule whenever
-each rollover is itself a >25h month-day jump (always true for Dec→Jan).
-Runs as one mapInPandas pass over doc-sorted partitions (same
-shuffle-free-after-sessionize layout; messages arrive sorted by msg_no).
+``fix_years`` is the rule over a block of WHOLE docs in file order, in
+numpy: the parse kernel (``parse_messages_fused``) applies it to each
+Arrow batch, where every doc is whole by construction, and
+``infer_years`` applies it to loose messages after one shuffle on doc_id.
 """
 
 from __future__ import annotations
@@ -26,93 +26,91 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..functions.parse import NOYEAR_PATTERN_IDS
+from ..functions.parse import NOYEAR_PATTERN_IDS, _civil_to_epoch_days
+from .sessionize import whole_docs
 
 BACKWARDS_TIME_JUMP_MEANS_NEW_YEAR_HOURS = 25
+_JUMP_NS = BACKWARDS_TIME_JUMP_MEANS_NEW_YEAR_HOURS * 3_600_000_000_000
+_DAY_NS = 86_400_000_000_000
 
 
-def fix_years_pdf(pdf: pd.DataFrame, reference_year: int) -> pd.DataFrame:
-    """Apply the rollover rule to ONE doc's messages (sorted by msg_no).
-    Only rows whose pattern lacks a year are rewritten."""
-    mask = pdf["pattern_id"].isin(NOYEAR_PATTERN_IDS).to_numpy()
-    if not mask.any():
-        return pdf
-    ts = pdf["ts"]
-    if ts.dt.tz is None:  # Arrow batches arrive UTC-naive (session tz UTC)
-        ts = ts.dt.tz_localize("UTC")
-    sub = ts[mask]
-    # rebuild at the uniform reference year
-    comp = pd.DataFrame(
-        {
-            "year": reference_year,
-            "month": sub.dt.month,
-            "day": sub.dt.day,
-            "hour": sub.dt.hour,
-            "minute": sub.dt.minute,
-            "second": sub.dt.second,
-        }
-    )
-    uni = pd.to_datetime(comp, errors="coerce", utc=True)
-    us = sub.dt.microsecond
-    # forward jump > 25h between consecutive messages (file order) ⇒ the
-    # earlier message belongs to the previous year
-    jump_ns = np.int64(BACKWARDS_TIME_JUMP_MEANS_NEW_YEAR_HOURS) * 3_600_000_000_000
-    v64 = uni.astype("int64").to_numpy()
-    jumps = (v64[:-1] - v64[1:]) > jump_ns
-    dec = np.concatenate((np.cumsum(jumps[::-1])[::-1], [0]))
-    year = reference_year - dec
-    comp["year"] = year
-    fixed = pd.to_datetime(comp, errors="coerce", utc=True) + pd.to_timedelta(us, unit="us")
-    # leap-day at a non-leap target year → keep the uniform-year value
-    fixed = fixed.fillna(uni)
-    out_ts = ts.copy()
-    out_ts[mask] = fixed
-    pdf = pdf.copy()
-    pdf["ts"] = out_ts
-    return pdf
+def _years_back(doc: np.ndarray, moved) -> np.ndarray:
+    """Years each row moves back under the backwards walk.
+
+    ``moved(rows, k)`` is the epoch of ``rows`` placed ``k`` years back.
+    The walk compares a row with its successor in the same doc, both in
+    the successor's year; only the leap day makes that comparison depend
+    on the year, so the first pass (nothing moved) settles almost every
+    row, and each further pass re-checks the rows whose successor moved,
+    until no row changes. A row's count depends only on the rows after
+    it, so the fixed point is the walk's result.
+    """
+    head, tail = slice(None, -1), slice(1, None)
+    ends = np.flatnonzero(np.append(doc[head] != doc[tail], True))
+    last = np.repeat(ends, np.diff(ends, prepend=-1))  # last row of each row's doc
+    back = np.zeros(len(doc), dtype=np.int64)
+    while True:
+        k = back[tail]
+        jump = moved(head, k) - moved(tail, k) > _JUMP_NS  # row i vs row i + 1
+        after = np.append(np.cumsum(jump[::-1])[::-1], 0)  # jumps at or after each row
+        new = after - after[last]  # ... before its doc's last row
+        if np.array_equal(new, back):
+            return back
+        back = new
+
+
+def fix_years(msgs: pd.DataFrame, reference_year: int | None = None) -> pd.DataFrame:
+    """The rollover rule over a block of whole docs, rows in file order
+    (doc_id, msg_no). Only rows whose pattern lacks a year move.
+
+    Each row keeps its UTC month, day and time of day; its year is its
+    parsed one (or ``reference_year`` when given, for messages parsed at
+    another year) less the rollovers after it in its doc. A Feb 29 whose
+    new year is not a leap year keeps its parsed timestamp, and the walk
+    compares it as Mar 1.
+    """
+    no_year = msgs["pattern_id"].isin(NOYEAR_PATTERN_IDS).to_numpy()
+    if not no_year.any():
+        return msgs
+    ts = msgs["ts"]
+    t_all = ts.to_numpy("datetime64[ns]").view(np.int64).copy()
+    t = t_all[no_year]
+    days = t // _DAY_NS
+    day64 = days.astype("datetime64[D]")
+    month64 = day64.astype("datetime64[M]")
+    year = day64.astype("datetime64[Y]").astype(np.int64) + 1970
+    month = month64.astype(np.int64) % 12 + 1
+    day = (day64 - month64).astype(np.int64) + 1
+    if reference_year is not None:
+        year = np.full_like(year, reference_year)
+
+    def moved(rows, k):
+        return t[rows] + (_civil_to_epoch_days(year[rows] - k, month[rows], day[rows]) - days[rows]) * _DAY_NS
+
+    back = _years_back(msgs["doc_id"].to_numpy()[no_year], moved)
+    new_year = year - back
+    common = (new_year % 4 != 0) | ((new_year % 100 == 0) & (new_year % 400 != 0))
+    t_all[no_year] = np.where((month == 2) & (day == 29) & common, t, moved(slice(None), back))
+    out = msgs.copy()
+    out["ts"] = pd.Series(t_all.view("datetime64[ns]"), index=msgs.index).dt.tz_localize(ts.dt.tz)
+    return out
 
 
 def infer_years(messages: DataFrame, reference_year: int, num_partitions: int | None = None) -> DataFrame:
-    """messages DF → messages DF with no-year timestamps year-corrected.
-
-    One shuffle on doc_id (skipped rows pass through untouched). Cheap
-    pre-split: docs with no no-year rows bypass the Python stage entirely
-    via an anti/semi split, so the UDF only sees affected docs.
-    """
+    """Loose messages DF → messages DF with no-year timestamps
+    year-corrected. One shuffle on doc_id puts each doc's messages in one
+    partition in msg_no order; ``fix_years`` runs on blocks of whole docs.
+    Doc-grained input needs none of this: ``parse_messages_fused`` applies
+    the rule inside its own stage."""
     n = num_partitions or int(messages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    affected = messages.filter(F.col("pattern_id").isin(NOYEAR_PATTERN_IDS)).select("doc_id").distinct()
-    todo = messages.join(F.broadcast(affected), "doc_id", "left_semi")
-    passthrough = messages.join(F.broadcast(affected), "doc_id", "left_anti")
-
-    cols = messages.columns
-    schema = messages.schema
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None and len(pending):
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            last_doc = pdf["doc_id"].iloc[-1]
-            tail = (pdf["doc_id"] == last_doc).to_numpy()
-            cut = len(pdf) - int(tail[::-1].argmin() if not tail.all() else len(pdf))
-            pending = pdf.iloc[cut:].copy()
-            complete = pdf.iloc[:cut]
-            if len(complete):
-                yield _fix_block(complete)
-        if pending is not None and len(pending):
-            yield _fix_block(pending)
+        for block in whole_docs(batches):
+            yield fix_years(block, reference_year)
 
-    def _fix_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts = [fix_years_pdf(g.reset_index(drop=True), reference_year) for _, g in pdf.groupby("doc_id", sort=False)]
-        return pd.concat(parts, ignore_index=True)[cols]
-
-    fixed = (
-        todo.repartition(n, "doc_id")
+    return (
+        messages.repartition(n, "doc_id")
         .sortWithinPartitions("doc_id", "msg_no")
-        .mapInPandas(_gen, schema=schema)
+        .mapInPandas(_gen, schema=messages.schema)
     )
-    return fixed.unionByName(passthrough)

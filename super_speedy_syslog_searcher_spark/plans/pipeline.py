@@ -2,15 +2,17 @@
 
 The Spark lifecycle equivalent of ``s4 <PATHS> -a A -b B`` (SURVEY §3.3):
 
-    read docs table → explode lines (narrow) → two-pass DTPD parse (narrow
-    + one broadcast of pattern votes) → sessionize (shuffle #1: doc_id) →
-    year-fix (reuses doc_id partitioning) → filter ts BETWEEN a, b
-    (pushable) → broadcast-join enrichment → repartitionByRange(full sort
-    key) + sortWithinPartitions (shuffle #2) → fan-out write partitioned by
-    sink_key → summary aggregates.
+    read docs table → ONE narrow Python stage per Arrow batch
+    (``parse_messages_fused``: token split → two-pass DTPD parse with one
+    eager P9 pattern vote → sessionize → 25-hour year fix, all doc-local)
+    → filter ts BETWEEN a, b (pushable) → broadcast-join enrichment →
+    repartitionByRange(full sort key) + sortWithinPartitions → fan-out
+    write partitioned by sink_key → summary aggregates.
 
-Exactly two wide dependencies at scale (sessionize hash, merge range); the
-enrichment join is broadcast; everything else is narrow Arrow-batched work.
+There is no sessionize or year-fix shuffle: every doc is whole inside
+one batch. The wide dependencies are the merge's range exchange and the
+routed write; the enrichment join is broadcast, and the summary counters
+are small aggregates over the docs table and the persisted kernel output.
 
 Checkpoint/resume + lineage (north_rule): each run writes per-source
 manifest rows after its sinks commit; a resume run anti-joins the input
@@ -24,21 +26,19 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.codec import explode_lines
-from ..functions.parse import parse_lines
+from ..functions.parse import parse_lines, parse_messages_fused
 from ..operators.enrich import enrich
 from ..operators.filters import dt_between
 from ..operators.merge import global_sort, with_source_order
 from ..operators.route import route_write, sink_counts
-from ..operators.sessionize import sessionize
-from ..operators.summary import pattern_hit_miss, source_summary
-from ..operators.yearfix import infer_years
+from ..operators.summary import doc_pattern_hit_miss, doc_source_summary
 
 
 @dataclass
@@ -47,29 +47,15 @@ class PipelineConfig:
     reference_year: int | None = None  # seed year for no-year formats
     dt_a: datetime | None = None
     dt_b: datetime | None = None
-    lock_patterns: bool = True
     num_partitions: int | None = None
     sources_in_order: list[str] | None = None
-    extra: dict = field(default_factory=dict)
 
 
 def parse_stage(docs: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """docs → parsed lines (single fused Python stage, no shuffle)."""
-    from ..functions.parse import parse_docs_fused
-
-    return parse_docs_fused(
-        docs,
-        default_tz=cfg.default_tz,
-        reference_year=cfg.reference_year,
-        lock_patterns=cfg.lock_patterns,
-    )
-
-
-def messages_stage(parsed_lines: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    msgs = sessionize(parsed_lines, num_partitions=cfg.num_partitions)
-    if cfg.reference_year is not None:
-        msgs = infer_years(msgs, cfg.reference_year, num_partitions=cfg.num_partitions)
-    return dt_between(msgs, cfg.dt_a, cfg.dt_b)
+    """docs → parsed lines, one row per line: the line-grained lane that
+    ``operators.sessionize`` and ``operators.yearfix.infer_years``
+    continue. ``run_pipeline`` does not use it."""
+    return parse_lines(explode_lines(docs), default_tz=cfg.default_tz, reference_year=cfg.reference_year)
 
 
 def run_pipeline(
@@ -80,12 +66,17 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Full run. Returns the named intermediate/​output DataFrames; if
     ``out_dir`` is given, routed messages are fanned out to
-    ``out_dir/routed`` and summaries to ``out_dir/…``."""
+    ``out_dir/routed`` and summaries to ``out_dir/…``.
+
+    ``parsed_lines`` is the persisted kernel output: every message, before
+    the -a/-b window (its grain is messages, not lines — the kernel never
+    materializes lines). ``messages`` is the window over it. The caller
+    releases the cache with ``result["parsed_lines"].unpersist()``."""
     cfg = cfg or PipelineConfig()
-    # parsed/messages feed several sinks (routed write, sink counts,
-    # summary, pattern counts) — persist so the UDF stages run once
-    parsed = parse_stage(docs, cfg).persist()
-    messages = messages_stage(parsed, cfg).persist()
+    # the window, the summary and the pattern counts all read the kernel
+    # output — persist it so the Python stage runs once
+    parsed = parse_messages_fused(docs, default_tz=cfg.default_tz, reference_year=cfg.reference_year).persist()
+    messages = dt_between(parsed, cfg.dt_a, cfg.dt_b)
     enriched = enrich(messages, enrichment)
     enriched = with_source_order(enriched, cfg.sources_in_order)
     merged = global_sort(enriched, num_partitions=cfg.num_partitions, sources_in_order=cfg.sources_in_order)
@@ -95,8 +86,8 @@ def run_pipeline(
         "enriched": enriched,
         "merged": merged,
         "sink_counts": sink_counts(enriched),
-        "summary": source_summary(parsed, messages),
-        "pattern_counts": pattern_hit_miss(parsed),
+        "summary": doc_source_summary(docs, parsed, messages),
+        "pattern_counts": doc_pattern_hit_miss(docs, parsed),
     }
     if out_dir:
         route_write(merged.drop("source_order"), os.path.join(out_dir, "routed"))
@@ -162,12 +153,9 @@ def run_pipeline_resumable(
         F.array_distinct(F.collect_set("pattern_id")).alias("patterns_used"),
     )
     # per-DTPD hit/miss metrics (north_star: "parse hit/miss rates per
-    # DTPD pattern"): line-grained counts per pattern, bounded by
+    # DTPD pattern"): the run's line-grained counts per pattern, bounded by
     # |sources| × |DTPD table| rows — misses are the pattern_id = -1 lines
-    pat = result["parsed_lines"].groupBy("source", "pattern_id").agg(
-        F.count("*").alias("n")
-    )
-    pat_agg = pat.groupBy("source").agg(
+    pat_agg = result["pattern_counts"].groupBy("source").agg(
         F.map_from_entries(
             F.filter(
                 F.collect_list(F.struct("pattern_id", "n")),

@@ -1,7 +1,8 @@
 """Property-based tests for the token codec / batch splitter (pure
 functions — no Spark session): for ANY documents, splitting then
 rejoining with newlines reproduces the original text and token slices
-concatenate back to the original arrays (the token-array invariant)."""
+concatenate back to the original arrays (the token-array invariant).
+One Spark test checks the JVM line/char counts against the splitter."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from super_speedy_syslog_searcher_spark.functions.codec import (
     NEWLINE_TOKEN,
+    doc_line_stats,
     encode_text,
     split_docs_batch,
 )
@@ -74,3 +76,26 @@ def test_malformed_tokens_do_not_crash():
     assert list(pdf["line_no"]) == [0, 1]
     assert pdf["text"].iloc[0] == "Hi���"
     assert list(pdf["line_tokens"].iloc[0]) == [72, 105, -5, 0xD800, 0x7FFFFFFF]
+
+
+def test_doc_line_stats_match_split(spark):
+    """The JVM (lines, chars) of each doc equal the row count and summed
+    text length of ``split_docs_batch``'s lines, on random token arrays
+    and the edges: empty doc, trailing newline, "\\n\\n", and negative,
+    surrogate and astral tokens."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(3)
+    pool = np.array([NEWLINE_TOKEN] * 6 + [65, 97, 32, 0xE9, 0x1F600, 0x10FFFF, 0xD800, 0xDFFF, -1, -70000, 0x7FFFFFFF])
+    docs = [[], [NEWLINE_TOKEN], [NEWLINE_TOKEN, NEWLINE_TOKEN], [65, NEWLINE_TOKEN], [NEWLINE_TOKEN, 65], [-5, 0xD800, 0x1F600]]
+    docs += [rng.choice(pool, size=rng.integers(0, 30)).tolist() for _ in range(1000)]
+    ids = np.array([f"d{i}" for i in range(len(docs))], dtype=object)
+    lines = split_docs_batch(ids, np.array(["s"] * len(docs), dtype=object), [np.array(d, dtype=np.int32) for d in docs])
+    lines["chars"] = lines["text"].str.len()
+    per_doc = lines.groupby("doc_id").agg(n=("chars", "size"), chars=("chars", "sum"))
+    want = {i: (int(per_doc.loc[i, "n"]), int(per_doc.loc[i, "chars"])) if i in per_doc.index else (0, 0) for i in ids}
+
+    n_lines, n_chars = doc_line_stats(F.col("tokens"))
+    df = spark.createDataFrame(list(zip(ids.tolist(), docs)), "doc_id string, tokens array<int>")
+    got = {r["doc_id"]: (r["n"], r["c"]) for r in df.select("doc_id", n_lines.alias("n"), n_chars.alias("c")).collect()}
+    assert got == want

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -36,12 +37,17 @@ UTC = timezone.utc
 
 # ---------------------------------------------------------------- yearfix
 def test_year_rollover(spark):
-    from super_speedy_syslog_searcher_spark.plans.pipeline import PipelineConfig, parse_stage, messages_stage
+    from super_speedy_syslog_searcher_spark.plans.pipeline import PipelineConfig, run_pipeline
 
     docs_pd, golden = gen_year_rollover_doc()
     docs = spark.createDataFrame(docs_pd, schema="doc_id string, tokens array<int>, n_tok int, source string")
-    cfg = PipelineConfig(reference_year=REFERENCE_YEAR)
-    msgs = messages_stage(parse_stage(docs, cfg), cfg).toPandas().sort_values("msg_no")
+    lookup = spark.createDataFrame(
+        [("rollover.000", "kern", "info", "kern.info")],
+        "source string, facility string, severity string, sink_key string",
+    )
+    res = run_pipeline(docs, lookup, PipelineConfig(reference_year=REFERENCE_YEAR))
+    msgs = res["messages"].toPandas().sort_values("msg_no")
+    res["parsed_lines"].unpersist()
     got = list(msgs["ts"])
     exp = [t.to_pydatetime().replace(tzinfo=None) for t in pd.to_datetime(golden["ts_expect"])]
     assert [g.to_pydatetime() for g in pd.to_datetime(got)] == exp
@@ -49,21 +55,113 @@ def test_year_rollover(spark):
     assert got[0].year == REFERENCE_YEAR - 1 and got[-1].year == REFERENCE_YEAR
 
 
-def test_yearfix_pure():
-    from super_speedy_syslog_searcher_spark.operators.yearfix import fix_years_pdf
+def _walk(docs: list[list[tuple[datetime, bool]]], reference_year: int) -> list[datetime]:
+    """s4's process_missing_year, written as the sequential walk, one doc
+    at a time: go backwards from the last no-year row; a row more than
+    25 h after its successor, both placed in the current year, starts the
+    previous year. Rows with a year are skipped. A Feb 29 the new year
+    lacks is compared as Mar 1 and keeps its parsed timestamp."""
+    import calendar
+
+    def at(t: datetime, year: int) -> datetime:
+        return t.replace(year=year, day=1) + timedelta(days=t.day - 1)
+
+    out = []
+    for rows in docs:
+        fixed = [t for t, _ in rows]
+        year, successor = reference_year, None
+        for i in reversed(range(len(rows))):
+            t, no_year = rows[i]
+            if not no_year:
+                continue
+            cur = at(t, year)
+            if successor is not None and cur - successor > timedelta(hours=25):
+                year -= 1
+                cur = at(t, year)
+            successor = cur
+            if (t.month, t.day) != (2, 29) or calendar.isleap(year):
+                fixed[i] = cur
+        out.extend(fixed)
+    return out
+
+
+def _fix_years_frame(docs: list[list[tuple[datetime, bool]]]) -> pd.DataFrame:
     from super_speedy_syslog_searcher_spark.functions.parse import NOYEAR_PATTERN_IDS
 
-    pid = NOYEAR_PATTERN_IDS[0]
-    pdf = pd.DataFrame(
-        {
-            "ts": pd.to_datetime(
-                ["1972-12-31 23:59:59", "1972-01-01 00:00:30", "1972-06-15 12:00:00"], utc=True
-            ),
-            "pattern_id": [pid, pid, pid],
-        }
-    )
-    out = fix_years_pdf(pdf, 2024)
-    assert list(out["ts"].dt.year) == [2023, 2024, 2024]
+    with_year = next(p for p in range(100) if p not in NOYEAR_PATTERN_IDS)
+    rows = [
+        (f"d{i}", m, t, NOYEAR_PATTERN_IDS[0] if no_year else with_year)
+        for i, doc in enumerate(docs)
+        for m, (t, no_year) in enumerate(doc, start=1)
+    ]
+    pdf = pd.DataFrame(rows, columns=["doc_id", "msg_no", "ts", "pattern_id"])
+    pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True)
+    return pdf
+
+
+def test_yearfix_pure():
+    """The batch rule equals the sequential walk on several rollovers in
+    one doc, a leap-day gap whose verdict depends on the current year,
+    Feb 29 moved into a common year, year rows mixed with no-year rows,
+    and docs that end and start across a year boundary."""
+    from super_speedy_syslog_searcher_spark.operators.yearfix import fix_years
+
+    def d(month, day, hour=0, minute=0, us=0, year=2024):
+        return datetime(year, month, day, hour, minute, 0, us, tzinfo=UTC)
+
+    docs = [
+        # three rollovers: Dec→Jan twice and a far jump back to June
+        [(d(11, 30), True), (d(12, 31, 23), True), (d(1, 2), True), (d(6, 1), True),
+         (d(12, 30, us=7), True), (d(1, 1, 0, 30), True), (d(3, 3), True), (d(1, 5), True)],
+        # Mar 1 01:00 → Feb 28 23:30 is 25.5 h back in a leap year, 1.5 h
+        # in a common one: no rollover once Jan moves the walk into 2023
+        [(d(3, 1, 1), True), (d(2, 28, 23, 30), True), (d(12, 31, 12), True), (d(1, 1), True)],
+        # Feb 29 lands in 2022 and keeps its parsed 2024 timestamp
+        [(d(2, 29, 2), True), (d(2, 28), True), (d(12, 31, 23), True), (d(1, 1, 1), True)],
+        # year rows pass through and never break the no-year sequence
+        [(d(12, 30), True), (d(5, 5, year=2021), False), (d(1, 2), True),
+         (d(1, 1, year=2030), False), (d(1, 3), True)],
+        # a doc ending Dec 31 followed by one starting Jan 1: no rollover
+        [(d(12, 31), True), (d(6, 1, year=2019), False)],
+        [(d(1, 1), True)],
+    ]
+    pdf = _fix_years_frame(docs)
+    out = fix_years(pdf)
+    want = _walk(docs, 2024)
+    assert [t.to_pydatetime() for t in out["ts"]] == want
+    assert list(out["ts"].dt.year) == [
+        2021, 2021, 2022, 2022, 2022, 2023, 2023, 2024,
+        2023, 2023, 2023, 2024,
+        2024, 2023, 2023, 2024,
+        2023, 2021, 2024, 2030, 2024,
+        2024, 2019,
+        2024,
+    ]
+    # the input frame is left as it was
+    assert list(pdf["ts"].dt.year).count(2024) == 21
+
+
+@pytest.mark.parametrize("reference_year", [2023, 2024])
+def test_yearfix_random_docs_match_walk(reference_year):
+    """Random docs of random dates in random order — rollovers, leap
+    days and year rows everywhere — against the sequential walk."""
+    import calendar
+
+    from super_speedy_syslog_searcher_spark.operators.yearfix import fix_years
+
+    rng = np.random.default_rng(reference_year)
+    n_days = 366 if calendar.isleap(reference_year) else 365
+    docs = []
+    for _ in range(300):
+        doc = []
+        for _ in range(rng.integers(1, 10)):
+            day = datetime(reference_year, 1, 1, tzinfo=UTC) + timedelta(
+                days=int(rng.integers(0, n_days)), seconds=int(rng.integers(0, 86400))
+            )
+            doc.append((day, bool(rng.random() < 0.85)))
+        docs.append(doc)
+    out = fix_years(_fix_years_frame(docs))
+    assert [t.to_pydatetime() for t in out["ts"]] == _walk(docs, reference_year)
 
 
 # ---------------------------------------------------------------- filters
@@ -178,6 +276,17 @@ def test_checkpoint_resume(spark, tmp_path):
         assert sum(hits.values()) >= row["n_messages"] > 0, row["source"]
         assert set(hits) <= set(row["patterns_used"]), row["source"]
         assert row["n_lines_missed"] >= 0
+    # ... and they equal the line-grained counts over the parsed lines of
+    # the same docs
+    from super_speedy_syslog_searcher_spark.operators.summary import pattern_hit_miss
+    from super_speedy_syslog_searcher_spark.plans.pipeline import parse_stage
+
+    lines = pattern_hit_miss(parse_stage(docs, cfg)).toPandas()
+    for _, row in manifest.iterrows():
+        ref = lines[lines["source"] == row["source"]]
+        hit = ref["pattern_id"] >= 0
+        assert dict(row["pattern_hits"]) == dict(zip(ref["pattern_id"][hit], ref["n"][hit])), row["source"]
+        assert row["n_lines_missed"] == ref["n"][~hit].sum(), row["source"]
 
     # second run: everything already done → full skip
     m2 = run_pipeline_resumable(docs, lookup, cfg, out, ckpt, run_id="r2")

@@ -151,3 +151,60 @@ def test_sessionize_edge_shapes(spark):
     il = sorted(got["interleaved"], key=lambda r: r["msg_no"])
     assert [m["n_lines"] for m in il] == [2, 1]
     assert il[0]["text"].startswith("2024-01-05T10:00:00Z x")
+
+
+def test_doc_grained_counters_equal_line_grained(spark, corpus):
+    """run_pipeline's summary and pattern counts, made from the docs table
+    and the kernel's messages, are row- and schema-identical to the
+    line-grained counters over the parsed lines of the same docs — with
+    nodt sources, leading continuation lines, an -a/-b window, and a doc
+    without tokens, which adds no row."""
+    from super_speedy_syslog_searcher_spark.functions.parse import parse_messages_fused
+    from super_speedy_syslog_searcher_spark.operators.filters import dt_between
+    from super_speedy_syslog_searcher_spark.operators.summary import (
+        doc_pattern_hit_miss,
+        doc_source_summary,
+        pattern_hit_miss,
+        source_summary,
+    )
+    from super_speedy_syslog_searcher_spark.plans.pipeline import parse_stage
+
+    docs_pd, _, golden = corpus
+    empty = pd.DataFrame([{"doc_id": "empty.000/000000", "tokens": [], "n_tok": 0, "source": "empty.000"}])
+    docs = spark.createDataFrame(pd.concat([docs_pd, empty], ignore_index=True), schema=DOCS_SCHEMA)
+    lines = parse_stage(docs, PipelineConfig(reference_year=REFERENCE_YEAR)).persist()
+    parsed = parse_messages_fused(docs, reference_year=REFERENCE_YEAR).persist()
+    ts = golden["ts_expect"].sort_values()
+    messages = dt_between(parsed, ts.iloc[len(ts) // 3].to_pydatetime(), ts.iloc[2 * len(ts) // 3].to_pydatetime())
+    try:
+        for got, want in (
+            (doc_source_summary(docs, parsed, messages), source_summary(lines, messages)),
+            (doc_pattern_hit_miss(docs, parsed), pattern_hit_miss(lines)),
+        ):
+            assert got.dtypes == want.dtypes
+            got_rows, want_rows = [tuple(r) for r in got.collect()], [tuple(r) for r in want.collect()]
+            assert len(got_rows) == len(want_rows) and set(got_rows) == set(want_rows)
+            assert "empty.000" not in {r[0] for r in got_rows}
+            assert any(r[0] is not None and r[0].startswith("nodt.") for r in got_rows)
+    finally:
+        lines.unpersist()
+        parsed.unpersist()
+
+
+def test_messages_plan_has_no_exchange(spark, corpus):
+    """The windowed messages of run_pipeline come out of one narrow stage:
+    no Exchange anywhere in the executed plan, kernel included."""
+    docs_pd, enrich_pd, golden = corpus
+    docs = spark.createDataFrame(docs_pd, schema=DOCS_SCHEMA)
+    lookup = spark.createDataFrame(enrich_pd, schema=ENRICH_SCHEMA)
+    ts = golden["ts_expect"].sort_values()
+    cfg = PipelineConfig(
+        reference_year=REFERENCE_YEAR, dt_a=ts.iloc[len(ts) // 4].to_pydatetime(), dt_b=ts.iloc[-1].to_pydatetime()
+    )
+    res = run_pipeline(docs, lookup, cfg)
+    try:
+        assert res["messages"].count() > 0
+        plan = res["messages"]._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan and "Exchange" not in plan, plan
+    finally:
+        res["parsed_lines"].unpersist()
