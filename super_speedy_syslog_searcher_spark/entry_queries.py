@@ -33,6 +33,7 @@ from .operators.enrich import enrich
 from .operators.merge import global_sort, with_source_order
 from .operators.route import sink_counts
 from .operators.summary import doc_pattern_hit_miss, doc_source_summary
+from .session import local_df
 
 REFERENCE_YEAR = 2024  # events corpus is Jan 2024
 
@@ -296,7 +297,7 @@ def enrichment_df(spark: SparkSession) -> DataFrame:
     for i in range(8):
         fac, sev = FACILITIES[i % 6], SEVERITIES[i % 6]
         rows.append((f"ev{i}", fac, sev, f"{fac}.{SEV_CLASS[sev]}"))
-    return spark.createDataFrame(rows, "source string, facility string, severity string, sink_key string")
+    return local_df(spark, rows, "source string, facility string, severity string, sink_key string")
 
 
 # as-of enrichment cutover: mid-corpus (events span Jan 2024); each
@@ -315,9 +316,7 @@ def asof_dim_history(spark: SparkSession) -> DataFrame:
             (f"ev{i}", ASOF_CUTOVER,
              FACILITIES[(i + 1) % 6], SEVERITIES[(i + 1) % 6])
         )
-    return spark.createDataFrame(
-        rows, "source string, valid_from timestamp, facility string, severity string"
-    )
+    return local_df(spark, rows, "source string, valid_from timestamp, facility string, severity string")
 
 
 def _interval_dim(spark: SparkSession) -> DataFrame:
@@ -335,9 +334,7 @@ def _interval_dim(spark: SparkSession) -> DataFrame:
             (f"ev{i}", datetime(2024, 1, 10, tzinfo=timezone.utc),
              datetime(2024, 1, 22, tzinfo=timezone.utc), "win.late")
         )
-    return spark.createDataFrame(
-        rows, "source string, valid_from timestamp, valid_to timestamp, label string"
-    )
+    return local_df(spark, rows, "source string, valid_from timestamp, valid_to timestamp, label string")
 
 
 def _cidr_dim(spark: SparkSession) -> DataFrame:
@@ -346,7 +343,8 @@ def _cidr_dim(spark: SparkSession) -> DataFrame:
     attribute: it canonicalizes to the same network, and the keeper
     election takes min(struct(cidr, attrs)) = net.narrow — pinning
     canonicalization + deterministic election under the hash gate."""
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [
             ("10.0.0.0/8", "net.wide"),
             ("10.1.0.0/16", "net.mid"),

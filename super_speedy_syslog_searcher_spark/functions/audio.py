@@ -147,14 +147,15 @@ def encode_wav(samples: np.ndarray, sample_rate: int, bits: int = 16) -> bytes:
 def resample_linear(x: np.ndarray, sr_from: int, sr_to: int) -> np.ndarray:
     """Linear-interpolation resample per channel (the deterministic
     baseline resampler; production would swap a polyphase kernel).
-    Output length = round(n * sr_to / sr_from); identical rates return
-    the input unchanged. Output times sample the input at
-    ``t_out * sr_from / sr_to`` — endpoint-clamped ``np.interp``."""
-    if sr_from == sr_to:
-        return np.asarray(x, dtype=np.float64)
+    Output is always a float64 ``(frames, channels)`` array (1-D input is
+    one channel) of length round(n * sr_to / sr_from); identical rates
+    return the input samples as that array. Output times sample the input
+    at ``t_out * sr_from / sr_to`` — endpoint-clamped ``np.interp``."""
     x = np.asarray(x, dtype=np.float64)
     if x.ndim == 1:
         x = x[:, None]
+    if sr_from == sr_to:
+        return x
     n = x.shape[0]
     m = int(round(n * sr_to / sr_from))
     if n == 0 or m == 0:

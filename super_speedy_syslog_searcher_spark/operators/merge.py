@@ -18,7 +18,8 @@ globally ordered. An optional additional salt stage handles the
 pathological single-(ts,source,doc) hot key.
 
 ``source_order`` reproduces the argument-order tie-break: a dense index
-assigned from the job's input-source list (broadcast-joined).
+assigned from the job's input-source list, looked up in a literal map in
+the same codegen'd projection (no join, no broadcast build).
 """
 
 from __future__ import annotations
@@ -30,24 +31,25 @@ SORT_KEYS = ["ts", "ts_ns", "source_order", "doc_id", "msg_no"]
 
 
 def with_source_order(df: DataFrame, sources_in_order: list[str] | None = None) -> DataFrame:
-    """Attach the dense ``source_order`` index (≙ PathId = argument order,
+    """Attach the ``source_order`` index (≙ PathId = argument order,
     s4.rs:2616). When no explicit list is given, sources sort
     lexicographically — deterministic, like the reference's sorted
-    directory walk (filepreprocessor.rs:1062)."""
+    directory walk (filepreprocessor.rs:1062). The index is the source's
+    first position in the list; a source not listed (or NULL) sorts last."""
     if "source_order" in df.columns:
         return df
     if sources_in_order is None:
         sources_in_order = [r[0] for r in df.select("source").distinct().orderBy("source").collect()]
     if not sources_in_order:  # empty input (e.g. fully filtered) — nothing to order
         return df.withColumn("source_order", F.lit(0))
-    spark = df.sparkSession
-    order_df = spark.createDataFrame(
-        [(s, i) for i, s in enumerate(sources_in_order)],
-        "source string, source_order int",
-    )
-    return df.join(F.broadcast(order_df), "source", "left").withColumn(
-        "source_order", F.coalesce(F.col("source_order"), F.lit(2**31 - 1))
-    )
+    order: dict[str, int] = {}
+    for i, s in enumerate(sources_in_order):
+        if s is not None:  # a map key cannot be NULL; NULL sources sort last
+            order.setdefault(s, i)
+    index = F.lit(None)
+    if order:
+        index = F.create_map(*[F.lit(x) for kv in order.items() for x in kv])[F.col("source")]
+    return df.withColumn("source_order", F.coalesce(index, F.lit(2**31 - 1)))
 
 
 def global_sort(
@@ -60,11 +62,17 @@ def global_sort(
     Output partitions are range-ordered, so a partition-order scan (collect,
     toLocalIterator, or a coalesced write) yields the exact merged stream —
     no single-node sort ever materializes the whole data.
+
+    With ``num_partitions=None`` the range exchange targets
+    ``spark.sql.shuffle.partitions`` and AQE may merge adjacent ranges
+    (which keeps the global order), so a small input costs few tasks,
+    routed files and drain jobs. An explicit count is kept exactly.
     """
-    n = num_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     df = with_source_order(df, sources_in_order)
     keys = [F.col(k).asc_nulls_last() for k in SORT_KEYS]
-    return df.repartitionByRange(n, *keys).sortWithinPartitions(*keys)
+    if num_partitions:
+        return df.repartitionByRange(num_partitions, *keys).sortWithinPartitions(*keys)
+    return df.repartitionByRange(*keys).sortWithinPartitions(*keys)
 
 
 def with_global_rank(

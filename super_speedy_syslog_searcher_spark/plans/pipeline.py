@@ -6,7 +6,8 @@ The Spark lifecycle equivalent of ``s4 <PATHS> -a A -b B`` (SURVEY §3.3):
     (``parse_messages_fused``: token split → two-pass DTPD parse with one
     eager P9 pattern vote → sessionize → 25-hour year fix, all doc-local)
     → filter ts BETWEEN a, b (pushable) → broadcast-join enrichment →
-    repartitionByRange(full sort key) + sortWithinPartitions → fan-out
+    source-order map lookup → repartitionByRange(full sort key) +
+    sortWithinPartitions → fan-out
     write partitioned by sink_key → summary aggregates.
 
 There is no sessionize or year-fix shuffle: every doc is whole inside
@@ -47,6 +48,9 @@ class PipelineConfig:
     reference_year: int | None = None  # seed year for no-year formats
     dt_a: datetime | None = None
     dt_b: datetime | None = None
+    # merge range partitions: None targets spark.sql.shuffle.partitions and
+    # lets AQE merge adjacent ranges on small inputs (fewer tasks, routed
+    # files and drain jobs; the order holds); an int is kept exactly
     num_partitions: int | None = None
     sources_in_order: list[str] | None = None
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -79,3 +79,27 @@ def warm_python_workers(spark: SparkSession, tasks: int | None = None) -> None:
     _warm.__annotations__ = {"s": pandas.Series, "return": pandas.Series}
     warm_udf = F.pandas_udf(_warm, "int")
     spark.range(0, n, 1, n).select(warm_udf(F.col("id").cast("int"))).count()
+
+
+def local_df(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small driver-side table as a ``LocalRelation`` with exactly the
+    ``ddl`` schema. ``spark.createDataFrame(list)`` builds a Python RDD, so
+    every job over it (a broadcast build included) starts Python workers;
+    an Arrow table is shipped to the JVM once and scans as a
+    ``LocalTableScan``. Naive datetimes are read as local wall-clock time,
+    as ``createDataFrame(list)`` and ``Row`` timestamps do."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, TimestampType
+
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = [list(c) for c in zip(*rows)] if rows else [[] for _ in schema.fields]
+    for field, values in zip(schema.fields, columns):
+        if isinstance(field.dataType, TimestampType):
+            values[:] = [v.astimezone() if v is not None and v.tzinfo is None else v for v in values]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(columns, arrow_schema.types)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ..functions.parse import parse_messages_fused
 from ..operators.enrich import enrich
 from ..operators.route import route_write
+from ..session import local_df
 
 DOCS_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -173,9 +174,7 @@ def late_rows_metric(messages: DataFrame, watermark: str = WATERMARK) -> DataFra
             cur_src, run = r["source"], None
         prefix.append((r["_pid"], r["source"], run))
         run = r["mx"] if run is None or (r["mx"] is not None and r["mx"] > run) else run
-    pre_df = spark.createDataFrame(
-        prefix, "_pid int, source string, _base timestamp"
-    )
+    pre_df = local_df(spark, prefix, "_pid int, source string, _base timestamp")
     w = (
         Window.partitionBy("_pid", "source")
         .orderBy(F.col("_arr").asc_nulls_first(), "doc_id", "msg_no")

@@ -121,7 +121,18 @@ class TestResample:
     def test_identity_rate_returns_input(self):
         x = _sine(100, 8000, 0.1)
         out = resample_linear(x, 8000, 8000)
-        np.testing.assert_array_equal(out, x)
+        np.testing.assert_array_equal(out[:, 0], x)
+
+    def test_identity_rate_has_resampled_shape(self):
+        """Equal rates give the same 2-D float64 (n, channels) array the
+        resampling path gives, for 1-D and integer input alike."""
+        x = np.arange(800, dtype=np.int16)
+        same, up = resample_linear(x, 8000, 8000), resample_linear(x, 8000, 16000)
+        assert same.shape == (800, 1) and up.shape == (1600, 1)
+        assert same.dtype == up.dtype == np.float64
+        np.testing.assert_array_equal(same[:, 0], x)
+        stereo = np.stack([x, -x], axis=1)
+        assert resample_linear(stereo, 8000, 8000).shape == (800, 2)
 
     def test_output_length_scales(self):
         x = np.zeros(1000)

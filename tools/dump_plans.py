@@ -79,7 +79,11 @@ def main() -> None:
             "One range exchange over the COMPOSITE key (ts, ts_ns, "
             "source_order, doc_id, msg_no) — equal-ts rows spread across "
             "partitions by the tie-break columns (skew salting), then an "
-            "in-partition sort; no single-node sort ever sees all rows.",
+            "in-partition sort; no single-node sort ever sees all rows. "
+            "source_order is a literal-map lookup in the codegen'd Project "
+            "under the exchange: no order broadcast, no join. With no "
+            "explicit partition count the range exchange is "
+            "AQE-coalescable (adjacent ranges merge, the order holds).",
         ),
         (
             "MinHash LSH candidate pairs (bucket join, no cross product)",
