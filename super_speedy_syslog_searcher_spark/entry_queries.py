@@ -1193,7 +1193,7 @@ def q_pipe_tz_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("tokens", encode_text_udf("text"))
         .select("doc_id", "tokens", F.size("tokens").alias("n_tok"), "source")
     )
-    msgs = parse_messages_fused(docs, reference_year=REFERENCE_YEAR, lock_patterns=False)
+    msgs = parse_messages_fused(docs, reference_year=REFERENCE_YEAR)
     return _with_event_id(msgs).select("event_id", "ts")
 
 

@@ -38,6 +38,7 @@ import numpy as np
 __all__ = [
     "AudioFormatError",
     "decode_wav",
+    "decode_wav_pcm16",
     "encode_wav",
     "resample_linear",
     "band_energies",
@@ -63,6 +64,18 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     values stay at their native magnitude so ``encode_wav`` round-trips
     bit-exactly), IEEE float as ``float64``.
     """
+    return _decode_wav(payload)[:2]
+
+
+def decode_wav_pcm16(payload: bytes) -> tuple[np.ndarray, int]:
+    """``decode_wav`` rescaled to the 16-bit range ``encode_wav`` writes:
+    float ×32767, 8-bit <<8, 24-bit >>8, 32-bit >>16, 16-bit exact."""
+    x, sr, bits = _decode_wav(payload)
+    return (x * 32767 if x.dtype.kind == "f" else x << 8 if bits == 8 else x >> (bits - 16)), sr
+
+
+def _decode_wav(payload: bytes) -> tuple[np.ndarray, int, int]:
+    """``decode_wav`` plus the source bits per sample."""
     p = bytes(payload)
     _require(len(p) >= 12 and p[:4] == b"RIFF" and p[8:12] == b"WAVE", "not a RIFF/WAVE payload")
     i = 12
@@ -114,7 +127,7 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     else:
         raise AudioFormatError(f"unsupported format tag {fmt_tag}")
     n_frames = x.size // n_ch  # trailing partial frame dropped
-    return x[: n_frames * n_ch].reshape(n_frames, n_ch), int(sr)
+    return x[: n_frames * n_ch].reshape(n_frames, n_ch), int(sr), bits
 
 
 def encode_wav(samples: np.ndarray, sample_rate: int, bits: int = 16) -> bytes:

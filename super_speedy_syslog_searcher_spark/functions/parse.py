@@ -16,10 +16,14 @@ operations:
 * patterns compile ONCE per Python worker at module import
   (reference compiles lazily per OnceCell, datetime.rs:6213-6243);
 * **pattern lock-in** (P9, syslinereader.rs:1450,1528; DT_PATTERN_MAX=1
-  at :450) becomes a two-pass scheme: ``vote_patterns`` samples the first
-  K lines per doc, votes per source (ties → lowest table index,
-  datetime.rs:2517-2556) and the locked id is joined in as a column the
-  UDF tries first;
+  at :450) locks one pattern per doc, as s4 does per file, inside the
+  parse kernel (``parse_doc_lines``): the doc's first K lines vote with
+  the full table (ties → lowest table index, datetime.rs:2517-2556) and
+  its other lines try the locked pattern first — no vote job, and a
+  doc's timestamps depend on that doc alone. The line-grained
+  ``parse_lines`` keeps a per-source vote over a doc sample
+  (``vote_patterns``, one eager Spark job) whose map rides the UDF
+  closure;
 * conversion failure after a regex match (e.g. month 13) falls through to
   the next pattern, matching ``bytes_to_regex_to_datetime`` returning None.
 
@@ -38,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .patterns import DATETIME_PARSE_DATAS, DUMMY_YEAR, month_name_to_num, year2_to_year
+from .patterns import DATETIME_PARSE_DATAS, DUMMY_YEAR, month_name_to_num
 from .tzmap import offset_str_to_minutes, resolve_tz_abbrev
 
 _COMPILED = [re.compile(p.regex) for p in DATETIME_PARSE_DATAS]
@@ -49,11 +53,11 @@ PARSE_RESULT_FIELDS = "ts timestamp, ts_ns int, dt_beg int, dt_end int, pattern_
 # cheap prefilter, usable both Spark-side (rlike) and pandas-side
 EZCHECK_RE = r"\d\d"
 
-# P9 vote sample: the first lines of every VOTE_DOC_SAMPLE_MOD-th doc (by
-# doc_id hash), at most VOTE_DOC_LIMIT docs on the doc-grained path
+# P9: a doc's first VOTE_LINES_PER_DOC lines elect its pattern; the
+# line-grained vote samples those lines of every VOTE_DOC_SAMPLE_MOD-th
+# doc (by doc_id hash)
 VOTE_LINES_PER_DOC = 8
 VOTE_DOC_SAMPLE_MOD = 20
-VOTE_DOC_LIMIT = 2048
 
 
 def _frac_to_ns(col: list) -> np.ndarray:
@@ -205,6 +209,99 @@ def _convert_matches(
     return utc_ns, (ns % 1000).astype(np.int16), ok
 
 
+class _BatchParse:
+    """One batch of lines under parse: the output columns, the ezcheck
+    mask, and the prefilter masks that every pass over the batch shares."""
+
+    def __init__(self, text: pd.Series, default_tz_minutes: int, reference_year: int | None):
+        n = len(text)
+        self.text = text.fillna("").reset_index(drop=True)
+        self.tz_min = default_tz_minutes
+        self.reference_year = reference_year
+        self.utc_ns, self.ok, self.ns_rem = np.zeros(n, "int64"), np.zeros(n, bool), np.zeros(n, "int16")
+        self.beg, self.end, self.pid = (np.full(n, -1, dtype="int32") for _ in range(3))
+        # ezcheck: two consecutive digits required by every pattern
+        self.candidate = self.text.str.contains(EZCHECK_RE, na=False).to_numpy(bool) if n else self.ok.copy()
+        # shared prefilter masks: several entries reuse the same prefilter
+        # (all 7 weekday-led families share one, the 4 dnf families another),
+        # so each is checked at most ONCE per row per batch (11 regex scans
+        # become 2 on the all-miss path), and only on rows that reach it.
+        # Masks are over the UNSLICED text — a correct over-approximation
+        # of the per-pattern sliced check.
+        self._masks: dict[tuple[str, bool, bool], tuple[np.ndarray, np.ndarray]] = {}
+
+    def _prefilter(self, pat, row_mask: np.ndarray) -> np.ndarray:
+        key = (pat.prefilter, pat.prefilter_regex, pat.prefilter_lower)
+        known, hit = self._masks.setdefault(key, (np.zeros(len(self.ok), bool), np.zeros(len(self.ok), bool)))
+        idx = np.flatnonzero(row_mask & ~known)
+        if len(idx):
+            hay = self.text.iloc[idx]
+            hay = hay.str.lower() if pat.prefilter_lower else hay
+            hit[idx] = hay.str.contains(pat.prefilter, regex=pat.prefilter_regex, na=False).to_numpy()
+            known[idx] = True
+        return row_mask & hit
+
+    def try_pattern(self, pid: int, row_mask: np.ndarray, use_prefilter: bool = True) -> None:
+        """Match pattern ``pid`` on ``row_mask``; the rows it parses take its result."""
+        pat = DATETIME_PARSE_DATAS[pid]
+        rx = _COMPILED[pid]
+        if use_prefilter and pat.prefilter is not None and row_mask.sum() > 32:
+            # ezcheck-style cheap rejection before the full regex
+            row_mask = self._prefilter(pat, row_mask)
+        idx = np.flatnonzero(row_mask)
+        if len(idx) == 0:
+            return
+        series = self.text.iloc[idx]
+        if pat.slice_lo or pat.slice_hi < 4096:
+            series = series.str.slice(pat.slice_lo, pat.slice_hi)
+        search = rx.search
+        matches = [search(s) for s in series.tolist()]
+        hit_rows = [i for i, m in zip(idx, matches) if m is not None]
+        hit_matches = [m for m in matches if m is not None]
+        if not hit_rows:
+            return
+        utc_ns, ns_rem, ok = _convert_matches(hit_matches, pat, self.tz_min, self.reference_year)
+        good = np.asarray(hit_rows)[ok]
+        if len(good) == 0:
+            return
+        self.utc_ns[good] = utc_ns[ok]
+        self.ns_rem[good] = ns_rem[ok]
+        self.pid[good] = pid
+        spans = np.array(
+            [(m.start("dt") + pat.slice_lo, m.end("dt") + pat.slice_lo) for m, o in zip(hit_matches, ok) if o],
+            dtype="int32",
+        )
+        self.beg[good] = spans[:, 0]
+        self.end[good] = spans[:, 1]
+        self.ok[good] = True
+
+    def try_locked(self, locked: np.ndarray, row_mask: np.ndarray) -> None:
+        """Try each row's locked pattern id (−1: none) on it alone."""
+        for pid in np.unique(locked[row_mask]):
+            if 0 <= pid < len(DATETIME_PARSE_DATAS):
+                # locked rows almost always match their pattern — the
+                # prefilter scan would be pure overhead on the hot path
+                self.try_pattern(int(pid), row_mask & (locked == pid), use_prefilter=False)
+
+    def full_table(self, row_mask: np.ndarray) -> None:
+        """Table-order dispatch of ``row_mask``'s unparsed rows: first match wins."""
+        for pid in range(len(DATETIME_PARSE_DATAS)):
+            remaining = row_mask & ~self.ok
+            if not remaining.any():
+                break
+            self.try_pattern(pid, remaining)
+
+    def frame(self) -> pd.DataFrame:
+        """The result columns, row-aligned with the input text."""
+        # Spark timestamps are µs: truncate; the sub-µs remainder is ts_ns
+        # (sort-fidelity tiebreaker, SURVEY §7.3)
+        trunc = np.where(self.ok, self.utc_ns - (self.utc_ns % 1000), np.iinfo(np.int64).min)  # min ≙ NaT
+        ts = pd.Series(trunc.view("datetime64[ns]")).dt.tz_localize("UTC")
+        return pd.DataFrame(
+            {"ts": ts, "ts_ns": self.ns_rem.astype("int32"), "dt_beg": self.beg, "dt_end": self.end, "pattern_id": self.pid}
+        )
+
+
 def parse_series(
     text: pd.Series,
     default_tz_minutes: int = 0,
@@ -217,118 +314,39 @@ def parse_series(
     Dispatch order = DTPD table order; a per-row ``locked`` pattern id
     (from P9 voting) is tried first for its rows.
     """
-    n = len(text)
-    out_ns = np.zeros(n, dtype="int64")
-    out_ok = np.zeros(n, dtype=bool)
-    out_nsr = np.zeros(n, dtype="int16")
-    out_beg = np.full(n, -1, dtype="int32")
-    out_end = np.full(n, -1, dtype="int32")
-    out_pid = np.full(n, -1, dtype="int32")
-
-    if n == 0:
-        return pd.DataFrame(
-            {
-                "ts": pd.Series([], dtype="datetime64[ns, UTC]"),
-                "ts_ns": pd.Series([], dtype="int32"),
-                "dt_beg": pd.Series([], dtype="int32"),
-                "dt_end": pd.Series([], dtype="int32"),
-                "pattern_id": pd.Series([], dtype="int32"),
-            }
-        )
-
-    text = text.fillna("").reset_index(drop=True)
-    # ezcheck: two consecutive digits required by every pattern
-    candidate = text.str.contains(EZCHECK_RE, regex=True, na=False).to_numpy()
-
-    # shared prefilter masks: several entries reuse the same prefilter
-    # (all 7 weekday-led families share one, the 4 dnf families another);
-    # computing each ONCE over the full text per batch turns 11 regex
-    # scans into 2 on the all-miss path. Masks are over the UNSLICED text
-    # — a correct over-approximation of the per-pattern sliced check.
-    _prefilter_masks: dict[tuple[str, bool, bool], np.ndarray] = {}
-    _lowered: list[pd.Series] = []  # lazy one-shot lowercase of the batch
-
-    def _prefilter_mask(pat) -> np.ndarray:
-        key = (pat.prefilter, pat.prefilter_regex, pat.prefilter_lower)
-        m = _prefilter_masks.get(key)
-        if m is None:
-            if pat.prefilter_lower:
-                if not _lowered:
-                    _lowered.append(text.str.lower())
-                hay = _lowered[0]
-            else:
-                hay = text
-            m = hay.str.contains(pat.prefilter, regex=pat.prefilter_regex, na=False).to_numpy()
-            _prefilter_masks[key] = m
-        return m
-
-    def _try_pattern(pid: int, row_mask: np.ndarray, use_prefilter: bool = True) -> None:
-        pat = DATETIME_PARSE_DATAS[pid]
-        rx = _COMPILED[pid]
-        if use_prefilter and pat.prefilter is not None and row_mask.sum() > 32:
-            # ezcheck-style cheap rejection before the full regex
-            row_mask = row_mask & _prefilter_mask(pat)
-        idx = np.flatnonzero(row_mask)
-        if len(idx) == 0:
-            return
-        series = text.iloc[idx]
-        if pat.slice_lo or pat.slice_hi < 4096:
-            series = series.str.slice(pat.slice_lo, pat.slice_hi)
-        sliced = series.tolist()
-        search = rx.search
-        matches = [search(s) for s in sliced]
-        hit_rows = [i for i, m in zip(idx, matches) if m is not None]
-        hit_matches = [m for m in matches if m is not None]
-        if not hit_rows:
-            return
-        utc_ns, ns_rem, ok = _convert_matches(hit_matches, pat, default_tz_minutes, reference_year)
-        good = np.asarray(hit_rows)[ok]
-        if len(good) == 0:
-            return
-        out_ns[good] = utc_ns[ok]
-        out_nsr[good] = ns_rem[ok]
-        out_pid[good] = pid
-        spans = np.array(
-            [(m.start("dt") + pat.slice_lo, m.end("dt") + pat.slice_lo) for m, o in zip(hit_matches, ok) if o],
-            dtype="int32",
-        )
-        out_beg[good] = spans[:, 0]
-        out_end[good] = spans[:, 1]
-        out_ok[good] = True
-
-    # pass 0: locked patterns first (P9 fast path)
+    b = _BatchParse(text, default_tz_minutes, reference_year)
     if locked is not None:
-        lk = locked.fillna(-1).astype("int64").to_numpy()
-        for pid in np.unique(lk):
-            if pid < 0 or pid >= len(DATETIME_PARSE_DATAS):
-                continue
-            # locked rows almost always match their pattern — the
-            # prefilter scan would be pure overhead on the hot path
-            _try_pattern(int(pid), candidate & ~out_ok & (lk == pid), use_prefilter=False)
+        b.try_locked(locked.fillna(-1).astype("int64").to_numpy(), b.candidate)
+    b.full_table(b.candidate)
+    return b.frame()
 
-    # full-table pass on leftovers
-    for pid in range(len(DATETIME_PARSE_DATAS)):
-        remaining = candidate & ~out_ok
-        if not remaining.any():
-            break
-        _try_pattern(pid, remaining)
 
-    # Spark timestamps are µs: truncate; the sub-µs remainder is ts_ns
-    # (sort-fidelity tiebreaker, SURVEY §7.3)
-    trunc = out_ns - (out_ns % 1000)
-    ts = pd.Series(
-        pd.DatetimeIndex(np.where(out_ok, trunc, np.int64(0)).view("datetime64[ns]")).tz_localize("UTC")
-    )
-    ts[~out_ok] = pd.NaT
-    return pd.DataFrame(
-        {
-            "ts": ts,
-            "ts_ns": pd.Series(out_nsr, dtype="int32"),
-            "dt_beg": pd.Series(out_beg, dtype="int32"),
-            "dt_end": pd.Series(out_end, dtype="int32"),
-            "pattern_id": pd.Series(out_pid, dtype="int32"),
-        }
-    )
+def parse_doc_lines(lines: pd.DataFrame, default_tz_minutes: int = 0, reference_year: int | None = None) -> pd.DataFrame:
+    """P9 per doc over whole docs' lines (``split_docs_batch`` output):
+    a doc's first VOTE_LINES_PER_DOC lines go through the full table and
+    elect its pattern (``_elect``); a head line the lock did not win is
+    re-tried with the lock alone, the other lines parse locked-first with
+    the full-table fallback — no line meets the full table twice. Returns
+    ``parse_series``' columns, row-aligned with ``lines``."""
+    b = _BatchParse(lines["text"], default_tz_minutes, reference_year)
+    line_no = lines["line_no"].to_numpy()
+    head = b.candidate & (line_no < VOTE_LINES_PER_DOC)
+    b.full_table(head)
+
+    doc = np.cumsum(line_no == 0) - 1
+    hit = head & b.ok
+    n_pat = len(DATETIME_PARSE_DATAS)
+    keys, counts = np.unique(doc[hit] * n_pat + b.pid[hit], return_counts=True)
+    elected = _elect(zip((keys // n_pat).tolist(), (keys % n_pat).tolist(), counts.tolist()))
+    lock = np.full(doc[-1] + 1 if len(doc) else 0, -1, dtype=np.int64)
+    lock[list(elected)] = list(elected.values())
+    locked = lock[doc]
+
+    b.try_locked(locked, hit & (b.pid != locked))
+    tail = b.candidate & ~head
+    b.try_locked(locked, tail)
+    b.full_table(tail)
+    return b.frame()
 
 
 def make_parse_udf(
@@ -387,77 +405,38 @@ def vote_patterns(lines: DataFrame, default_tz: str = "+00:00") -> dict[str, int
     return _elect([(r["source"], r["locked_pattern_id"], r["count"]) for r in counts])
 
 
-def _elect(counts: list[tuple[str, int, int]]) -> dict[str, int]:
-    """(source, pid, n) rows → {source: locked_pid}; most hits wins, ties
-    → lowest table index (datetime.rs:2517-2556)."""
-    best: dict[str, tuple[int, int]] = {}
-    for source, pid, n in counts:
-        cur = best.get(source)
+def _elect(counts) -> dict:
+    """(key, pid, n) rows → {key: locked_pid}, the key a source or a doc;
+    most hits wins, ties → lowest table index (datetime.rs:2517-2556)."""
+    best: dict = {}
+    for key, pid, n in counts:
+        cur = best.get(key)
         if cur is None or (n, -pid) > (cur[0], -cur[1]):
-            best[source] = (n, pid)
-    return {s: pid for s, (_, pid) in best.items()}
-
-
-def vote_patterns_fused(docs: DataFrame, default_tz: str = "+00:00") -> dict[str, int]:
-    """P9 vote with token-split + parse + partial count fused into ONE
-    mapInPandas stage (a separate explode stage would pay a second Arrow
-    round trip just to move the sampled lines between Python stages —
-    measured ~5 s of fixed cost per job at 6M docs, ~2.5 s fused).
-    Election semantics are those of ``vote_patterns``: full-table parse
-    on the sample, most hits per source wins, ties → lowest table index
-    (datetime.rs:2517-2556); the doc-hash sample cut and LIMIT
-    early-stop sit on the scan."""
-    from collections.abc import Iterator
-
-    from .codec import split_docs_batch
-
-    sample = (
-        docs.select("doc_id", "source", "tokens")
-        .filter(F.pmod(F.xxhash64("doc_id"), F.lit(VOTE_DOC_SAMPLE_MOD)) == 0)
-        .limit(VOTE_DOC_LIMIT)
-    )
-    tz_min = offset_str_to_minutes(default_tz)
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lines = split_docs_batch(pdf["doc_id"].to_numpy(), pdf["source"].to_numpy(), pdf["tokens"])
-            lines = lines[lines["line_no"] < VOTE_LINES_PER_DOC]
-            p = parse_series(lines["text"].reset_index(drop=True), default_tz_minutes=tz_min)
-            hits = pd.DataFrame({
-                "source": lines["source"].to_numpy(),
-                "pid": p["pattern_id"].to_numpy(),
-            })
-            agg = hits[hits["pid"] >= 0].groupby(["source", "pid"]).size().reset_index(name="cnt")
-            yield agg
-
-    counts = (
-        sample.mapInPandas(_gen, schema="source string, pid int, cnt long")
-        .groupBy("source", "pid")
-        .agg(F.sum("cnt").alias("cnt"))
-        .collect()  # ≤ sources × patterns rows
-    )
-    return _elect([(r["source"], r["pid"], r["cnt"]) for r in counts])
+            best[key] = (n, pid)
+    return {k: pid for k, (_, pid) in best.items()}
 
 
 def parse_messages_fused(
     docs: DataFrame,
     default_tz: str = "+00:00",
     reference_year: int | None = None,
-    lock_patterns: bool = True,
-    locked_map: dict[str, int] | None = None,
 ) -> DataFrame:
-    """Fully-fused docs → MESSAGES: token split + datetime parse +
-    sessionization + year inference in ONE mapInPandas stage, ZERO
-    shuffles.
+    """Fully-fused docs → MESSAGES: token split + datetime parse with the
+    P9 pattern locked per doc + sessionization + year inference in ONE
+    mapInPandas stage, ZERO shuffles, and no Spark job while the plan is
+    built.
 
     Valid because the input is doc-grained (input_hint): every doc's lines
-    are contiguous inside the stage by construction, so message grouping
-    and the per-doc year-rollover rule (``operators.yearfix.fix_years``,
-    applied when ``reference_year`` is set) are partition-local — the
-    Spark realization of the reference's single-thread-per-file pass
+    are contiguous inside the stage by construction, so the pattern
+    election (``parse_doc_lines``), message grouping and the per-doc
+    year-rollover rule (``operators.yearfix.fix_years``, applied when
+    ``reference_year`` is set) are partition-local — the Spark
+    realization of the reference's single-thread-per-file pass
     (find_line → find_datetime_in_line → sysline assembly, s4's
-    src/readers/syslinereader.rs:1976-2192) with no
-    cross-task coordination. The line-grained ``sessionize`` and
+    src/readers/syslinereader.rs:1976-2192) with no cross-task
+    coordination. A doc's messages depend on that doc alone, whatever
+    batch, resume subset or micro-batch it arrives in; the same call runs
+    on a streaming DataFrame. The line-grained ``sessionize`` and
     ``infer_years`` operators remain for inputs that arrive as loose lines.
     """
     from collections.abc import Iterator
@@ -466,17 +445,12 @@ def parse_messages_fused(
     from ..operators.yearfix import fix_years
     from .codec import split_docs_batch
 
-    if locked_map is None:
-        locked_map = vote_patterns_fused(docs, default_tz=default_tz) if lock_patterns else {}
     tz_min = offset_str_to_minutes(default_tz)
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             lines = split_docs_batch(pdf["doc_id"].to_numpy(), pdf["source"].to_numpy(), pdf["tokens"])
-            locked = lines["source"].map(locked_map) if locked_map else None
-            p = parse_series(
-                lines["text"], default_tz_minutes=tz_min, reference_year=reference_year, locked=locked
-            )
+            p = parse_doc_lines(lines, default_tz_minutes=tz_min, reference_year=reference_year)
             for c in ("ts", "ts_ns", "dt_beg", "dt_end", "pattern_id"):
                 lines[c] = p[c].to_numpy() if c != "ts" else p[c]
             msgs = _emit_messages(lines)

@@ -984,9 +984,10 @@ def fuzzy_key_clusters(
     candidate generation (distinct keys only — the corpus collapses to
     its key vocabulary first); the closure is
     ``connected_components``' O(log n) pointer jumping over NUMERIC
-    node ids (md5-derived 63-bit; a collision would need ~2^31 distinct
-    keys and is guarded by a loud countDistinct assertion, never a
-    silent merge). The min-numeric-id cluster root maps back to a key,
+    node ids (the first 15 hex digits of the md5, so 60-bit; by the
+    birthday bound a collision becomes likely near ~2^30 distinct keys,
+    and it is guarded by a loud countDistinct assertion, never a silent
+    merge). The min-numeric-id cluster root maps back to a key,
     and the emitted ``canon`` is the lexicographically smallest KEY of
     the cluster (min(string) per root — partial-aggregable).
     Symmetric/self pairs are pruned before the closure.

@@ -484,7 +484,8 @@ def resample_audio(
 ) -> DataFrame:
     """Audio resample stage — the waveform sibling of ``resize_images``
     (r5 session 3). RIFF/WAVE payloads get a REAL sample kernel
-    (``functions/audio.py``): pure-numpy PCM/float decode → per-channel
+    (``functions/audio.py``): pure-numpy PCM/float decode, rescaled to
+    the 16-bit range (float ×32767, 8/24/32-bit shifted) → per-channel
     linear-interpolation resample to ``target_sr`` → canonical 16-bit
     PCM re-encode. Payloads that aren't WAV, or WAV variants the
     pure-Python codec can't decode, are contained: ``ok=false``, NULL
@@ -500,7 +501,7 @@ def resample_audio(
     """
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.audio import decode_wav, encode_wav, resample_linear
+        from ..functions.audio import decode_wav_pcm16, encode_wav, resample_linear
 
         for pdf in batches:
             rows = {k: [] for k in (
@@ -511,7 +512,7 @@ def resample_audio(
                 p = bytes(payload) if payload is not None else b""
                 rows["media_id"].append(mid)
                 try:
-                    samples, sr = decode_wav(p)
+                    samples, sr = decode_wav_pcm16(p)
                 except Exception:
                     rows["ok"].append(False)
                     for k in ("kernel", "src_sr", "sample_rate", "src_frames",

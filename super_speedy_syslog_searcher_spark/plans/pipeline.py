@@ -3,8 +3,9 @@
 The Spark lifecycle equivalent of ``s4 <PATHS> -a A -b B`` (SURVEY §3.3):
 
     read docs table → ONE narrow Python stage per Arrow batch
-    (``parse_messages_fused``: token split → two-pass DTPD parse with one
-    eager P9 pattern vote → sessionize → 25-hour year fix, all doc-local)
+    (``parse_messages_fused``: token split → DTPD parse with the P9
+    pattern locked per doc → sessionize → 25-hour year fix, all
+    doc-local; building the plan runs no Spark job)
     → filter ts BETWEEN a, b (pushable) → broadcast-join enrichment →
     source-order map lookup → repartitionByRange(full sort key) +
     sortWithinPartitions → fan-out

@@ -32,6 +32,23 @@ def _sine16(freq: float, sr: int, secs: float) -> np.ndarray:
     return np.rint(_sine(freq, sr, secs) * 32767).astype(np.int32)
 
 
+def _wav(fmt_tag: int, bits: int, data: bytes, n_ch: int = 1, sr: int = 8000) -> bytes:
+    """A minimal hand-built RIFF/WAVE container of any depth."""
+    block = n_ch * bits // 8
+    fmt = (
+        b"fmt \x10\x00\x00\x00"
+        + fmt_tag.to_bytes(2, "little") + n_ch.to_bytes(2, "little")
+        + sr.to_bytes(4, "little") + (sr * block).to_bytes(4, "little")
+        + block.to_bytes(2, "little") + bits.to_bytes(2, "little")
+    )
+    body = b"WAVE" + fmt + b"data" + len(data).to_bytes(4, "little") + data
+    return b"RIFF" + len(body).to_bytes(4, "little") + body
+
+
+def _int24(x: np.ndarray) -> bytes:
+    return b"".join(int(v).to_bytes(3, "little", signed=True) for v in x)
+
+
 class TestWavCodec:
     def test_int16_roundtrip_bit_exact(self):
         rng = np.random.default_rng(7)
@@ -47,27 +64,15 @@ class TestWavCodec:
         np.testing.assert_array_equal(got[:, 0], x)
 
     def test_8_24_32_bit_and_float_depths(self):
-        # hand-build minimal containers per depth
-        def wav(fmt_tag: int, bits: int, data: bytes, n_ch: int = 1, sr: int = 8000) -> bytes:
-            block = n_ch * bits // 8
-            fmt = (
-                b"fmt \x10\x00\x00\x00"
-                + fmt_tag.to_bytes(2, "little") + n_ch.to_bytes(2, "little")
-                + sr.to_bytes(4, "little") + (sr * block).to_bytes(4, "little")
-                + block.to_bytes(2, "little") + bits.to_bytes(2, "little")
-            )
-            body = b"WAVE" + fmt + b"data" + len(data).to_bytes(4, "little") + data
-            return b"RIFF" + len(body).to_bytes(4, "little") + body
-
-        g8, _ = decode_wav(wav(1, 8, bytes([0, 128, 255])))
+        g8, _ = decode_wav(_wav(1, 8, bytes([0, 128, 255])))
         np.testing.assert_array_equal(g8[:, 0], [-128, 0, 127])
-        g24, _ = decode_wav(wav(1, 24, (1 << 23).to_bytes(3, "little") + (100).to_bytes(3, "little")))
+        g24, _ = decode_wav(_wav(1, 24, (1 << 23).to_bytes(3, "little") + (100).to_bytes(3, "little")))
         np.testing.assert_array_equal(g24[:, 0], [-(1 << 23), 100])
-        g32, _ = decode_wav(wav(1, 32, np.array([-5, 7], dtype="<i4").tobytes()))
+        g32, _ = decode_wav(_wav(1, 32, np.array([-5, 7], dtype="<i4").tobytes()))
         np.testing.assert_array_equal(g32[:, 0], [-5, 7])
-        gf, _ = decode_wav(wav(3, 32, np.array([0.25, -0.5], dtype="<f4").tobytes()))
+        gf, _ = decode_wav(_wav(3, 32, np.array([0.25, -0.5], dtype="<f4").tobytes()))
         np.testing.assert_allclose(gf[:, 0], [0.25, -0.5])
-        gd, _ = decode_wav(wav(3, 64, np.array([0.1], dtype="<f8").tobytes()))
+        gd, _ = decode_wav(_wav(3, 64, np.array([0.1], dtype="<f8").tobytes()))
         np.testing.assert_allclose(gd[:, 0], [0.1])
 
     def test_extensible_format_resolves_subformat(self):
@@ -204,6 +209,33 @@ class TestOperators:
         samples, sr = decode_wav(bytes(a["payload"]))
         assert sr == 16000 and samples.shape[0] == a["n_frames"]
         assert not got["junk"]["ok"] and got["junk"]["payload"] is None
+
+    @pytest.mark.parametrize(
+        "fmt_tag, bits, encode",
+        [
+            (3, 32, lambda x: x.astype("<f4").tobytes()),
+            (1, 24, lambda x: _int24(np.rint(x * ((1 << 23) - 1)))),
+            (1, 32, lambda x: np.rint(x * ((1 << 31) - 1)).astype("<i4").tobytes()),
+            (1, 8, lambda x: (np.rint(x * 127) + 128).astype(np.uint8).tobytes()),
+        ],
+        ids=["float32", "pcm24", "pcm32", "pcm8"],
+    )
+    def test_resample_audio_rescales_other_depths(self, spark, fmt_tag, bits, encode):
+        """A 0.5-amplitude sine in any source depth comes back as the same
+        16-bit waveform the 16-bit source gives: not zeros, not clipped."""
+        from super_speedy_syslog_searcher_spark.operators.multimodal import resample_audio
+
+        sine = _sine(440, 8000, 0.1)
+        rows = [("pcm16", bytearray(encode_wav(_sine16(440, 8000, 0.1), 8000))),
+                ("other", bytearray(_wav(fmt_tag, bits, encode(sine))))]
+        got = {r["media_id"]: r for r in resample_audio(self._media(spark, rows), 16000).collect()}
+        assert got["other"]["ok"]
+        want, _ = decode_wav(bytes(got["pcm16"]["payload"]))
+        out, sr = decode_wav(bytes(got["other"]["payload"]))
+        assert sr == 16000 and out.shape == want.shape
+        assert 16000 < np.abs(out).max() < 16500
+        # 8-bit keeps 8 bits of the sine: one source step is 256 at 16 bits
+        assert np.abs(out - want).max() <= (257 if bits == 8 else 2)
 
     def test_embed_features_samples_kernel(self, spark):
         from super_speedy_syslog_searcher_spark.operators.multimodal import embed_features

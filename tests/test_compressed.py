@@ -101,7 +101,7 @@ def test_compressed_docs_feed_the_parser(spark, tmp_path):
     docs = read_compressed_docs(spark, str(tmp_path)).filter("ok").select(
         "doc_id", "tokens", "n_tok", "source"
     )
-    msgs = parse_messages_fused(docs, lock_patterns=False).orderBy("msg_no").collect()
+    msgs = parse_messages_fused(docs).orderBy("msg_no").collect()
     assert len(msgs) == 2
     assert [str(m.ts) for m in msgs] == ["2023-06-01 10:00:00", "2023-06-01 10:00:01"]
 
@@ -176,8 +176,7 @@ def test_tar_and_tar_gz_end_to_end(spark, tmp_path):
     msgs = parse_messages_fused(
         read_compressed_docs(spark, str(tmp_path))
         .filter("ok")
-        .select("doc_id", "tokens", "n_tok", "source"),
-        lock_patterns=False,
+        .select("doc_id", "tokens", "n_tok", "source")
     ).collect()
     assert len(msgs) == 2 * 4  # two syslines per member doc
 

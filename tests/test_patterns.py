@@ -8,7 +8,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from super_speedy_syslog_searcher_spark.functions.parse import parse_series
+from super_speedy_syslog_searcher_spark.functions.parse import VOTE_LINES_PER_DOC, parse_doc_lines, parse_series
 from super_speedy_syslog_searcher_spark.functions.patterns import DATETIME_PARSE_DATAS
 from super_speedy_syslog_searcher_spark.functions.tzmap import offset_str_to_minutes, resolve_tz_abbrev
 
@@ -130,6 +130,27 @@ def test_locked_pattern_fast_path():
     res = parse_series(lines, locked=locked)
     assert pd.notna(res.iloc[0]["ts"]) and pd.notna(res.iloc[1]["ts"])
     assert res.iloc[1]["ts"] == pd.Timestamp("2022-10-08 22:26:35", tz="UTC")
+
+
+def test_doc_lock_elected_per_doc():
+    """parse_doc_lines locks the pattern most of a doc's head lines hit: a
+    head line another entry wins re-parses with the lock (s4's per-file
+    lock drops its -11:00), a lone doc of that line keeps its own winner,
+    and a tail line the lock misses falls back to the full table."""
+    tz_line = "(2000/01/01 00:00:02.1 -1100) smbd/oplock.c:1"
+    plain = [f"(2000/01/01 00:00:{s:02d}.1) smbd/oplock.c:2" for s in range(3, 3 + VOTE_LINES_PER_DOC)]
+    apache = '192.168.0.115 - - [08/Oct/2022:22:26:35 +0000] "GET / HTTP/1.1" 404 0'
+    docs = {"mixed": [tz_line, *plain, apache], "alone": [tz_line]}
+    lines = pd.DataFrame(
+        [(d, i, t) for d, texts in docs.items() for i, t in enumerate(texts)], columns=["doc_id", "line_no", "text"]
+    )
+    res = parse_doc_lines(lines)
+    got = list(zip(res["ts"].dt.strftime("%H:%M:%S.%f"), res["pattern_id"]))
+    n = len(docs["mixed"])
+    assert got[0] == ("00:00:02.100000", 2)
+    assert got[1 : n - 1] == [(f"00:00:{s:02d}.100000", 2) for s in range(3, 3 + VOTE_LINES_PER_DOC)]
+    assert res["ts"].iloc[n - 1] == pd.Timestamp("2022-10-08 22:26:35", tz="UTC")
+    assert got[n] == ("11:00:02.100000", 1)
 
 
 def test_tzmap_matches_reference_map():

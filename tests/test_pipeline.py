@@ -139,7 +139,7 @@ def test_sessionize_edge_shapes(spark):
     ).withColumn("tokens", encode_text_udf("text")).select(
         "doc_id", "tokens", F.size("tokens").alias("n_tok"), "source"
     )
-    msgs = parse_messages_fused(df, reference_year=2024, lock_patterns=False)
+    msgs = parse_messages_fused(df, reference_year=2024)
     got = {}
     for r in msgs.collect():
         got.setdefault(r["doc_id"], []).append(r)
@@ -206,5 +206,50 @@ def test_messages_plan_has_no_exchange(spark, corpus):
         assert res["messages"].count() > 0
         plan = res["messages"]._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" in plan and "Exchange" not in plan, plan
+    finally:
+        res["parsed_lines"].unpersist()
+
+
+def _text_docs(spark, rows):
+    """(doc_id, source, text) rows → a docs DataFrame (one token per char)."""
+    pdf = pd.DataFrame(
+        [(d, [ord(c) for c in t], len(t), s) for d, s, t in rows], columns=["doc_id", "tokens", "n_tok", "source"]
+    )
+    return spark.createDataFrame(pdf, schema=DOCS_SCHEMA)
+
+
+def test_doc_timestamps_depend_on_that_doc_alone(spark):
+    """The P9 pattern is locked per doc: a doc that only the first table
+    entry reads with its -11:00 offset keeps that instant and pattern
+    next to 400 tz-less docs of the same source, which elect a later
+    entry for themselves."""
+    from super_speedy_syslog_searcher_spark.functions.parse import parse_messages_fused
+
+    target = ("oplock", "smbd", "(2000/01/01 00:00:02.1 -1100) ../source3/smbd/oplock.c:1340(init_oplocks)")
+    companions = [
+        (f"c{i:03d}", "smbd", f"(2000/01/01 00:{i // 60:02d}:{i % 60:02d}.1) ../source3/smbd/oplock.c:{i}(x)")
+        for i in range(400)
+    ]
+    want = (datetime(2000, 1, 1, 11, 0, 2, 100000), 1)
+    for rows in ([target], [target, *companions]):
+        msgs = parse_messages_fused(_text_docs(spark, rows)).filter(F.col("doc_id") == "oplock")
+        assert [(r["ts"], r["pattern_id"]) for r in msgs.collect()] == [want], len(rows)
+
+
+def test_building_the_plan_starts_no_spark_job(spark, corpus):
+    """parse_messages_fused and run_pipeline without out_dir only plan:
+    no P9 vote job or any other Spark job starts until an action."""
+    from super_speedy_syslog_searcher_spark.functions.parse import parse_messages_fused
+
+    docs_pd, enrich_pd, _ = corpus
+    docs = spark.createDataFrame(docs_pd, schema=DOCS_SCHEMA)
+    lookup = spark.createDataFrame(enrich_pd, schema=ENRICH_SCHEMA)
+    cfg = PipelineConfig(reference_year=REFERENCE_YEAR, sources_in_order=sorted(enrich_pd["source"]))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    parse_messages_fused(docs, reference_year=REFERENCE_YEAR)
+    res = run_pipeline(docs, lookup, cfg)
+    try:
+        assert set(tracker.getJobIdsForGroup(None)) - before == set()
     finally:
         res["parsed_lines"].unpersist()

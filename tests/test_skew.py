@@ -127,7 +127,7 @@ def test_rejects_channels(spark):
         .withColumn("tokens", encode_text_udf("text"))
         .select("doc_id", "tokens", F.size("tokens").alias("n_tok"), "source")
     )
-    msgs = parse_messages_fused(docs, lock_patterns=False)
+    msgs = parse_messages_fused(docs)
     rej = {r["doc_id"]: r["error_kind"] for r in doc_rejects(msgs, docs).collect()}
     assert rej == {"bad1": ERR_NO_SYSLINES, "bad2": ERR_NO_SYSLINES}
 

@@ -666,13 +666,9 @@ def test_windowed_hdr_quantiles_stream_matches_batch(spark, corpus, stream_dirs)
         windowed_hdr_histogram,
     )
 
-    from super_speedy_syslog_searcher_spark.functions.parse import vote_patterns_fused
-
     _write_docs(spark, corpus, stream_dirs["input"])
-    # the P9 vote needs a bounded collect, which a streaming DF forbids —
-    # precompute it from the at-rest input (production: catalog history)
-    # and inject the SAME locked_map into both faces
-    locked = vote_patterns_fused(spark.read.parquet(stream_dirs["input"]))
+    # the kernel locks the P9 pattern per doc, so both faces parse every
+    # doc alike however the stream splits it into micro-batches
 
     def _with_size(msgs):
         return msgs.withColumn("msg_chars", F.length("text").cast("long"))
@@ -689,7 +685,7 @@ def test_windowed_hdr_quantiles_stream_matches_batch(spark, corpus, stream_dirs)
 
     stream_msgs = _with_size(
         parse_messages_fused(
-            read_docs_stream(spark, stream_dirs["input"]), reference_year=2023, locked_map=locked
+            read_docs_stream(spark, stream_dirs["input"]), reference_year=2023
         )
     )
     q = (
@@ -705,7 +701,7 @@ def test_windowed_hdr_quantiles_stream_matches_batch(spark, corpus, stream_dirs)
     # batch side: identical plan in batch mode
     batch_msgs = _with_size(
         parse_messages_fused(
-            spark.read.parquet(stream_dirs["input"]), reference_year=2023, locked_map=locked
+            spark.read.parquet(stream_dirs["input"]), reference_year=2023
         )
     )
     bhist = windowed_hdr_histogram(batch_msgs, window="1 hour", value_col="msg_chars")
