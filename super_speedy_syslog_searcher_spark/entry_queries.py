@@ -264,15 +264,15 @@ GROUP BY source
 
 def q_pipe_merge_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global merge-sort with stable tie-break (ts, ts_ns, source_order,
-    doc_id, msg_no); the global rank is materialized (scalable
+    source, doc_id, msg_no); the global rank is materialized (scalable
     offset-broadcast zipWithIndex, no single-partition window) so the
     driver's order-insensitive hash still verifies ORDER."""
     from .operators.merge import with_global_rank
 
-    # filter FIRST so the repeated jobs below (source-order collect, range
-    # sampling, partition-count collect) re-execute only the small
-    # in-range slice; at production scale the equivalent is ts-partition
-    # pruning before the sort
+    # filter FIRST so the repeated jobs below (range sampling,
+    # partition-count collect) re-execute only the small in-range slice;
+    # at production scale the equivalent is ts-partition pruning before
+    # the sort
     msgs = _persist(parsed_messages(spark, sf_dir).filter(F.dayofmonth("ts") == 5))
     merged = with_global_rank(global_sort(with_source_order(msgs)))
     return (

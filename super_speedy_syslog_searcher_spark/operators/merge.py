@@ -7,19 +7,22 @@ order (/root/reference/src/bin/s4.rs:3425-3456; README.md:442-443 documents
 the stability guarantee).
 
 Spark realization: ``repartitionByRange`` over the FULL sort key
-``(ts, ts_ns, source_order, doc_id, msg_no)`` followed by
+``(ts, ts_ns, source_order, source, doc_id, msg_no)`` followed by
 ``sortWithinPartitions`` on the same key. Including the tie-break columns
 in the range keys IS the explicit skew handling the north_rule demands: a
 hot timestamp value (millions of rows with the same ts — e.g. a retry
 storm from two dominant sources) would otherwise hash one range boundary
 onto one partition; with the composite key, rows with equal ts split
-across partitions by (source_order, doc_id, msg_no) while remaining
-globally ordered. An optional additional salt stage handles the
+across partitions by (source_order, source, doc_id, msg_no) while
+remaining globally ordered. An optional additional salt stage handles the
 pathological single-(ts,source,doc) hot key.
 
-``source_order`` reproduces the argument-order tie-break: a dense index
-assigned from the job's input-source list, looked up in a literal map in
-the same codegen'd projection (no join, no broadcast build).
+The argument-order tie-break is ``source_order`` then ``source``. With an
+explicit source list, ``source_order`` is the source's position in it, a
+literal-map lookup in the same codegen'd projection (no join, no broadcast
+build). With no list, ``source_order`` is one constant and the source name
+itself breaks the tie (lexicographic, like the reference's sorted directory
+walk), so building the plan starts no Spark job.
 """
 
 from __future__ import annotations
@@ -27,29 +30,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SORT_KEYS = ["ts", "ts_ns", "source_order", "doc_id", "msg_no"]
+SORT_KEYS = ["ts", "ts_ns", "source_order", "source", "doc_id", "msg_no"]
 
 
 def with_source_order(df: DataFrame, sources_in_order: list[str] | None = None) -> DataFrame:
     """Attach the ``source_order`` index (≙ PathId = argument order,
-    s4.rs:2616). When no explicit list is given, sources sort
-    lexicographically — deterministic, like the reference's sorted
-    directory walk (filepreprocessor.rs:1062). The index is the source's
-    first position in the list; a source not listed (or NULL) sorts last."""
+    s4.rs:2616); it runs no Spark job. The index is the source's first
+    position in ``sources_in_order``; a source not listed (or NULL) sorts
+    last, after the listed ones, and ``source`` then orders it by name.
+    With no list every row gets the same index, so sources sort by name
+    alone — deterministic, like the reference's sorted directory walk
+    (filepreprocessor.rs:1062), with NULL sources last."""
     if "source_order" in df.columns:
         return df
-    if sources_in_order is None:
-        sources_in_order = [r[0] for r in df.select("source").distinct().orderBy("source").collect()]
-    if not sources_in_order:  # empty input (e.g. fully filtered) — nothing to order
-        return df.withColumn("source_order", F.lit(0))
     order: dict[str, int] = {}
-    for i, s in enumerate(sources_in_order):
+    for i, s in enumerate(sources_in_order or []):
         if s is not None:  # a map key cannot be NULL; NULL sources sort last
             order.setdefault(s, i)
-    index = F.lit(None)
-    if order:
-        index = F.create_map(*[F.lit(x) for kv in order.items() for x in kv])[F.col("source")]
-    return df.withColumn("source_order", F.coalesce(index, F.lit(2**31 - 1)))
+    last = F.lit(2**31 - 1)
+    if not order:
+        return df.withColumn("source_order", last)
+    index = F.create_map(*[F.lit(x) for kv in order.items() for x in kv])[F.col("source")]
+    return df.withColumn("source_order", F.coalesce(index, last))
 
 
 def global_sort(
@@ -57,7 +59,10 @@ def global_sort(
     num_partitions: int | None = None,
     sources_in_order: list[str] | None = None,
 ) -> DataFrame:
-    """Globally order messages by (ts, ts_ns, source_order, doc_id, msg_no).
+    """Globally order messages by ``SORT_KEYS``: (ts, ts_ns, source_order,
+    source, doc_id, msg_no), NULLs last. With no ``sources_in_order`` the
+    source name is the tie-break after the timestamp, and building the
+    plan starts no Spark job.
 
     Output partitions are range-ordered, so a partition-order scan (collect,
     toLocalIterator, or a coalesced write) yields the exact merged stream —

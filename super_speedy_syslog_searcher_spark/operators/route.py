@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 
 def route_write(
     enriched: DataFrame,
@@ -132,7 +134,8 @@ def compact_sinks(
         fs_swap_dir(spark, pdir, tmp)
         after = len(partition_file_stats(spark, base, prefix=entry).get(entry, []))
         report.append((sink, len(files), after, nbytes))
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         report, "sink_key string, n_files_before int, n_files_after int, bytes long"
     )
 
@@ -202,7 +205,8 @@ def propagate_deletes(
         survivors.write.mode("overwrite").parquet(tmp)
         fs_swap_dir(spark, pdir, tmp)
         report.append((part, n, d, n - d, True))
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         report,
         f"{partition_col} string, rows_before long, rows_deleted long, "
         "rows_after long, rewritten boolean",
@@ -264,7 +268,8 @@ def optimize_sinks(
         fs_swap_dir(spark, pdir, tmp)
         after = len(partition_file_stats(spark, base, prefix=entry).get(entry, []))
         report.append((sink, len(files), after, nbytes, True))
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         report,
         "sink_key string, n_files_before int, n_files_after int, bytes long, rewritten boolean",
     )

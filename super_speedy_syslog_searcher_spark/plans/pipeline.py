@@ -7,9 +7,15 @@ The Spark lifecycle equivalent of ``s4 <PATHS> -a A -b B`` (SURVEY §3.3):
     pattern locked per doc → sessionize → 25-hour year fix, all
     doc-local; building the plan runs no Spark job)
     → filter ts BETWEEN a, b (pushable) → broadcast-join enrichment →
-    source-order map lookup → repartitionByRange(full sort key) +
+    source-order tie-break (no job) → repartitionByRange(full sort key) +
     sortWithinPartitions → fan-out
     write partitioned by sink_key → summary aggregates.
+
+With ``out_dir`` the routed write runs first: it is the first Spark job
+of the call, and the counter plans are built only after its commit, so
+readers of the routed sinks wait for nothing else. The three counter
+tables (``sink_counts``, ``summary``, ``pattern_counts``) are then
+written together, one thread each.
 
 There is no sessionize or year-fix shuffle: every doc is whole inside
 one batch. The wide dependencies are the merge's range exchange and the
@@ -31,6 +37,7 @@ import time
 from dataclasses import dataclass
 from datetime import datetime
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,6 +48,7 @@ from ..operators.filters import dt_between
 from ..operators.merge import global_sort, with_source_order
 from ..operators.route import route_write, sink_counts
 from ..operators.summary import doc_pattern_hit_miss, doc_source_summary
+from ..session import local_df
 
 
 @dataclass
@@ -82,24 +90,51 @@ def run_pipeline(
     # output — persist it so the Python stage runs once
     parsed = parse_messages_fused(docs, default_tz=cfg.default_tz, reference_year=cfg.reference_year).persist()
     messages = dt_between(parsed, cfg.dt_a, cfg.dt_b)
-    enriched = enrich(messages, enrichment)
-    enriched = with_source_order(enriched, cfg.sources_in_order)
-    merged = global_sort(enriched, num_partitions=cfg.num_partitions, sources_in_order=cfg.sources_in_order)
-    result = {
-        "parsed_lines": parsed,
-        "messages": messages,
-        "enriched": enriched,
-        "merged": merged,
-        "sink_counts": sink_counts(enriched),
-        "summary": doc_source_summary(docs, parsed, messages),
-        "pattern_counts": doc_pattern_hit_miss(docs, parsed),
-    }
-    if out_dir:
-        route_write(merged.drop("source_order"), os.path.join(out_dir, "routed"))
-        result["sink_counts"].write.mode("overwrite").parquet(os.path.join(out_dir, "sink_counts"))
-        result["summary"].write.mode("overwrite").parquet(os.path.join(out_dir, "summary"))
-        result["pattern_counts"].write.mode("overwrite").parquet(os.path.join(out_dir, "pattern_counts"))
+    enriched = with_source_order(enrich(messages, enrichment), cfg.sources_in_order)
+    merged = global_sort(enriched, num_partitions=cfg.num_partitions)
+    try:
+        if out_dir:
+            # the routed sinks are what readers wait for: nothing runs or
+            # is analysed ahead of their commit
+            route_write(merged.drop("source_order"), os.path.join(out_dir, "routed"))
+        result = {
+            "parsed_lines": parsed,
+            "messages": messages,
+            "enriched": enriched,
+            "merged": merged,
+            "sink_counts": sink_counts(enriched),
+            "summary": doc_source_summary(docs, parsed, messages),
+            "pattern_counts": doc_pattern_hit_miss(docs, parsed),
+        }
+        if out_dir:
+            _write_together({name: result[name] for name in ("sink_counts", "summary", "pattern_counts")}, out_dir)
+    except BaseException:
+        parsed.unpersist()  # the caller gets no result to release it from
+        raise
     return result
+
+
+def _write_together(tables: dict[str, DataFrame], out_dir: str) -> None:
+    """Write each table to ``out_dir/<name>``, all at once, one thread per
+    table. ``InheritableThread`` carries the caller's job group and local
+    properties into each write. Every write finishes before the first
+    error (in table order) is re-raised."""
+    errors: dict[str, Exception] = {}
+
+    def write(name: str, df: DataFrame) -> None:
+        try:
+            df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
+        except Exception as e:  # re-raised on the caller's thread below
+            errors[name] = e
+
+    threads = [InheritableThread(target=write, args=item) for item in tables.items()]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for name in tables:
+        if name in errors:
+            raise errors[name]
 
 
 # --------------------------------------------------------------------------
@@ -122,7 +157,7 @@ def read_manifest(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
     try:
         return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
     except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return local_df(spark, [], MANIFEST_SCHEMA)
 
 
 def run_pipeline_resumable(

@@ -34,7 +34,9 @@ def test_compact_sinks_reduces_files_and_preserves_rows(spark, tmp_path):
     assert n_before > 4
     before = _checksum(spark, base)
 
-    rpt = {r["sink_key"]: r for r in compact_sinks(spark, base, target_bytes=1 << 30).collect()}
+    report = compact_sinks(spark, base, target_bytes=1 << 30)
+    assert "LocalTableScan" in report._jdf.queryExecution().executedPlan().toString()
+    rpt = {r["sink_key"]: r for r in report.collect()}
     assert rpt["a.err"]["n_files_before"] == n_before
     assert rpt["a.err"]["n_files_after"] == 1
     after = _checksum(spark, base)

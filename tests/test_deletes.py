@@ -42,10 +42,9 @@ def test_purge_matches_and_leaves_clean_partitions_untouched(spark, tmp_path):
         r["sink_key"]: r["n"]
         for r in spark.read.parquet(base).groupBy("sink_key").agg(F.count("*").alias("n")).collect()
     }
-    rpt = {
-        r["sink_key"]: r
-        for r in propagate_deletes(spark, base, F.col("user") == "u3").collect()
-    }
+    report = propagate_deletes(spark, base, F.col("user") == "u3")
+    assert "LocalTableScan" in report._jdf.queryExecution().executedPlan().toString()
+    rpt = {r["sink_key"]: r for r in report.collect()}
     after = spark.read.parquet(base)
     assert after.filter(F.col("user") == "u3").count() == 0
     for sink, n in before_counts.items():

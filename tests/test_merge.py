@@ -18,12 +18,15 @@ BASE = datetime(2024, 1, 1, tzinfo=timezone.utc)
 
 def _rows():
     """600 rows over 5 sources; every third row sits on ONE hot timestamp,
-    so most of the order comes from the tie-break columns."""
+    so most of the order comes from the tie-break columns. Then a NULL
+    source and two sources whose doc ids order against their names, all
+    on the hot timestamp."""
     rows = []
     for i in range(600):
         hot = i % 3 == 0
         ts = BASE if hot else BASE + timedelta(seconds=i % 17)
         rows.append((ts, 0 if hot else i % 2, f"s{i % 5}", f"d{i % 40:03d}", i))
+    rows += [(BASE, 0, None, "d000", 0), (BASE, 0, "s4", "a000", 0), (BASE, 0, "s0", "z999", 0)]
     return rows
 
 
@@ -36,17 +39,24 @@ def test_duplicate_source_keeps_first_position_and_every_row(spark):
 
 
 def test_unlisted_and_null_sources_sort_last(spark):
-    """Unlisted and NULL sources take the last position; with no list the
-    sources sort lexicographically, a NULL source among them."""
-    df = spark.createDataFrame([(BASE, 0, "b", "d0", 0), (BASE, 0, "zz", "d1", 0), (BASE, 0, None, "d2", 0)], ROW_DDL)
+    """Unlisted and NULL sources take the last position and order by name
+    among themselves, NULL last; with no list the sources sort
+    lexicographically, a NULL source last."""
+    df = spark.createDataFrame(
+        [(BASE, 0, "b", "d3", 0), (BASE, 0, "zz", "d0", 0), (BASE, 0, None, "d1", 0), (BASE, 0, "c", "d2", 0)],
+        ROW_DDL,
+    )
 
-    def order(frame, sources=None):
-        return {r["doc_id"]: r["source_order"] for r in with_source_order(frame, sources).collect()}
+    def merged(frame, sources=None):
+        return [r["doc_id"] for r in global_sort(frame, num_partitions=3, sources_in_order=sources).collect()]
 
     last = 2**31 - 1
-    assert order(df, ["a", "b"]) == {"d0": 1, "d1": last, "d2": last}
-    assert order(df) == {"d0": 1, "d1": 2, "d2": last}
-    assert order(df.filter("source IS NULL")) == {"d2": last}
+    index = {r["doc_id"]: r["source_order"] for r in with_source_order(df, ["a", "b"]).collect()}
+    assert index == {"d3": 1, "d0": last, "d1": last, "d2": last}
+    assert merged(df, ["a", "b"]) == ["d3", "d2", "d0", "d1"]
+    assert merged(df, ["zz", "b"]) == ["d0", "d3", "d2", "d1"]
+    assert merged(df) == ["d3", "d2", "d0", "d1"]
+    assert merged(df.filter("source IS NULL")) == ["d1"]
 
 
 def test_source_order_is_a_projection(spark):
@@ -55,10 +65,13 @@ def test_source_order_is_a_projection(spark):
     assert "Join" not in plan and "Exchange" not in plan, plan
 
 
-def _driver_sorted(rows, order):
-    rank = {s: i for i, s in enumerate(order)}
-    keyed = [(ts.replace(tzinfo=None), ns, rank[src], doc, m) for ts, ns, src, doc, m in rows]
-    return sorted(keyed)
+def _driver_sorted(rows, order=None):
+    """``rows`` as ``SORT_KEYS`` tuples, sorted on the driver: unlisted and
+    NULL sources last, then by source name, NULL last."""
+    last = 2**31 - 1
+    rank = {s: i for i, s in enumerate(order or [])}
+    keyed = [(ts.replace(tzinfo=None), ns, rank.get(src, last), src, doc, m) for ts, ns, src, doc, m in rows]
+    return sorted(keyed, key=lambda k: (*k[:3], k[3] is None, k[3] or "", *k[4:]))
 
 
 @pytest.mark.parametrize("n", [None, 12])
@@ -79,6 +92,21 @@ def test_global_sort_partitions_and_order(spark, n):
     pids = [r["_pid"] for r in got]
     assert pids == sorted(pids)
     assert [tuple(r[k] for k in SORT_KEYS) for r in got] == _driver_sorted(rows, order)
+
+
+def test_global_sort_without_list_orders_by_source_name(spark):
+    """With no source list the partition-order read is the driver-side sort
+    on (ts, ts_ns, source with NULL last, doc_id, msg_no), hot-timestamp
+    ties included."""
+    rows = _rows()
+    got = global_sort(spark.createDataFrame(rows, ROW_DDL)).withColumn("_pid", F.spark_partition_id()).collect()
+    pids = [r["_pid"] for r in got]
+    assert pids == sorted(pids)
+    want = sorted(
+        ((ts.replace(tzinfo=None), ns, src, doc, m) for ts, ns, src, doc, m in rows),
+        key=lambda k: (k[0], k[1], k[2] is None, k[2] or "", k[3], k[4]),
+    )
+    assert [(r["ts"], r["ts_ns"], r["source"], r["doc_id"], r["msg_no"]) for r in got] == want
 
 
 def test_run_pipeline_plans_read_no_python_rdd(spark, corpus, tmp_path):

@@ -249,6 +249,15 @@ def test_filetype_col(spark):
 
 
 # ---------------------------------------------------------------- resume
+def test_missing_manifest_reads_as_a_local_empty_table(spark, tmp_path):
+    from super_speedy_syslog_searcher_spark.plans.pipeline import MANIFEST_SCHEMA, read_manifest
+
+    manifest = read_manifest(spark, str(tmp_path / "no-checkpoint"))
+    assert manifest.schema == spark.createDataFrame([], MANIFEST_SCHEMA).schema
+    assert "LocalTableScan" in manifest._jdf.queryExecution().executedPlan().toString()
+    assert manifest.count() == 0
+
+
 def test_checkpoint_resume(spark, tmp_path):
     from super_speedy_syslog_searcher_spark.plans.pipeline import (
         PipelineConfig,

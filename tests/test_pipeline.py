@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+import os
+import threading
 from datetime import datetime, timezone
 
 import pandas as pd
@@ -61,9 +63,12 @@ def test_token_array_invariant(pipeline_result, corpus):
 
 
 def test_global_sort_order(pipeline_result):
+    from super_speedy_syslog_searcher_spark.operators.merge import SORT_KEYS
+
     res, _, _ = pipeline_result
-    rows = res["merged"].select("ts", "ts_ns", "source_order", "doc_id", "msg_no").collect()
-    keys = [(r["ts"], r["ts_ns"], r["source_order"], r["doc_id"], r["msg_no"]) for r in rows]
+    rows = res["merged"].select(*SORT_KEYS).collect()
+    keys = [tuple(r[k] for k in SORT_KEYS) for r in rows]
+    assert all(r["source"] is not None for r in rows)
     assert keys == sorted(keys), "collected order is not the global sort order"
     assert len(keys) > 0
 
@@ -237,19 +242,74 @@ def test_doc_timestamps_depend_on_that_doc_alone(spark):
 
 
 def test_building_the_plan_starts_no_spark_job(spark, corpus):
-    """parse_messages_fused and run_pipeline without out_dir only plan:
-    no P9 vote job or any other Spark job starts until an action."""
+    """parse_messages_fused, the merge and run_pipeline without out_dir
+    only plan, with or without a source list: no P9 vote job, no
+    source-order collect or any other Spark job starts until an action."""
     from super_speedy_syslog_searcher_spark.functions.parse import parse_messages_fused
+    from super_speedy_syslog_searcher_spark.operators.merge import global_sort, with_source_order
 
     docs_pd, enrich_pd, _ = corpus
     docs = spark.createDataFrame(docs_pd, schema=DOCS_SCHEMA)
     lookup = spark.createDataFrame(enrich_pd, schema=ENRICH_SCHEMA)
-    cfg = PipelineConfig(reference_year=REFERENCE_YEAR, sources_in_order=sorted(enrich_pd["source"]))
+    listed = PipelineConfig(reference_year=REFERENCE_YEAR, sources_in_order=sorted(enrich_pd["source"]))
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
-    parse_messages_fused(docs, reference_year=REFERENCE_YEAR)
-    res = run_pipeline(docs, lookup, cfg)
+    msgs = parse_messages_fused(docs, reference_year=REFERENCE_YEAR)
+    global_sort(with_source_order(msgs))
+    results = [run_pipeline(docs, lookup, cfg) for cfg in (listed, PipelineConfig(reference_year=REFERENCE_YEAR))]
     try:
         assert set(tracker.getJobIdsForGroup(None)) - before == set()
     finally:
+        for res in results:
+            res["parsed_lines"].unpersist()
+
+
+def _routed_run(spark, corpus, out):
+    docs_pd, enrich_pd, _ = corpus
+    docs = spark.createDataFrame(docs_pd, schema=DOCS_SCHEMA)
+    lookup = spark.createDataFrame(enrich_pd, schema=ENRICH_SCHEMA)
+    return run_pipeline(docs, lookup, PipelineConfig(reference_year=REFERENCE_YEAR), out_dir=out)
+
+
+def test_routed_sinks_commit_before_the_counter_tables(spark, corpus, tmp_path):
+    """The routed commit (its last change is to the ``routed`` directory
+    itself: a dynamic-partition overwrite writes no ``_SUCCESS`` there) is
+    no newer than any counter table's commit."""
+    out = str(tmp_path / "out")
+    res = _routed_run(spark, corpus, out)
+    try:
+        routed = os.stat(os.path.join(out, "routed")).st_mtime_ns
+        for name in ("sink_counts", "summary", "pattern_counts"):
+            assert routed <= os.stat(os.path.join(out, name, "_SUCCESS")).st_mtime_ns, name
+        assert sum(r["messages"] for r in spark.read.parquet(os.path.join(out, "sink_counts")).collect()) == (
+            spark.read.parquet(os.path.join(out, "routed")).count()
+        )
+    finally:
         res["parsed_lines"].unpersist()
+
+
+def test_failed_counter_write_lets_the_others_commit(spark, corpus, tmp_path, monkeypatch):
+    """A counter table whose write fails is re-raised only after the other
+    two have committed; no writer thread and no cached kernel output is
+    left behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if path.endswith(os.sep + "summary"):
+            raise RuntimeError("summary sink unavailable")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    out = str(tmp_path / "out")
+    threads = threading.active_count()
+    cached = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="summary sink unavailable"):
+        _routed_run(spark, corpus, out)
+    assert [d for d in os.listdir(os.path.join(out, "routed")) if d.startswith("sink_key=")]
+    for name in ("sink_counts", "pattern_counts"):
+        assert os.path.exists(os.path.join(out, name, "_SUCCESS")), name
+    assert not os.path.exists(os.path.join(out, "summary"))
+    assert threading.active_count() == threads
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == cached

@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 def test_global_sort_spreads_hot_timestamp(spark):
     """50% of rows share ONE timestamp (retry storm from one source);
     plain range partitioning on ts alone would pile them into one
-    partition — the composite key (ts, ts_ns, source_order, doc_id,
-    msg_no) must keep the max partition bounded."""
+    partition — the composite key (ts, ts_ns, source_order, source,
+    doc_id, msg_no) must keep the max partition bounded."""
     from super_speedy_syslog_searcher_spark.operators.merge import global_sort, with_source_order
 
     base = datetime(2024, 1, 1, tzinfo=timezone.utc)

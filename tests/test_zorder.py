@@ -184,14 +184,13 @@ def test_optimize_sinks_clusters_each_sink(spark, tmp_path):
     n_lin = len(_file_boxes(a_dir, ("day", "bucket")))
     assert lin_touch == n_lin  # insertion order: every file matches
 
-    rpt = {
-        r["sink_key"]: r
-        for r in optimize_sinks(
-            spark, base,
-            codes=lambda d: [F.col("day"), F.col("bucket")],
-            target_bytes=25_000,
-        ).collect()
-    }
+    report = optimize_sinks(
+        spark, base,
+        codes=lambda d: [F.col("day"), F.col("bucket")],
+        target_bytes=25_000,
+    )
+    assert "LocalTableScan" in report._jdf.queryExecution().executedPlan().toString()
+    rpt = {r["sink_key"]: r for r in report.collect()}
     assert rpt["a.err"]["rewritten"] and rpt["b.info"]["rewritten"]
     boxes = _file_boxes(a_dir, ("day", "bucket"))
     assert len(boxes) >= 3  # byte target kept multiple files

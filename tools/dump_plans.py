@@ -77,12 +77,15 @@ def main() -> None:
             "Global merge-sort (range partition + in-partition sort)",
             merged,
             "One range exchange over the COMPOSITE key (ts, ts_ns, "
-            "source_order, doc_id, msg_no) — equal-ts rows spread across "
-            "partitions by the tie-break columns (skew salting), then an "
-            "in-partition sort; no single-node sort ever sees all rows. "
-            "source_order is a literal-map lookup in the codegen'd Project "
-            "under the exchange: no order broadcast, no join. With no "
-            "explicit partition count the range exchange is "
+            "source_order, source, doc_id, msg_no) — equal-ts rows spread "
+            "across partitions by the tie-break columns (skew salting), "
+            "then an in-partition sort; no single-node sort ever sees all "
+            "rows. With a source list (as here) source_order is a "
+            "literal-map lookup in the codegen'd Project under the "
+            "exchange: no order broadcast, no join. With no list it is one "
+            "constant (the in-partition sort drops it) and the source name "
+            "breaks the tie; no Spark job runs to build either plan. With "
+            "no explicit partition count the range exchange is "
             "AQE-coalescable (adjacent ranges merge, the order holds).",
         ),
         (
