@@ -80,14 +80,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
-def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
 # ---------------------------------------------------------------------------
 # rendered tokenized corpus (events → input_hint-shaped docs table)
 # ---------------------------------------------------------------------------
@@ -1096,7 +1088,6 @@ END || ' eid=' || event_id
 SQL_PIPE_PATTERN_HITS = _SQL_PIPE_PATTERN_HITS_TEMPLATE.replace(
     "{LINE}", _SQL_LINE_EXPR
 ).replace("{TMPL}", _sql_template_expr("line"))
-
 
 
 # twin of the consolidated q_pipe_parse_recover (timestamp roundtrip +

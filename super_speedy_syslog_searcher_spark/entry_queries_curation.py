@@ -293,9 +293,9 @@ FUZZY_CANON = ("cdn.example.com", "site1.example.org", "site7.example.org")
 
 
 def q_url_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain URL stats plus (r4.4) the blocklist flag of
-    ``curation.filter_blocked_domains``' suffix-at-label-boundary
-    matching semantics, hash-checked per domain; plus (r5 session 3)
+    """Per-domain URL stats plus (r4.4) a blocklist flag (a listed
+    domain matches itself and its subdomains, at a label boundary),
+    hash-checked per domain; plus (r5 session 3)
     the edit-distance record-linkage columns of ``dedup.fuzzy_join``:
     each observed domain's best match (min dist, ties to the smaller
     canon) against a seeded canonical host list at max_dist=1, run
@@ -463,9 +463,10 @@ def q_dedup_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnow_overlap_pairs(fps, min_shared=WINNOW_MIN_SHARED, max_df=WINNOW_MAX_DF)
 
 
-# winnow twin over the seeded docs2 corpus (k=5, window=8 — mirrors
-# SQL_DOC_WINNOW in entry_queries_data.py, re-based onto docs2), then the
-# max_df-capped inverted-index self-join.
+# winnow twin over the seeded docs2 corpus: k=5 char grams over
+# lower(text), md5-60-bit gram hash, min per window of 8 gram positions
+# (all grams when fewer), distinct — mirrors winnow_fingerprints() value
+# for value — then the max_df-capped inverted-index self-join.
 SQL_DEDUP_WINNOW_OVERLAP = f"""
 WITH {SQL_DOCS2.strip()},
 norm AS (SELECT doc_id, lower(text) AS s FROM docs2 WHERE length(text) >= 5),

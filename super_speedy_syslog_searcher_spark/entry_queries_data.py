@@ -28,7 +28,6 @@ from .operators.textstats import (
     langid,
     quality_stats,
     token_counts,
-    winnow_fingerprints,
 )
 
 MUT_TAIL = " zz extra tail tokens appended"
@@ -630,57 +629,6 @@ SELECT 'zorder', doc_id, CAST(NULL AS BIGINT),
      | (((d >> 7) & 1) << 14) | (((b >> 7) & 1) << 15) AS z
 FROM codes
 """
-
-
-# NOTE (r4 registry consolidation): the standalone `doc_winnow` driver row
-# was retired to free a gate slot — the winnow kernel stays fully
-# hash-checked through `dedup_winnow_overlap`, whose DuckDB twin re-derives
-# the complete winnow fingerprint set in SQL before the overlap join
-# (entry_queries_curation.SQL_DEDUP_WINNOW_OVERLAP); q_doc_winnow and its
-# twin remain here for tools/ and local checks.
-def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprints, fully oracle-checked: the k-gram hash is
-    the md5-60-bit form, so DuckDB reproduces the exact fingerprint
-    values (grams via generate_series + substr, window-min, distinct).
-
-    Output is exploded to scalar ``(doc_id, fp, n_fp)`` rows so the
-    driver's pandas canonicalization can sort/hash it (array columns are
-    unhashable there); the array-valued operator face stays in
-    :func:`winnow_fingerprints`."""
-    fps = winnow_fingerprints(_docs(spark, sf_dir))
-    return fps.select(
-        "doc_id",
-        F.explode("fps").alias("fp"),
-        F.size("fps").cast("bigint").alias("n_fp"),
-    )
-
-
-# winnowing twin: k=5 char grams over lower(text), md5-60-bit gram hash,
-# min per window of 8 gram positions (all grams when fewer), distinct.
-# Mirrors winnow_fingerprints() value for value.
-SQL_DOC_WINNOW = """
-WITH norm AS (SELECT doc_id, lower(text) AS s FROM documents WHERE length(text) >= 5),
-grams AS (
-  SELECT doc_id, i,
-         CAST('0x' || substr(md5(substr(s, CAST(i AS INT), 5)), 1, 15) AS BIGINT) AS h
-  FROM (SELECT doc_id, s, unnest(generate_series(1, length(s) - 4)) AS i FROM norm)
-),
-sized AS (SELECT doc_id, count(*) AS n_grams FROM grams GROUP BY doc_id),
-wins AS (
-  SELECT g.doc_id,
-         min(h) OVER (PARTITION BY g.doc_id ORDER BY i
-                      ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS m,
-         i, s.n_grams
-  FROM grams g JOIN sized s USING (doc_id)
-),
-fps AS (
-  SELECT DISTINCT doc_id, m AS fp
-  FROM wins WHERE i <= greatest(n_grams - 7, 1)
-)
-SELECT doc_id, fp, count(*) OVER (PARTITION BY doc_id) AS n_fp FROM fps
-"""
-
-
 
 
 # BM25 demo query set for the driver row: a bounded keyword-query table

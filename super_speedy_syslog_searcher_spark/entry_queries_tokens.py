@@ -193,8 +193,7 @@ def q_tokens_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACHIEVED kept doc/token totals from the deterministically sampled
     corpus (``tokens.sample_to_mixture``). Every output column is an
     integer, so the oracle match is exact — the kept SET, not just the
-    rate table, is verified. ``mixture_weights`` (the float rate face)
-    stays covered by its own pytest equivalence to these thresholds.
+    rate table, is verified.
     r4: also joins ``tokens.temperature_targets`` (alpha=0.5 sampling
     targets — floor(sqrt) weights + integer largest-remainder split, so
     the DuckDB twin reproduces every value exactly)."""

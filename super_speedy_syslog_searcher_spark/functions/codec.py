@@ -24,7 +24,6 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -59,32 +58,6 @@ def encode_text_udf(text: pd.Series) -> pd.Series:
     return text.map(
         lambda t: np.frombuffer(t.encode("utf-32-le"), dtype=np.int32) if t is not None else None
     )
-
-
-@F.pandas_udf(T.StringType())
-def decode_tokens_udf(tokens: pd.Series) -> pd.Series:
-    """array<int32> codepoints → string, Arrow-batched.
-
-    Decodes the whole batch with one numpy pass: concatenate all token
-    arrays, vectorize chr via np.char on a uint32 view, then split by the
-    per-row lengths. Avoids per-token Python round-trips.
-    """
-    if len(tokens) == 0:
-        return pd.Series([], dtype=object)
-    lengths = tokens.map(len).to_numpy()
-    if lengths.sum() == 0:
-        return pd.Series([""] * len(tokens), index=tokens.index)
-    flat = np.concatenate([np.asarray(t, dtype=np.uint32) for t in tokens])
-    invalid = (flat > 0x10FFFF) | ((flat >= 0xD800) & (flat <= 0xDFFF))
-    if invalid.any():
-        flat = flat.copy()
-        flat[invalid] = 0xFFFD  # malformed tokens → replacement char
-    # one bulk decode: uint32 codepoints viewed as UTF-32LE text
-    all_text = flat.tobytes().decode("utf-32-le")
-    # np.cumsum gives the split offsets in characters == tokens
-    offsets = np.concatenate([[0], np.cumsum(lengths)])
-    out = [all_text[offsets[i] : offsets[i + 1]] for i in range(len(lengths))]
-    return pd.Series(out, index=tokens.index)
 
 
 def split_docs_batch(doc_ids, sources, tokens) -> pd.DataFrame:
@@ -174,15 +147,3 @@ def explode_lines(docs: DataFrame) -> DataFrame:
             yield split_docs_batch(pdf["doc_id"].to_numpy(), pdf["source"].to_numpy(), pdf["tokens"])
 
     return docs.select("doc_id", "source", "tokens").mapInPandas(_gen, schema=LINES_SCHEMA)
-
-
-def rejoin_message_tokens(line_tokens_col):
-    """Column expr: array<array<int>> (ordered line slices) → one message
-    token array with NEWLINE_TOKEN re-inserted between lines.
-
-    JVM-side (flatten/transform), no UDF: message tokens must equal the
-    original doc slice byte-for-byte (token-for-token).
-    """
-    with_nl = F.transform(line_tokens_col, lambda x: F.concat(x, F.array(F.lit(NEWLINE_TOKEN))))
-    flat = F.flatten(with_nl)
-    return F.slice(flat, 1, F.size(flat) - 1)

@@ -170,7 +170,7 @@ def _convert_matches(
         year = _ints(cols["year"])
     elif "year2" in cols:
         yy = _ints(cols["year2"])
-        # chrono %y pivot: 00-68 → 20xx, 69-99 → 19xx (year2_to_year)
+        # chrono %y pivot: 00-68 → 20xx, 69-99 → 19xx
         year = np.where(yy <= 68, 2000 + yy, 1900 + yy)
     else:
         year = np.full(n, reference_year or DUMMY_YEAR, dtype=np.int64)

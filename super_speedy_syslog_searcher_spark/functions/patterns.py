@@ -843,8 +843,3 @@ def month_name_to_num(name: str) -> int | None:
     """Month name or 3-letter abbrev → number (reference
     month_bB_to_month_m_bytes, datetime.rs:5787)."""
     return MONTH3_TO_NUM.get(name[:3].lower())
-
-
-def year2_to_year(yy: int) -> int:
-    """chrono %y pivot: 00-68 → 20xx, 69-99 → 19xx."""
-    return 2000 + yy if yy <= 68 else 1900 + yy

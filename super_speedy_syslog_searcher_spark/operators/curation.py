@@ -52,7 +52,6 @@ Scale shapes (100 TB review):
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -569,104 +568,6 @@ def quality_classifier_score(
     )
 
 
-def train_quality_classifier(
-    docs: DataFrame,
-    label: Column,
-    n_buckets: int = 4096,
-    iters: int = 20,
-    lr: float = 2.0,
-    l2: float = 0.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Train the hashed-linear quality classifier IN-ENGINE — distributed
-    logistic regression over the same mean-pooled hashed-unigram features
-    :func:`quality_classifier_score` consumes, closing the fastText-style
-    filter loop end-to-end (label a subset → train → score the corpus).
-    ``label`` is a boolean/0-1 Column over ``docs`` (1 = keep-quality).
-
-    Returns ``(weights_df, bias)``: a ``(b, weight)`` DataFrame (≤
-    n_buckets rows — feed it straight to ``quality_classifier_score``)
-    and the trained float bias.
-
-    Scale shape (the ``kmeans_assign`` iterative-aggregate pattern —
-    similarity.py): the feature frame ``(doc_id, y, bs, xs)`` is built
-    ONCE, map-only, and frozen with ``localCheckpoint`` so every round
-    re-reads the materialized features instead of re-running the lineage.
-    Per round the weight VECTOR (n_buckets float64 — bounded) rides into
-    a vectorized pandas UDF via the closure; the per-doc error is one
-    sparse dot per row (map-only), and the gradient is an explode →
-    partial-agg exchange keyed on the BOUNDED bucket id, collected as ≤
-    n_buckets rows to the driver for the update. Total per round: one
-    corpus scan, one bounded-key exchange, zero corpus-scale collects.
-    Full-batch gradient descent, so the result is independent of row
-    order up to float-sum associativity (no RNG, no sampling).
-    """
-    feats = (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            label.cast("double").alias("y"),
-            F.filter(F.split(F.col(text_col), " "), lambda x: F.length(x) > 0).alias(
-                "ws"
-            ),
-        )
-        .filter(F.size("ws") > 0)
-        .select(
-            "doc_id",
-            "y",
-            F.transform("ws", lambda w: hash_bucket(w, n_buckets)).alias("bs"),
-            F.size("ws").alias("nw"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    n_docs = feats.count()
-    if n_docs == 0:
-        spark = docs.sparkSession
-        return spark.createDataFrame([], "b int, weight double"), 0.0
-
-    w_vec = np.zeros(n_buckets, dtype=np.float64)
-    bias = 0.0
-
-    def make_err_udf(w: "np.ndarray", b0: float):
-        @F.pandas_udf("double")
-        def _err(bs: pd.Series, nw: pd.Series, y: pd.Series) -> pd.Series:
-            out = np.empty(len(bs), dtype=np.float64)
-            nw_v = nw.to_numpy(dtype=np.float64)
-            y_v = y.to_numpy(dtype=np.float64)
-            for i, b in enumerate(bs):
-                z = b0 + w[np.asarray(b, dtype=np.int64)].sum() / nw_v[i]
-                out[i] = 1.0 / (1.0 + np.exp(-z)) - y_v[i]
-            return pd.Series(out)
-
-        return _err
-
-    for _ in range(iters):
-        erred = feats.withColumn(
-            "err", make_err_udf(w_vec, bias)(F.col("bs"), F.col("nw"), F.col("y"))
-        )
-        grad_rows = (
-            erred.select(
-                F.explode("bs").alias("b"),
-                (F.col("err") / F.col("nw")).alias("g"),
-            )
-            .groupBy("b")
-            .agg(F.sum("g").alias("g"))
-            .collect()
-        )
-        grad = np.zeros(n_buckets, dtype=np.float64)
-        for r in grad_rows:
-            grad[r["b"]] = r["g"]
-        # each doc contributes |bs| = nw entries of err/nw, which sum to
-        # err_d — so the bias gradient Σ_d err_d is exactly grad.sum():
-        # ONE job per round covers both gradients.
-        w_vec -= lr * (grad / n_docs + l2 * w_vec)
-        bias -= lr * float(grad.sum()) / n_docs
-
-    spark = docs.sparkSession
-    nz = [(int(b), float(w_vec[b])) for b in np.nonzero(w_vec)[0]]
-    return spark.createDataFrame(nz, "b int, weight double"), bias
-
-
 def decontaminate_spans(
     docs: DataFrame,
     bench: DataFrame,
@@ -1158,53 +1059,6 @@ def priority_sample(
         )
         .drop("_prio", "_tau")
     )
-
-
-def filter_blocked_domains(
-    df: DataFrame,
-    blocked: list[str] | DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Drop documents containing a URL whose host is (a subdomain of) a
-    blocked domain — the robots/safety-blocklist stage of a crawl
-    pipeline. Matching is suffix-at-label-boundary (``cdn.example.com``
-    is blocked by ``example.com``; ``notexample.com`` is not).
-
-    Scale shape: each document URL's host explodes into its label
-    suffixes (``a.b.example.com`` → 4 rows, bounded by label depth, in
-    pure Column algebra) and EQUI-joins the broadcast blocklist — a
-    hash join, not a nested-loop suffix scan, so the per-URL cost is
-    O(labels) regardless of blocklist size. The corpus side never
-    shuffles; docs with no URLs never reach the join; the final drop is
-    a left-anti join on the distinct hit ids.
-    """
-    spark = df.sparkSession
-    if not isinstance(blocked, DataFrame):
-        blocked = spark.createDataFrame([(b,) for b in blocked], "blocked_domain string")
-    labels = F.split(F.lower(F.col("_dom")), "\\.")
-    sufs = F.transform(
-        F.sequence(F.lit(0), F.size(labels) - 1),
-        lambda i: F.array_join(F.slice(labels, i + 1, F.size(labels) - i), "."),
-    )
-    doc_sufs = (
-        df.select(
-            F.col(id_col),
-            F.explode(
-                F.expr(f"regexp_extract_all({text_col}, '{URL_DOMAIN_RE}', 1)")
-            ).alias("_dom"),
-        )
-        .select(id_col, F.explode(sufs).alias("_suf"))
-    )
-    hits = (
-        doc_sufs.join(
-            F.broadcast(blocked.select(F.lower("blocked_domain").alias("_suf"))),
-            "_suf",
-        )
-        .select(id_col)
-        .distinct()
-    )
-    return df.join(hits, id_col, "left_anti")
 
 
 def badwords_filter(

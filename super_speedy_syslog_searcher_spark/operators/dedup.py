@@ -964,67 +964,3 @@ def fuzzy_join(
         F.col("_rid").alias(right_id),
         F.levenshtein("_a", "_b").alias("dist"),
     )
-
-
-def fuzzy_key_clusters(
-    df: DataFrame,
-    key_col: str,
-    max_dist: int = 1,
-    strategy: str = "segment",
-) -> DataFrame:
-    """Cluster near-identical KEY strings (hostname/domain/username
-    variants within ``max_dist`` edits) — ``fuzzy_join`` self-joined and
-    closed transitively, the record-linkage composition of the dedup
-    stack: ``(key, canon)`` with ``canon`` = the lexicographically
-    smallest key reachable through the edit-distance graph (every key
-    appears; singletons map to themselves), ready to broadcast as a
-    canonicalization map.
-
-    Scale shape: the self-join inherits ``fuzzy_join``'s equi-join
-    candidate generation (distinct keys only — the corpus collapses to
-    its key vocabulary first); the closure is
-    ``connected_components``' O(log n) pointer jumping over NUMERIC
-    node ids (the first 15 hex digits of the md5, so 60-bit; by the
-    birthday bound a collision becomes likely near ~2^30 distinct keys,
-    and it is guarded by a loud countDistinct assertion, never a silent
-    merge). The min-numeric-id cluster root maps back to a key,
-    and the emitted ``canon`` is the lexicographically smallest KEY of
-    the cluster (min(string) per root — partial-aggregable).
-    Symmetric/self pairs are pruned before the closure.
-    """
-    kid = (
-        F.conv(F.substring(F.md5(F.encode(F.col("k"), "UTF-8")), 1, 15), 16, 10)
-        .cast("long")
-    )
-    keys = (
-        df.select(F.col(key_col).cast("string").alias("k"))
-        .distinct()
-        .withColumn("_id", kid)
-    )
-    chk = keys.agg(
-        F.countDistinct("k").alias("nk"), F.countDistinct("_id").alias("ni")
-    ).collect()[0]
-    if chk["nk"] != chk["ni"]:
-        raise RuntimeError(
-            "fuzzy_key_clusters: md5 node-id collision across the key "
-            "vocabulary — widen the id or dense-rank the keys"
-        )
-    pairs = fuzzy_join(
-        keys.select("k"), keys.select(F.col("k").alias("k2")), max_dist=max_dist,
-        left_id="k", left_col="k", right_id="k2", right_col="k2",
-        strategy=strategy,
-    ).filter(F.col("k") < F.col("k2"))
-    edges = (
-        pairs.join(keys.select(F.col("k"), F.col("_id").alias("a")), "k")
-        .join(keys.select(F.col("k").alias("k2"), F.col("_id").alias("b")), "k2")
-        .select("a", "b")
-    )
-    clusters = connected_components(edges)
-    labeled = clusters.select(F.col("node").alias("_id"), F.col("cluster_id").alias("_root"))
-    with_root = keys.join(labeled, "_id", "left").select(
-        "k", F.coalesce("_root", F.col("_id")).alias("_root")
-    )
-    canon = with_root.groupBy("_root").agg(F.min("k").alias("canon"))
-    return with_root.join(canon, "_root").select(
-        F.col("k").alias(key_col), "canon"
-    )

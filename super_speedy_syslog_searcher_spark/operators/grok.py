@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Library entries may reference other entries with %{NAME}. All regexes
@@ -119,30 +119,3 @@ def grok_parse(
         got = F.regexp_extract(F.col(text_col), regex, i)
         out = out.withColumn(name, F.when(matched & (got != ""), got))
     return out
-
-
-# logfmt-style key=value extraction (the other standard structured-log
-# convention next to grok): one regexp_extract_all pass, map-only.
-KV_RE = '(\\w+)=("[^"]*"|\\S+)'
-
-
-def extract_kv(
-    df: DataFrame,
-    text_col: str = "text",
-    keys_col: str = "kv_keys",
-    vals_col: str = "kv_vals",
-) -> DataFrame:
-    """Extract every ``key=value`` / ``key="quoted value"`` pair (logfmt)
-    into two aligned arrays — arrays rather than a map so duplicate keys
-    survive and the result is twin-comparable. Quoted values keep their
-    quotes stripped. Map-only codegen, zero shuffles."""
-    # Spark SQL string literals eat single backslashes — escape for expr
-    rx = KV_RE.replace("\\", "\\\\")
-    keys = F.expr(f"regexp_extract_all({text_col}, '{rx}', 1)")
-    vals = F.transform(
-        F.expr(f"regexp_extract_all({text_col}, '{rx}', 2)"),
-        lambda v: F.when(
-            v.startswith('"') & v.endswith('"'), F.substring(v, 2, F.length(v) - 2)
-        ).otherwise(v),
-    )
-    return df.withColumn(keys_col, keys).withColumn(vals_col, vals)

@@ -57,18 +57,6 @@ def parse_journal_export(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def render_journal_entry(ts_usec, source_ts_usec=None, extra: dict[str, object] | None = None) -> F.Column:
-    """Column builder for one export-format entry (corpus construction)."""
-    parts = [F.concat(F.lit(f"{REALTIME}="), ts_usec.cast("string"))]
-    if source_ts_usec is not None:
-        parts.append(
-            F.when(source_ts_usec.isNotNull(), F.concat(F.lit(f"{SOURCE_REALTIME}="), source_ts_usec.cast("string"))).otherwise(F.lit(None))
-        )
-    for k, v in (extra or {}).items():
-        parts.append(F.concat(F.lit(f"{k}="), v.cast("string")))
-    return F.concat_ws("\n", *parts)
-
-
 def parse_journal_export_binary(docs: DataFrame, payload_col: str = "payload") -> DataFrame:
     """(doc_id, source, payload binary) → entry rows, like
     :func:`parse_journal_export` but over the RAW export stream, which

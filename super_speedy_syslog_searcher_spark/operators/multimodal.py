@@ -1,8 +1,8 @@
 """Multimodal (image/audio/video) column handling.
 
 Media rides as an opaque ``binary`` column plus typed metadata; the
-Spark-side plumbing — schema, Arrow batching, ``mapInPandas`` signature,
-partition sizing — is real and tested. Each extractor dispatches to a
+Spark-side plumbing — schema, Arrow batching, ``mapInPandas`` signature —
+is real and tested. Each extractor dispatches to a
 decoder registry: the REAL path parses genuine container headers in
 pure Python (PNG/GIF/BMP/JPEG dimensions, WAV and MP4 durations — no
 imaging/av library needed for metadata). Pixel decode is REAL for all
@@ -13,10 +13,8 @@ A/V codecs (MP3/AAC/H.264 — genuinely C-library territory) keep the
 documented deterministic fallbacks. A fake decoder remains for plumbing
 tests.
 
-Scale notes: media batches are bounded by bytes not rows
-(``media_repartition`` targets ~64 MB of payload per task), and metadata
-extraction never shuffles — it is a narrow mapInPandas over the storage
-partitioning.
+Scale note: metadata extraction never shuffles — it is a narrow
+mapInPandas over the storage partitioning.
 """
 
 from __future__ import annotations
@@ -242,39 +240,6 @@ def extract_media_meta(
     return media.select(
         F.col(id_col), F.col(kind_col), F.col(payload_col)
     ).mapInPandas(_gen, schema=META_SCHEMA)
-
-
-def media_repartition(media: DataFrame, payload_col: str = "payload", target_bytes: int = 64 << 20) -> DataFrame:
-    """Repartition so each task sees ~target_bytes of payload (media rows
-    are huge — row-count partitioning starves or OOMs tasks)."""
-    total = media.select(F.sum(F.length(payload_col))).first()[0] or 0
-    n = max(1, int(total / target_bytes))
-    return media.repartition(n)
-
-
-def frame_sample_stub(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video → frame rows (media_id, frame_no, frame_ts_ms, frame binary).
-    Frame extraction itself is a registry decoder (fake: slices the
-    payload deterministically) — the explode/plumbing is the real part."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nos, tss, frames = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                dur = len(p) * 10
-                for i, ts in enumerate(range(0, max(dur, 1), every_ms)):
-                    lo = (ts // 10) % max(len(p), 1)
-                    ids.append(mid)
-                    nos.append(i)
-                    tss.append(ts)
-                    frames.append(p[lo : lo + 16])
-            yield pd.DataFrame({"media_id": ids, "frame_no": pd.array(nos, dtype="int32"),
-                                "frame_ts_ms": pd.array(tss, dtype="int64"), "frame": frames})
-
-    return media.select("media_id", "payload").mapInPandas(
-        _gen, schema="media_id string, frame_no int, frame_ts_ms long, frame binary"
-    )
 
 
 def audio_window_stats(

@@ -15,8 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ERR_NO_SYSLINES = "no_syslines_found"  # ≙ FileErrNoSyslinesFound
-ERR_INVALID_RECORD = "invalid_fixedstruct_record"
-ERR_NO_TIMESTAMP = "entry_missing_timestamp"
 
 
 def doc_rejects(parsed_lines_or_msgs: DataFrame, docs: DataFrame) -> DataFrame:
@@ -33,28 +31,3 @@ def doc_rejects(parsed_lines_or_msgs: DataFrame, docs: DataFrame) -> DataFrame:
             F.concat(F.lit("n_tok="), F.col("n_tok").cast("string")).alias("detail"),
         )
     )
-
-
-def fixedstruct_rejects(decoded: DataFrame) -> DataFrame:
-    """Invalid (null / wrong-size) fixed-width records (P11 skips,
-    fixedstruct.rs:189-190)."""
-    return decoded.filter(~F.col("valid")).select(
-        "source",
-        "doc_id",
-        F.lit(ERR_INVALID_RECORD).alias("error_kind"),
-        F.concat(F.lit("record_no="), F.col("record_no").cast("string")).alias("detail"),
-    )
-
-
-def journal_rejects(entries: DataFrame) -> DataFrame:
-    """Journal entries with no resolvable realtime timestamp."""
-    return entries.filter(F.col("ts").isNull()).select(
-        "source",
-        "doc_id",
-        F.lit(ERR_NO_TIMESTAMP).alias("error_kind"),
-        F.concat(F.lit("entry_no="), F.col("entry_no").cast("string")).alias("detail"),
-    )
-
-
-def write_rejects(rejects: DataFrame, out_dir: str, mode: str = "overwrite") -> None:
-    rejects.write.mode(mode).partitionBy("error_kind").parquet(out_dir)

@@ -69,6 +69,47 @@ def sink_counts(enriched: DataFrame) -> DataFrame:
     )
 
 
+def _sink_base(spark, out_dir: str) -> str:
+    """The routed table under ``out_dir`` (or ``out_dir`` itself), with any
+    swap a crashed maintenance pass left behind recovered first."""
+    from ..sources.iceberg import fs_exists, recover_stale_swaps
+
+    base = f"{out_dir}/routed" if fs_exists(spark, f"{out_dir}/routed") else out_dir
+    recover_stale_swaps(spark, base)
+    return base
+
+
+def _rewrite_sinks(spark, out_dir: str, rewrite) -> list[tuple]:
+    """The per-sink rewrite loop of :func:`compact_sinks` and
+    :func:`optimize_sinks`. ``rewrite(pdir, n_files, bytes)`` returns the
+    sink's new contents, or None to leave it as it is. Each rewrite is
+    staged beside the live dir and promoted by the crash-safe three-step
+    swap (``fs_swap_dir``). Returns ``(sink_key, n_files_before,
+    n_files_after, bytes, rewritten)`` per sink."""
+    from ..sources.iceberg import fs_delete, fs_swap_dir, partition_file_stats
+
+    base = _sink_base(spark, out_dir)
+    stats = partition_file_stats(spark, base, prefix="sink_key=")
+    report = []
+    for entry in sorted(stats):
+        pdir = f"{base}/{entry}"
+        files = stats[entry]
+        nbytes = sum(sz for _, sz in files)
+        sink = entry.split("=", 1)[1]
+        new = rewrite(pdir, len(files), nbytes)
+        if new is None:
+            report.append((sink, len(files), len(files), nbytes, False))
+            continue
+        # sweep any stale staging dir from a previously crashed run first
+        tmp = pdir + "._compact"
+        fs_delete(spark, tmp)
+        new.write.mode("overwrite").parquet(tmp)
+        fs_swap_dir(spark, pdir, tmp)
+        after = len(partition_file_stats(spark, base, prefix=entry).get(entry, []))
+        report.append((sink, len(files), after, nbytes, True))
+    return report
+
+
 def compact_sinks(
     spark,
     out_dir: str,
@@ -103,40 +144,16 @@ def compact_sinks(
     """
     import math
 
-    from ..sources.iceberg import (
-        fs_delete,
-        fs_exists,
-        fs_swap_dir,
-        partition_file_stats,
-        recover_stale_swaps,
-    )
-
-    base = f"{out_dir}/routed" if fs_exists(spark, f"{out_dir}/routed") else out_dir
-    recover_stale_swaps(spark, base)
-    stats = partition_file_stats(spark, base, prefix="sink_key=")
-    report = []
-    for entry in sorted(stats):
-        pdir = f"{base}/{entry}"
-        files = stats[entry]
-        nbytes = sum(sz for _, sz in files)
+    def rewrite(pdir: str, n_files: int, nbytes: int) -> DataFrame | None:
         want = max(1, math.ceil(nbytes / target_bytes))
-        sink = entry.split("=", 1)[1]
-        if len(files) < min_files or len(files) <= want:
-            report.append((sink, len(files), len(files), nbytes))
-            continue
-        part = spark.read.parquet(pdir).repartition(want)
-        # stage the rewrite beside the live dir, then swap (three-step,
-        # crash-safe — see fs_swap_dir); sweep any stale sibling from a
-        # previously crashed run first
-        tmp = pdir + "._compact"
-        fs_delete(spark, tmp)
-        part.write.mode("overwrite").parquet(tmp)
-        fs_swap_dir(spark, pdir, tmp)
-        after = len(partition_file_stats(spark, base, prefix=entry).get(entry, []))
-        report.append((sink, len(files), after, nbytes))
+        if n_files < min_files or n_files <= want:
+            return None
+        return spark.read.parquet(pdir).repartition(want)
+
     return local_df(
         spark,
-        report, "sink_key string, n_files_before int, n_files_after int, bytes long"
+        [r[:4] for r in _rewrite_sinks(spark, out_dir, rewrite)],
+        "sink_key string, n_files_before int, n_files_after int, bytes long",
     )
 
 
@@ -170,10 +187,9 @@ def propagate_deletes(
     Returns the purge report
     ``(sink_key, rows_before, rows_deleted, rows_after, rewritten)``.
     """
-    from ..sources.iceberg import fs_delete, fs_exists, fs_swap_dir, recover_stale_swaps
+    from ..sources.iceberg import fs_delete, fs_swap_dir
 
-    base = f"{out_dir}/routed" if fs_exists(spark, f"{out_dir}/routed") else out_dir
-    recover_stale_swaps(spark, base)
+    base = _sink_base(spark, out_dir)
     table = spark.read.option("basePath", base).parquet(f"{base}/{partition_col}=*")
     hit = F.coalesce(predicate.cast("boolean"), F.lit(False))
     counts = {
@@ -238,38 +254,17 @@ def optimize_sinks(
     """
     import math
 
-    from ..sources.iceberg import (
-        fs_delete,
-        fs_exists,
-        fs_swap_dir,
-        partition_file_stats,
-        recover_stale_swaps,
-    )
     from .zorder import zorder_layout
 
-    base = f"{out_dir}/routed" if fs_exists(spark, f"{out_dir}/routed") else out_dir
-    recover_stale_swaps(spark, base)
-    stats = partition_file_stats(spark, base, prefix="sink_key=")
-    report = []
-    for entry in sorted(stats):
-        pdir = f"{base}/{entry}"
-        files = stats[entry]
-        nbytes = sum(sz for _, sz in files)
-        sink = entry.split("=", 1)[1]
-        if len(files) < min_files:
-            report.append((sink, len(files), len(files), nbytes, False))
-            continue
+    def rewrite(pdir: str, n_files: int, nbytes: int) -> DataFrame | None:
+        if n_files < min_files:
+            return None
         part = spark.read.parquet(pdir)
         want = max(1, math.ceil(nbytes / target_bytes))
-        clustered = zorder_layout(part, codes(part), bits=bits, num_files=want).drop("z")
-        tmp = pdir + "._compact"
-        fs_delete(spark, tmp)
-        clustered.write.mode("overwrite").parquet(tmp)
-        fs_swap_dir(spark, pdir, tmp)
-        after = len(partition_file_stats(spark, base, prefix=entry).get(entry, []))
-        report.append((sink, len(files), after, nbytes, True))
+        return zorder_layout(part, codes(part), bits=bits, num_files=want).drop("z")
+
     return local_df(
         spark,
-        report,
+        _rewrite_sinks(spark, out_dir, rewrite),
         "sink_key string, n_files_before int, n_files_after int, bytes long, rewritten boolean",
     )

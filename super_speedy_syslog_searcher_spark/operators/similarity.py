@@ -175,22 +175,15 @@ def norm_col(a) -> Column:
     return F.sqrt(dot_col(a, a))
 
 
-def cosine_col(a, b) -> Column:
-    # zero-norm side → cosine undefined → NULL (threshold/rank filters
-    # drop it), never an ANSI divide-by-zero task kill
-    denom = norm_col(a) * norm_col(b)
-    return F.when(denom > 0, dot_col(a, b) / denom)
-
-
 def _scored(cand: DataFrame) -> DataFrame:
     """Score candidate pairs carrying precomputed per-row norms: one
-    O(dim) fold per pair (the dot) instead of three (VERDICT r2 #3 — the
-    inline ``cosine_col`` re-derived both norms per candidate). Same
-    value bit-for-bit: ``dot/(qnorm*cnorm)`` with ``norm = sqrt(dot(v,v))``
-    is the exact expression ``cosine_col`` expands to, so the DuckDB
-    oracles are unchanged. A zero-norm vector has no direction: its
-    pairs score NULL and are dropped (it is nobody's neighbor and has
-    none), rather than killing the task under ANSI division."""
+    O(dim) fold per pair (the dot) instead of three (VERDICT r2 #3 — an
+    inline cosine re-derived both norms per candidate). Same value
+    bit-for-bit: ``dot/(qnorm*cnorm)`` with ``norm = sqrt(dot(v,v))`` is
+    that cosine's exact expression, so the DuckDB oracles are unchanged.
+    A zero-norm vector has no direction: its pairs score NULL and are
+    dropped (it is nobody's neighbor and has none), rather than killing
+    the task under ANSI division."""
     denom = F.col("qnorm") * F.col("cnorm")
     return cand.withColumn(
         "sim", F.when(denom > 0, dot_col(F.col("qv"), F.col("cv")) / denom)
@@ -461,71 +454,6 @@ def semdedup_pairs(
     )
 
 
-def decontaminate_embeddings(
-    corpus: DataFrame,
-    bench: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bench_id_col: str = "vec_id",
-    bench_vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-space benchmark decontamination: flag corpus items
-    whose embedding is cosine-near any eval/benchmark item — the
-    paraphrase-robust complement of ``curation.decontaminate``'s shared
-    word-n-gram rule (a reworded eval question shares no 8-gram but
-    keeps its embedding neighborhood). Returns one row per corpus item:
-    ``(vec_id, bench_id, bench_sim, contaminated)`` with ``bench_id`` /
-    ``bench_sim`` the nearest benchmark item and its cosine (NULL / 0.0
-    when the bench set is empty), ``contaminated = bench_sim >= threshold``.
-
-    Scale shape: eval sets are tiny next to the corpus, so the bench
-    matrix is L2-normalized ONCE on the driver and rides into a
-    vectorized pandas UDF via the closure (the ``kmeans_assign``
-    pattern) — per Arrow batch the scan is one matmul + argmax. The
-    operator is MAP-ONLY: zero shuffles, zero joins; the corpus never
-    moves. Contrast with ``cosine_topk`` (per-query ranked lists,
-    windowed): here every corpus row needs only its single nearest
-    bench item, so the reduction happens inside the batch.
-    """
-    rows = bench.select(bench_id_col, bench_vec_col).collect()  # bounded: eval set
-    if not rows:
-        return corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.lit(None).cast("long").alias("bench_id"),
-            F.lit(0.0).alias("bench_sim"),
-            F.lit(0).alias("contaminated"),
-        )
-    bids = np.asarray([r[0] for r in rows], dtype=np.int64)
-    mat = np.asarray([np.asarray(r[1], dtype=np.float64) for r in rows])
-    nrm = np.linalg.norm(mat, axis=1)
-    nrm[nrm == 0.0] = 1.0  # zero-norm bench row → similarity 0 to everything
-    mat = mat / nrm[:, None]
-
-    @F.pandas_udf("bench_id long, bench_sim double")
-    def _nearest(col: pd.Series) -> pd.DataFrame:
-        if len(col) == 0:
-            return pd.DataFrame({"bench_id": [], "bench_sim": []})
-        x = np.asarray([np.asarray(v, dtype=np.float64) for v in col])
-        xn = np.linalg.norm(x, axis=1)
-        xn[xn == 0.0] = 1.0  # zero-norm corpus row → all sims 0
-        sims = (x / xn[:, None]) @ mat.T
-        best = np.argmax(sims, axis=1)
-        return pd.DataFrame(
-            {"bench_id": bids[best], "bench_sim": sims[np.arange(len(x)), best]}
-        )
-
-    out = corpus.select(
-        F.col(id_col).alias("vec_id"), _nearest(F.col(vec_col)).alias("nn")
-    )
-    return out.select(
-        "vec_id",
-        F.col("nn.bench_id").alias("bench_id"),
-        F.col("nn.bench_sim").alias("bench_sim"),
-        (F.col("nn.bench_sim") >= threshold).cast("int").alias("contaminated"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # product quantization (Jégou, Douze, Schmid 2011 — "Product Quantization
 # for Nearest Neighbor Search", IEEE TPAMI): the canonical 100-TB ANN
@@ -756,150 +684,6 @@ def pq_codebooks(dim: int, m: int = 4, ksub: int = 8, seed: int = 29) -> np.ndar
     return rng.randn(m, ksub, dim // m)
 
 
-# ---------------------------------------------------------------------------
-# IVFADC with residual encoding — the full §IV layout of Jégou et al.:
-# vectors PQ-encode their RESIDUAL to the nearest coarse centroid, so the
-# codebooks spend their bits on the within-cell distribution instead of
-# re-describing cell positions; queries build one LUT per probed cell on
-# (q - c_cell) and scan only those cells' rows.
-# ---------------------------------------------------------------------------
-
-
-def ivfpq_encode(
-    vecs: DataFrame,
-    books: np.ndarray,
-    coarse: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Corpus → ``(id, list_id, codes)``: nearest coarse cell (L2,
-    lowest-id tie-break) + PQ codes of the residual. Map-only — the
-    coarse table and codebooks ride the closure; the corpus never
-    shuffles. At rest ``list_id`` is the table's partition/bucket
-    column, so an nprobe scan prunes to ~nprobe/n_lists of the data."""
-    B = books.astype(np.float64)
-    m, ksub, dsub = B.shape
-    C = coarse.astype(np.float64)
-    csq = (C * C).sum(axis=1)
-    bsq = (B * B).sum(axis=2)  # [m, ksub]
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def _enc(col: pd.Series) -> pd.Series:
-        if len(col) == 0:
-            return pd.Series([], dtype=object)
-        V = np.stack([np.asarray(x, dtype=np.float64) for x in col])
-        lists = np.argmin(csq - 2.0 * (V @ C.T), axis=1)
-        R = (V - C[lists]).reshape(len(V), m, dsub)
-        out = np.empty((len(V), m + 1), dtype=np.int32)
-        out[:, 0] = lists
-        for j in range(m):
-            out[:, j + 1] = np.argmin(bsq[j] - 2.0 * (R[:, j, :] @ B[j].T), axis=1)
-        return pd.Series(list(out))
-
-    enc = vecs.select(F.col(id_col).alias(id_col), _enc(F.col(vec_col)).alias("_lc"))
-    return enc.select(
-        id_col,
-        F.element_at("_lc", 1).alias("list_id"),
-        F.slice("_lc", 2, int(m)).alias("codes"),
-    )
-
-
-def ivfpq_topk(
-    codes_df: DataFrame,
-    queries: DataFrame,
-    books: np.ndarray,
-    coarse: np.ndarray,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Residual-ADC top-k over an ``ivfpq_encode`` index.
-
-    Per query: its ``nprobe`` nearest coarse cells (L2, lowest-id
-    tie-break) are found on the driver and a separate ``[m, ksub]``
-    residual LUT is built per probed cell (``||(q-c_cell)_j -
-    b_{j,code}||²``). The scan is ONE map-only Arrow stage over the
-    codes; rows outside a query's probed cells never score, each batch
-    emits only local top-k under the global (dist, id) tie-break, and
-    the single rank exchange carries ≤ batches·|queries|·k rows.
-
-    Returns ``(query_id, rank, neighbor_id, adc_dist)``.
-    """
-    B = books.astype(np.float64)
-    m, ksub, dsub = B.shape
-    C = coarse.astype(np.float64)
-    csq = (C * C).sum(axis=1)
-    qrows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).collect()
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    nq = len(qrows)
-    Q = (
-        np.stack([np.asarray(r["qv"], dtype=np.float64) for r in qrows])
-        if qrows
-        else np.zeros((0, m * dsub))
-    )
-    probes = np.argsort(csq[None, :] - 2.0 * (Q @ C.T), axis=1, kind="stable")[
-        :, :nprobe
-    ] if nq else np.zeros((0, nprobe), dtype=int)
-    # luts[qi][list_id] -> [m, ksub] residual LUT for that probed cell
-    luts: list[dict[int, np.ndarray]] = []
-    for qi in range(nq):
-        d: dict[int, np.ndarray] = {}
-        for l in probes[qi]:
-            r = (Q[qi] - C[l]).reshape(m, dsub)
-            diff = r[:, None, :] - B
-            d[int(l)] = np.einsum("jcd,jcd->jc", diff, diff)
-        luts.append(d)
-
-    def _scan(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0 or nq == 0:
-                continue
-            codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            lists = pdf["list_id"].to_numpy().astype(np.int64)
-            ids = pdf[id_col].to_numpy().astype(np.int64)
-            out_q, out_n, out_d = [], [], []
-            for qi in range(nq):
-                cand_d: list[np.ndarray] = []
-                cand_i: list[np.ndarray] = []
-                for l, lut in luts[qi].items():
-                    sel = np.nonzero((lists == l) & (ids != qids[qi]))[0]
-                    if not sel.size:
-                        continue
-                    dist = np.zeros(len(sel))
-                    for j in range(m):
-                        dist += lut[j, codes[sel, j]]
-                    cand_d.append(dist)
-                    cand_i.append(ids[sel])
-                if not cand_d:
-                    continue
-                dist = np.concatenate(cand_d)
-                nid = np.concatenate(cand_i)
-                top = min(k, len(nid))
-                part = np.lexsort((nid, dist))[:top]
-                out_q.extend([qids[qi]] * top)
-                out_n.extend(nid[part].tolist())
-                out_d.extend(dist[part].tolist())
-            if out_q:
-                yield pd.DataFrame(
-                    {"query_id": out_q, "neighbor_id": out_n, "adc_dist": out_d}
-                )
-
-    local = codes_df.select(id_col, "list_id", "codes").mapInPandas(
-        _scan, schema="query_id long, neighbor_id long, adc_dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adc_dist")
-    )
-
 
 def pca_fit(
     vecs: DataFrame,
@@ -1018,45 +802,3 @@ def _corpus_moments(vecs: DataFrame, vec_col: str) -> tuple[int, np.ndarray, np.
     mean = s / n
     cov = m.reshape(d, d) / n - np.outer(mean, mean)
     return int(n), mean, cov
-
-
-def embedding_frechet_distance(
-    a: DataFrame,
-    b: DataFrame,
-    vec_col: str = "embedding",
-) -> dict:
-    """Fréchet distance between the Gaussian fits of two embedding
-    corpora — the FID-family drift metric (Heusel et al. 2017 compute
-    exactly this between Inception embeddings; the same statistic over
-    ANY embedding column answers "did today's crawl drift from
-    yesterday's?" / "does the deduped corpus still cover the original
-    distribution?"):
-
-        d² = ||μ_a − μ_b||² + tr(C_a + C_b − 2·(C_a C_b)^{1/2})
-
-    Returns ``{"frechet_sq", "mean_term", "cov_term", "n_a", "n_b"}``.
-    Identical corpora score 0; a pure mean shift of δ scores ‖δ‖²
-    (both pinned in tests).
-
-    Scale shape: each corpus contributes ONE map-only moments pass
-    (bounded (n, Σx, XᵀX) partials — see ``_corpus_moments``); the
-    matrix square root runs driver-side on d×d via symmetric
-    eigendecomposition of C_a^{1/2} C_b C_a^{1/2} (same nonzero
-    spectrum as C_a·C_b, but symmetric PSD — numerically safe without
-    scipy), d = embedding width, never corpus size.
-    """
-    n_a, mu_a, ca = _corpus_moments(a, vec_col)
-    n_b, mu_b, cb = _corpus_moments(b, vec_col)
-    diff = mu_a - mu_b
-    mean_term = float(diff @ diff)
-    wa, va = np.linalg.eigh(ca)
-    s1 = (va * np.sqrt(np.maximum(wa, 0.0))) @ va.T  # C_a^{1/2}
-    lam = np.linalg.eigvalsh(s1 @ cb @ s1)
-    cov_term = float(np.trace(ca) + np.trace(cb) - 2.0 * np.sqrt(np.maximum(lam, 0.0)).sum())
-    return {
-        "frechet_sq": mean_term + cov_term,
-        "mean_term": mean_term,
-        "cov_term": cov_term,
-        "n_a": n_a,
-        "n_b": n_b,
-    }

@@ -209,8 +209,8 @@ def hdr_quantiles(
 # HyperLogLog with an engine-exact twin
 # ---------------------------------------------------------------------------
 # Flajolet et al. 2007. Spark's approx_count_distinct is HLL++ over an
-# internal xxhash — a DuckDB oracle cannot reproduce it, which is why
-# corpus_profile's sketches live outside the hash gate. This explicit
+# internal xxhash — a DuckDB oracle cannot reproduce it, so its sketches
+# cannot sit under a value hash. This explicit
 # HLL keeps every piece engine-exact: the register/rho split is integer
 # math on the md5-32 bucket idiom; the harmonic denominator
 # sum_j 2^(-M_j) is carried as the EXACT INTEGER S = sum_j 2^(SCALE-M_j)
@@ -220,8 +220,8 @@ def hdr_quantiles(
 # representable operands — bit-identical in Spark and DuckDB, so even
 # the float estimate sits under a value hash. The small-range linear-
 # counting correction needs ln (not correctly rounded in either engine),
-# so hll_corrected applies it OUTSIDE the hashable face, from the same
-# hashable integers (V, m).
+# so a caller applies it OUTSIDE the hashable face, from the same
+# hashable integers (V, m): m*ln(m/V) when est <= 2.5*m and V > 0.
 #
 # Scale shape: registers form in one partial-aggregable groupBy (the
 # exchange carries <= groups x m rows); sketches MERGE by register-wise
@@ -280,7 +280,7 @@ def hll_profile(
     """Per-group HLL summary ``(.., hll_s, hll_v, hll_est)``:
     ``hll_s`` = the exact integer harmonic sum, ``hll_v`` = empty
     registers, ``hll_est`` = the raw HLL estimate (bit-exact across
-    engines). Apply :func:`hll_corrected` for the small-range fix."""
+    engines). The small-range fix is the caller's (see above)."""
     m = 1 << b
     regs = hll_registers(df, key_col, group_cols, b, seed)
     per = regs.groupBy(*group_cols).agg(
@@ -294,17 +294,6 @@ def hll_profile(
         (F.lit(m) - F.col("_occ")).cast("long").alias("hll_v"),
         (F.lit(hll_alpha_num(b)) / s.cast("double")).alias("hll_est"),
     )
-
-
-def hll_corrected(est: float, v: int, b: int = HLL_B) -> float:
-    """Small-range linear-counting correction (driver-side, from the
-    hashable integers): if est <= 2.5*m and V > 0, m*ln(m/V)."""
-    import math
-
-    m = 1 << b
-    if est <= 2.5 * m and v > 0:
-        return m * math.log(m / v)
-    return est
 
 
 # ---------------------------------------------------------------------------
@@ -400,130 +389,3 @@ def mg_heavy_hitters(
         .select(*gc, key_col, F.col("est").cast("long"), "n")
     )
 
-
-# ---------------------------------------------------------------------------
-# Count-Sketch / AMS second-moment (self-join size) estimator
-# ---------------------------------------------------------------------------
-
-
-def countsketch_f2(
-    df: DataFrame,
-    key_col: str,
-    depth: int = 5,
-    width: int = 256,
-    group_cols: tuple[str, ...] = ("source",),
-    seed: str = "cs",
-) -> DataFrame:
-    """AMS/Count-Sketch second-moment estimate per group (Alon, Matias,
-    Szegedy 1996; Charikar, Chen, Farach-Colton 2002):
-    ``F2 = Σ_k count(k)²`` — the SELF-JOIN SIZE of the key column, the
-    number a join planner needs to predict skew-join blowup before
-    running it, in ``depth × width`` integers regardless of key
-    cardinality.
-
-    Each sketch row r holds cells ``S[r][c] = Σ_k sign_r(k)·count(k)``
-    over keys hashing to cell c; ``Σ_c S[r][c]²`` is an unbiased F2
-    estimate, and the output takes the MEDIAN over the ``depth`` rows
-    (returned as ``f2_est``) next to each row's estimate spread
-    (``f2_min``/``f2_max``). Everything up to and including the median
-    is EXACT INTEGER arithmetic on md5-derived hashes — the estimate is
-    a pure function of the bag of keys, layout-independent and
-    bit-reproducible (unlike float moment pipelines), and the cells
-    MERGE additively across shards/days (mergeability = linearity).
-
-    Scale shape: one tagged explode (``depth`` rows per input row) into
-    a partial-agg groupBy on the bounded (group, r, cell) space — each
-    task contributes ≤ depth·width rows per group to the exchange; the
-    square/median step runs on depth·width rows per group, never the
-    corpus.
-    """
-    rows = df.select(
-        *group_cols,
-        F.col(key_col).cast("string").alias("_k"),
-        F.explode(F.array(*[F.lit(r) for r in range(depth)])).alias("_r"),
-    )
-    def _h(tag: str, modulus: int) -> Column:
-        s = F.concat(
-            F.lit(f"{seed}:{tag}:"), F.col("_r").cast("string"), F.lit(":"), F.col("_k")
-        )
-        h = F.conv(F.substring(F.md5(F.encode(s, "UTF-8")), 1, 8), 16, 10)
-        return h.cast("long") % modulus
-
-    cell = _h("c", width)
-    sign = _h("s", 2) * 2 - 1
-    cells = (
-        rows.select(*group_cols, "_r", cell.alias("_c"), sign.alias("_sgn"))
-        .groupBy(*group_cols, "_r", "_c")
-        .agg(F.sum("_sgn").cast("long").alias("_s"))
-    )
-    per_row = cells.groupBy(*group_cols, "_r").agg(
-        F.sum(F.col("_s") * F.col("_s")).cast("long").alias("_est")
-    )
-    return per_row.groupBy(*group_cols).agg(
-        F.expr("CAST(median(_est) AS DOUBLE)").alias("f2_est"),
-        F.min("_est").alias("f2_min"),
-        F.max("_est").alias("f2_max"),
-    )
-
-
-def countsketch_join_size(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str,
-    depth: int = 5,
-    width: int = 256,
-    seed: str = "cs",
-) -> DataFrame:
-    """AGMS JOIN-SIZE estimate |left ⋈ right| on ``key_col`` — the
-    inner product of the two sides' Count-Sketches built with the SAME
-    hash functions (the classic application of the AMS sketch: sketch
-    each day's table once, answer any pairwise join-size question from
-    the stored d×w cells without touching the data again). Per sketch
-    row r, ``Σ_c S_L[r][c]·S_R[r][c]`` is an unbiased estimate of
-    ``Σ_k count_L(k)·count_R(k)``; the output is the exact-integer
-    MEDIAN over rows plus the row spread — layout-independent and
-    bit-reproducible like :func:`countsketch_f2` (same guarantees, and
-    a shared-seed F2 sketch IS the self-join special case).
-
-    Scale shape: one bounded tagged-explode aggregate per side (each
-    task ≤ depth·width rows out), then a join of the two cell tables on
-    (r, cell) — depth·width rows each, never corpus-scale.
-    """
-
-    def _cells(df: DataFrame) -> DataFrame:
-        rows = df.select(
-            F.col(key_col).cast("string").alias("_k"),
-            F.explode(F.array(*[F.lit(r) for r in range(depth)])).alias("_r"),
-        )
-
-        def _h(tag: str, modulus: int) -> Column:
-            s = F.concat(
-                F.lit(f"{seed}:{tag}:"), F.col("_r").cast("string"), F.lit(":"), F.col("_k")
-            )
-            h = F.conv(F.substring(F.md5(F.encode(s, "UTF-8")), 1, 8), 16, 10)
-            return h.cast("long") % modulus
-
-        return (
-            rows.select("_r", _h("c", width).alias("_c"), (_h("s", 2) * 2 - 1).alias("_sgn"))
-            .groupBy("_r", "_c")
-            .agg(F.sum("_sgn").cast("long").alias("_s"))
-        )
-
-    lc = _cells(left).withColumnRenamed("_s", "_sl")
-    rc = _cells(right).withColumnRenamed("_s", "_sr")
-    per_row = (
-        lc.join(rc, ["_r", "_c"])
-        .groupBy("_r")
-        .agg(F.sum(F.col("_sl") * F.col("_sr")).cast("long").alias("_est"))
-    )
-    # a sketch row with no overlapping occupied cells estimates 0; keep
-    # every row in the median by re-attaching the full row range
-    rows_df = left.sparkSession.range(depth).select(F.col("id").cast("int").alias("_r"))
-    full = rows_df.join(per_row, "_r", "left").select(
-        F.coalesce("_est", F.lit(0)).alias("_est")
-    )
-    return full.agg(
-        F.expr("CAST(median(_est) AS DOUBLE)").alias("join_size_est"),
-        F.min("_est").alias("join_size_min"),
-        F.max("_est").alias("join_size_max"),
-    )

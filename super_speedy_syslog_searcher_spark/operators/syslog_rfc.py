@@ -1,4 +1,4 @@
-"""RFC 3164 / RFC 5424 syslog protocol parsing + <PRI> decode.
+"""RFC 5424 syslog protocol parsing + <PRI> decode (the PRI is RFC 3164's too).
 
 The reference recognizes ``<PRI>``-prefixed syslog lines (its DTPD
 table carries ``<14>…`` test lines and pins the valid PRI range to
@@ -166,41 +166,3 @@ def sd_params(sd: Column) -> Column:
         lambda acc, p: F.map_concat(F.map_filter(acc, lambda k, _: k != p["n"]), F.create_map(p["n"], p["v"])),
     )
     return F.when(sd.isNotNull(), m).otherwise(F.create_map().cast("map<string,string>"))
-
-
-def sd_ids(sd: Column) -> Column:
-    """The SD-ID of every structured-data element, in order."""
-    return F.when(
-        sd.isNotNull(), F.regexp_extract_all(sd, F.lit(r"\[([A-Za-z0-9@._-]+)"), 1)
-    ).otherwise(F.array().cast("array<string>"))
-
-
-# RFC 3164 §4.1: <PRI>TIMESTAMP SP HOSTNAME SP TAG[pid]: CONTENT
-# TIMESTAMP = 'Mmm dd hh:mm:ss' with space-padded day.
-_RFC3164_RE = (
-    r"^<(\d{1,3})>"  # 1 pri
-    r"((?:Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec) [ 0-9]\d \d{2}:\d{2}:\d{2})"  # 2 ts
-    r" ([!-~]+)"  # 3 hostname
-    r" ([A-Za-z0-9._/-]+)(?:\[(\d+)\])?:?"  # 4 tag, 5 pid
-    r"(?: (.*))?$"  # 6 content
-)
-
-
-def parse_rfc3164(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Parse BSD-syslog (RFC 3164) lines: ``pri ts_text hostname tag pid
-    msg`` + decoded facility/severity. The no-year timestamp stays text —
-    year inference is :mod:`..operators.yearfix`'s job (reference 25-hour
-    rule), exactly as the reference treats these lines."""
-    t = F.col(text_col)
-    matched = t.rlike(_RFC3164_RE)
-    g = lambda i: F.when(matched, F.regexp_extract(t, _RFC3164_RE, i))  # noqa: E731
-    out = (
-        df.withColumn("rfc3164_matched", matched)
-        .withColumn("pri", F.when(matched, g(1).cast("int")))
-        .withColumn("ts_text", g(2))
-        .withColumn("hostname", g(3))
-        .withColumn("tag", g(4))
-        .withColumn("pid", F.when(matched & (g(5) != ""), g(5)).cast("int"))
-        .withColumn("msg", F.when(matched & (g(6) != ""), g(6)))
-    )
-    return decode_pri(out)

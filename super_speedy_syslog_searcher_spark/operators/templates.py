@@ -71,27 +71,3 @@ def mine_templates(
         .alias("n_params"),
         F.round(F.col("n") / F.col("_tot"), 4).alias("share"),
     )
-
-
-def extract_template_params(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-message variable extraction: the whitespace tokens that the
-    mask chain changed (a partially-masked token like ``eid=123`` →
-    ``eid=<NUM>`` is returned whole, parameter-in-context). Masks never
-    touch whitespace, so the token streams align 1:1."""
-    tmpl = template_col(text_col)
-    orig_toks = F.split(F.col(text_col), " ")
-    tmpl_toks = F.split(tmpl, " ")
-    params = F.filter(
-        F.zip_with(orig_toks, tmpl_toks, lambda o, t: F.when(o != t, o)),
-        lambda x: x.isNotNull(),
-    )
-    return df.select(
-        F.col(id_col),
-        tmpl.alias("template"),
-        params.alias("params"),
-        F.size(params).cast("bigint").alias("n_params"),
-    )

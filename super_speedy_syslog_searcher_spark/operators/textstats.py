@@ -12,7 +12,6 @@ expressions (whole-stage codegen, no Python in the hot path).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -297,129 +296,3 @@ def bm25_topk(
             "score",
         )
     )
-
-
-SCRIPT_RANGES = (
-    # (script, character-class regex over the public Unicode blocks)
-    ("latin", r"[A-Za-zÀ-ɏ]"),
-    ("cyrillic", r"[Ѐ-ӿ]"),
-    ("greek", r"[Ͱ-Ͽ]"),
-    ("arabic", r"[؀-ۿ]"),
-    ("hebrew", r"[֐-׿]"),
-    ("devanagari", r"[ऀ-ॿ]"),
-    ("cjk", r"[一-鿿㐀-䶿]"),
-    ("kana", r"[぀-ヿ]"),
-    ("hangul", r"[가-힯ᄀ-ᇿ]"),
-    ("digit", r"[0-9]"),
-)
-
-
-def script_profile(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Per-doc Unicode SCRIPT histogram — the writing-system signal a
-    multilingual curation pipeline reads before any language model:
-    mixed-script spam, mojibake leakage, and wrong-corpus routing all
-    show up as script-share anomalies that stopword language-ID
-    (``langid``) is blind to (it only knows the languages it has
-    stopwords for).
-
-    Emits one share column per entry of ``SCRIPT_RANGES`` (fraction of
-    the doc's NON-SPACE characters in that script's blocks, 4 dp),
-    ``other_share`` for everything unmatched, and ``main_script`` — the
-    argmax share with ties to the earlier table entry, or NULL for an
-    all-space/empty doc.
-
-    Scale shape: map-only whole-stage codegen — one ``regexp_count``
-    per script over the row, no explode, no shuffle, no Python. The
-    script table is a constant; adding a block is one tuple.
-    """
-    nonspace = F.length(F.regexp_replace(F.col(text_col), r"\s", ""))
-    shares = []
-    for name, pat in SCRIPT_RANGES:
-        cnt = F.length(F.col(text_col)) - F.length(
-            F.regexp_replace(F.col(text_col), pat, "")
-        )
-        shares.append(
-            F.when(nonspace > 0, F.round(cnt / nonspace, 4)).alias(f"{name}_share")
-        )
-    out = df.select(F.col(id_col), nonspace.alias("_ns"), *shares)
-    total = sum((F.coalesce(F.col(f"{n}_share"), F.lit(0.0)) for n, _ in SCRIPT_RANGES), F.lit(0.0))
-    other = F.when(F.col("_ns") > 0, F.round(F.greatest(F.lit(1.0) - total, F.lit(0.0)), 4))
-    pairs = F.array(
-        *[
-            F.struct(
-                F.coalesce(F.col(f"{n}_share"), F.lit(0.0)).alias("s"),
-                F.lit(i).alias("i"),
-                F.lit(n).alias("name"),
-            )
-            for i, (n, _) in enumerate(SCRIPT_RANGES)
-        ]
-    )
-    # argmax share, ties to the earlier table entry: max over (s, -i)
-    best = F.array_max(F.transform(pairs, lambda p: F.struct(p["s"].alias("s"), (-p["i"]).alias("ni"), p["name"].alias("name"))))
-    main = F.when((F.col("_ns") > 0) & (best["s"] > 0), best["name"])
-    return out.select(
-        id_col,
-        *[f"{n}_share" for n, _ in SCRIPT_RANGES],
-        other.alias("other_share"),
-        main.alias("main_script"),
-    )
-
-
-def compression_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    level: int = 6,
-    max_ratio: float = 0.45,
-) -> DataFrame:
-    """Per-doc zlib compression ratio — the entropy-style quality
-    signal crawl pipelines threshold on (the RefinedWeb/MassiveText
-    family uses repetition rules for the same target): machine-generated
-    boilerplate, keyword stuffing, and template spam compress far
-    better than natural prose, so a LOW ratio flags them even when
-    word-level heuristics pass. Emits ``n_raw`` (utf-8 bytes),
-    ``n_compressed`` (zlib at a FIXED level — zlib output is
-    deterministic for a given level/input, so the columns are
-    reproducible everywhere), ``compression_ratio`` (compressed/raw,
-    4 dp, NULL for empty docs) and ``cr_keep``
-    (1 iff ratio ≥ ``max_ratio`` — natural text typically lands
-    0.5–0.8, heavy repetition well under 0.4).
-
-    Scale shape: map-only Arrow stage (zlib per row inside the batch
-    loop — CPU-bounded by payload bytes, the same class as the codec
-    on-ramp); no shuffle, no state.
-    """
-    import zlib
-
-    schema = T.StructType(
-        [
-            T.StructField("n_raw", T.LongType()),
-            T.StructField("n_compressed", T.LongType()),
-            T.StructField("compression_ratio", T.DoubleType()),
-            T.StructField("cr_keep", T.IntegerType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def _cr(texts: pd.Series) -> pd.DataFrame:
-        n_raw, n_comp, ratio, keep = [], [], [], []
-        for t in texts:
-            raw = (t or "").encode("utf-8")
-            if not raw:
-                n_raw.append(0)
-                n_comp.append(0)
-                ratio.append(None)
-                keep.append(1)
-                continue
-            comp = zlib.compress(raw, level)
-            r = round(len(comp) / len(raw), 4)
-            n_raw.append(len(raw))
-            n_comp.append(len(comp))
-            ratio.append(r)
-            keep.append(int(r >= max_ratio))
-        return pd.DataFrame(
-            {"n_raw": n_raw, "n_compressed": n_comp, "compression_ratio": ratio, "cr_keep": keep}
-        )
-
-    out = df.select(F.col(id_col), _cr(F.col(text_col)).alias("_c"))
-    return out.select(id_col, "_c.n_raw", "_c.n_compressed", "_c.compression_ratio", "_c.cr_keep")

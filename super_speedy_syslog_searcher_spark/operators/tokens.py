@@ -239,45 +239,6 @@ def assemble_sequences(
     return out
 
 
-def mixture_weights(docs: DataFrame, targets: dict[str, float]) -> DataFrame:
-    """Per-source sampling rates that tilt the corpus to a target token
-    mixture with maximum data retention (the standard pretraining
-    data-mixing step): with T = min over sources of n_tok_s / share_s,
-    the largest total budget for which no source needs upsampling,
-    rate_s = share_s · T / n_tok_s ∈ (0, 1].
-
-    One aggregate (per-source token totals — |sources| rows), one
-    broadcast of the target table, one scalar min folded back by a
-    broadcast cross join. No row-scale data ever reaches the driver.
-    Sources absent from ``targets`` are excluded (rate would be 0).
-    """
-    spark = docs.sparkSession
-    # a non-positive share means "exclude this source" — same as absent
-    # (and a 0 share would divide by zero in the T aggregate)
-    tgt = spark.createDataFrame(
-        sorted((k, v) for k, v in targets.items() if v > 0),
-        "source string, target_share double",
-    )
-    per = docs.groupBy("source").agg(F.sum("n_tok").cast("long").alias("n_tok_total"))
-    j = per.join(F.broadcast(tgt), "source")
-    tmax = j.select(F.min(F.col("n_tok_total") / F.col("target_share")).alias("_t"))
-    out = j.crossJoin(F.broadcast(tmax))
-    # a targeted source with zero tokens binds T to 0 (you cannot hit a
-    # nonzero share from nothing); its own rate is 0/0 — define it 0.0
-    # rather than crash the job under ANSI division
-    rate = F.when(
-        F.col("n_tok_total") > 0,
-        F.col("target_share") * F.col("_t") / F.col("n_tok_total"),
-    ).otherwise(F.lit(0.0))
-    return out.select(
-        "source",
-        "n_tok_total",
-        "target_share",
-        F.round(rate, 6).alias("rate"),
-        F.round(F.col("target_share") * F.col("_t"), 4).alias("expected_tokens"),
-    )
-
-
 def vocab_stats(docs: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     """Corpus vocabulary statistics: per token value, total occurrences
     and document frequency. Partial aggregation absorbs hot tokens
@@ -764,125 +725,6 @@ def apply_bpe(
     return docs.withColumn(tokens_col, _encode(F.col(tokens_col)))
 
 
-def _splitmix64(x: "np.ndarray") -> "np.ndarray":
-    """SplitMix64 finalizer over uint64 — the vectorizable integer mixer
-    behind the seeded dropout decisions (public constant set; wraps
-    mod 2^64 like numpy uint64 arithmetic does natively)."""
-    z = (x + np.uint64(0x9E3779B97F4A7C15)).astype(np.uint64)
-    z = ((z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)).astype(np.uint64)
-    z = ((z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)).astype(np.uint64)
-    return (z ^ (z >> np.uint64(31))).astype(np.uint64)
-
-
-def apply_bpe_dropout(
-    docs: DataFrame,
-    merges: list[tuple[int, int, int, int, int]] | list[tuple[int, int, int]],
-    p_drop: float = 0.1,
-    seed: str = "bpedrop",
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-) -> DataFrame:
-    """BPE-dropout encoding (Provilkov et al. 2020): during the merge
-    replay of ``apply_bpe``, each CANDIDATE merge occurrence is skipped
-    with probability ``p_drop``, yielding stochastic segmentations of
-    the same text — the subword-regularization trick that makes
-    downstream models robust to segmentation noise. ``p_drop=0`` is
-    exactly ``apply_bpe``; ``p_drop=1`` returns the base ids untouched.
-
-    Randomness is DETERMINISTIC and layout-free: the drop decision for
-    a candidate is ``splitmix64(md5_64(seed:doc_id) + merge_no·P1 +
-    occurrence_no·P2) < p_drop·2^64``, where ``occurrence_no`` ranks
-    the candidate among the doc's candidates for THAT merge round
-    (counted before any drop) — a pure function of (corpus, merges,
-    seed), so re-runs, resumed checkpoints, and any repartitioning
-    produce the identical sample (the repo's md5-determinism contract;
-    pinned against a sequential python twin in tests). Fresh epochs
-    come from a new ``seed``.
-
-    Scale shape: identical to ``apply_bpe`` — ONE map-only Arrow stage
-    for the whole table; the extra work per merge is one uint64 mixing
-    pass over the MATCH positions only. ``decode_bpe`` still inverts
-    the output exactly (dropout only chooses which merges fire, every
-    fired merge remains reversible).
-    """
-    from pyspark.sql import types as T
-
-    from .dedup import _flatten_segments
-
-    if not (0.0 <= p_drop <= 1.0):
-        raise ValueError(f"p_drop must be in [0, 1], got {p_drop}")
-    triples = [
-        (int(m[1]), int(m[2]), int(m[3])) if len(m) >= 5 else (int(m[0]), int(m[1]), int(m[2]))
-        for m in merges
-    ]
-    # drop iff mix < threshold; p=1 must drop everything, so clamp up
-    threshold = np.uint64(min(int(p_drop * (1 << 64)), (1 << 64) - 1)) if p_drop < 1.0 else None
-    P1, P2 = np.uint64(0xA24BAED4963EE407), np.uint64(0x9FB21C651E98DF25)
-
-    def _doc_keys(ids) -> "np.ndarray":
-        import hashlib
-
-        return np.array(
-            [
-                int.from_bytes(hashlib.md5(f"{seed}:{d}".encode()).digest()[:8], "big")
-                for d in ids
-            ],
-            dtype=np.uint64,
-        )
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def _encode(ids: pd.Series, tokens: pd.Series) -> pd.Series:
-        flat, offsets, lens = _flatten_segments(tokens)
-        n_docs = len(tokens)
-        if flat.size == 0:
-            return pd.Series([np.empty(0, dtype=np.int32)] * n_docs)
-        flat = flat.astype(np.int64, copy=True)
-        lens = lens.astype(np.int64, copy=True)
-        keys = _doc_keys(ids)
-        for merge_no, (left, right, new_id) in enumerate(triples):
-            offsets = np.concatenate(([0], np.cumsum(lens)[:-1])) if n_docs else np.empty(0, dtype=np.int64)
-            ends = offsets + lens
-            cand = np.zeros(flat.size, dtype=bool)
-            if flat.size >= 2:
-                cand[:-1] = (flat[:-1] == left) & (flat[1:] == right)
-            cand[ends[lens > 0] - 1] = False
-            matches = np.flatnonzero(cand)
-            if matches.size == 0:
-                continue
-            if threshold is None:
-                continue  # p_drop == 1: every candidate dropped
-            # doc index and per-doc occurrence rank of each candidate
-            di = np.searchsorted(offsets, matches, side="right") - 1
-            first = np.searchsorted(di, di, side="left")
-            occ = np.arange(matches.size, dtype=np.uint64) - first.astype(np.uint64)
-            mix = _splitmix64(keys[di] + np.uint64(merge_no + 1) * P1 + occ * P2)
-            matches = matches[mix >= threshold]
-            if matches.size == 0:
-                continue
-            if left == right:
-                kept, last = [], -2
-                for m in matches.tolist():
-                    if m == last + 1:
-                        continue
-                    kept.append(m)
-                    last = m
-                matches = np.asarray(kept, dtype=np.int64)
-            flat[matches] = new_id
-            drop = np.zeros(flat.size, dtype=bool)
-            drop[matches + 1] = True
-            merged_per_doc = np.zeros(n_docs, dtype=np.int64)
-            ne = lens > 0
-            if ne.any():
-                merged_per_doc[ne] = np.add.reduceat(drop.astype(np.int64), offsets[ne])
-            flat = flat[~drop]
-            lens = lens - merged_per_doc
-        out_off = np.concatenate(([0], np.cumsum(lens)[:-1])) if n_docs else np.empty(0, dtype=np.int64)
-        flat32 = flat.astype(np.int32)
-        return pd.Series([flat32[out_off[i]: out_off[i] + lens[i]] for i in range(n_docs)])
-
-    return docs.withColumn(tokens_col, _encode(F.col(id_col), F.col(tokens_col)))
-
-
 def train_wordpiece(
     docs: DataFrame,
     num_merges: int = 50,
@@ -1130,50 +972,6 @@ def decode_bpe(
     return docs.withColumn(tokens_col, _decode(F.col(tokens_col)))
 
 
-def decode_unigram(
-    docs: DataFrame,
-    vocab,
-    tokens_col: str = "tokens",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Invert ``apply_unigram(emit_ids=True)``: token ids → piece
-    strings → concatenated text. Piece id i is position i in the
-    (count desc, piece asc)-sorted training vocab — the encoder's own
-    id rule — and id ``len(vocab)`` is UNK. UNK is the one lossy spot
-    of the unigram coder (the original character is gone), so decoded
-    text is NULL wherever a document contains an UNK id and ``n_unk``
-    reports how many; UNK-free documents roundtrip exactly (pinned).
-
-    ONE map-only Arrow stage; the id→piece list rides the closure
-    (bounded by vocabulary size).
-    """
-    # EXACTLY the encoder's id rule (apply_unigram): a list vocab is
-    # enumerated in its own order (training output is already
-    # count-desc/piece-asc sorted); a dict vocab enumerates sorted keys
-    if isinstance(vocab, dict):
-        table = sorted(vocab)
-    else:
-        table = [p for p, _c, _lp in vocab]
-    unk_id = len(table)
-
-    def _gen(batches):
-        for pdf in batches:
-            texts, unks = [], []
-            for toks in pdf[tokens_col]:
-                ids = [int(t) for t in (toks if toks is not None else [])]
-                n_unk = sum(1 for t in ids if t < 0 or t >= unk_id)
-                unks.append(n_unk)
-                texts.append(
-                    None if n_unk else "".join(table[t] for t in ids)
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "text": texts, "n_unk": unks})
-
-    id_type = docs.schema[id_col].dataType.simpleString()
-    return docs.select(id_col, tokens_col).mapInPandas(
-        _gen, schema=f"{id_col} {id_type}, text string, n_unk int"
-    )
-
-
 def _mixture_thresholds(
     docs: DataFrame, targets_ppm: dict[str, int], n_buckets: int
 ) -> list[tuple[str, int, int, int]]:
@@ -1222,7 +1020,7 @@ def sample_to_mixture(
     n_buckets: int = 1_000_000,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Apply :func:`mixture_weights` end-to-end: deterministically keep
+    """Mixture sampling end-to-end: deterministically keep
     the subset of docs that tilts the corpus to the target token mixture
     (shares as integer parts-per-million) with maximum retention — the
     step that turns the mixture TABLE into the mixture CORPUS.
@@ -1300,7 +1098,7 @@ def temperature_targets(
     probability ∝ share_i^alpha, alpha < 1 upsampling low-resource
     sources. Returns ``(source, n_tok_total, w, target_ppm)`` with
     Σ target_ppm = ppm_total EXACTLY — ready to feed
-    :func:`mixture_weights` / :func:`sample_to_mixture` as the targets
+    :func:`sample_to_mixture` as the targets
     table (targets = {r.source: r.target_ppm}).
 
     Determinism discipline (the :func:`sample_to_mixture` rule — no
@@ -1637,66 +1435,6 @@ def pack_sequences_bestfit(
         "length",
         (F.col("bin_base") + ((off - rem) / F.col("k"))).cast("long").alias("bin_id"),
         (F.col("slot_base") + rem * F.col("length")).cast("int").alias("bin_off"),
-    )
-
-
-def replicate_for_mixture(
-    docs: DataFrame,
-    rates: dict[str, float],
-    n_buckets: int = 1_000_000,
-    id_col: str = "doc_id",
-    max_rate: float = 16.0,
-) -> DataFrame:
-    """Deterministic UPSAMPLING to a target mixture — the epochs>1 face
-    of :func:`sample_to_mixture` (which only downsamples at max
-    retention): low-resource sources in multilingual / temperature-
-    sampled training runs repeat their documents across effective epochs
-    (Xue et al. 2021 mT5 §3.1's α-sampling repeats low-resource data).
-
-    ``rates[source] = r`` (docs per source kept ``r`` times on average):
-    every doc emits ``floor(r)`` copies, plus one more iff
-    md5-bucket(doc_id) < round(frac(r)·n_buckets) — the same exact
-    integer boundary discipline as ``sample_to_mixture``, so re-runs and
-    either engine agree on every fractional-copy decision. Copies carry
-    ``epoch`` (0-based) and a suffixed doc id (``doc#e<epoch>``, stable
-    input for the deterministic ``global_shuffle`` so repeats interleave
-    rather than cluster). Sources absent from ``rates`` pass through as
-    epoch 0 with rate 1.
-
-    Scale shape: one broadcast of the |sources|-row rate table, then a
-    map-side ``explode(sequence(0, n_copies-1))`` — no shuffle; output
-    volume is exactly Σ n_docs_s·r_s. ``max_rate`` guards a typo'd rate
-    from exploding the corpus (raise, not silently emit 1000 epochs).
-    """
-    for s, r in rates.items():
-        if r < 0 or r > max_rate:
-            raise ValueError(f"rate for {s!r} out of [0, {max_rate}]: {r}")
-    from .curation import hash_bucket
-
-    spark = docs.sparkSession
-    rows = [
-        (s, int(r), int(round((r - int(r)) * n_buckets))) for s, r in sorted(rates.items())
-    ]
-    rate_df = spark.createDataFrame(rows, "source string, whole int, frac_buckets long")
-    joined = docs.join(F.broadcast(rate_df), "source", "left").withColumn(
-        "_n",
-        F.when(
-            F.col("whole").isNull(), F.lit(1)  # untargeted source: 1 copy
-        ).otherwise(
-            F.col("whole")
-            + F.when(
-                hash_bucket(F.col(id_col), n_buckets) < F.col("frac_buckets"), 1
-            ).otherwise(0)
-        ),
-    )
-    return (
-        joined.filter(F.col("_n") > 0)
-        .withColumn("epoch", F.explode(F.sequence(F.lit(0), F.col("_n") - 1)))
-        .drop("whole", "frac_buckets", "_n")
-        .withColumn(
-            id_col,
-            F.concat(F.col(id_col), F.lit("#e"), F.col("epoch").cast("string")),
-        )
     )
 
 
@@ -2256,42 +1994,6 @@ def _viterbi_chunk(texts, idxs, lens, vocab_by_len, L, unk_logp, out) -> None:
             p -= l
         pieces.reverse()
         out[i] = pieces
-
-
-def corpus_profile(
-    docs: DataFrame,
-    rsd: float = 0.02,
-    group_col: str = "source",
-    tokens_col: str = "tokens",
-) -> DataFrame:
-    """One-pass per-group corpus telemetry with SKETCHED cardinalities:
-    doc/token totals plus HyperLogLog++ distinct-token and
-    distinct-document estimates (``approx_count_distinct``). At 10^12
-    rows an exact ``countDistinct`` keys a shuffle on every token
-    occurrence; the HLL sketch is a fixed-size, mergeable accumulator
-    that rides the ordinary partial-aggregation path — one narrow pass,
-    one |groups|-row result. ``rsd`` dials sketch size vs the standard
-    error (HLL++ is exact below its sparse-mode threshold, so small
-    test corpora come back exact — asserted in tests).
-
-    Returns ``(group_col, n_docs, n_tok_total, approx_distinct_tokens,
-    approx_distinct_docs, mean_doc_len)``.
-    """
-    tok = F.explode(tokens_col).alias("_t")
-    per_tok = docs.select(F.col(group_col), F.col("doc_id"), tok).groupBy(group_col).agg(
-        F.approx_count_distinct("_t", rsd).alias("approx_distinct_tokens"),
-        F.approx_count_distinct("doc_id", rsd).alias("approx_distinct_docs"),
-        F.count("*").cast("long").alias("n_tok_total"),
-    )
-    per_doc = docs.groupBy(group_col).agg(F.count("*").cast("long").alias("n_docs"))
-    return per_doc.join(per_tok, group_col).select(
-        group_col,
-        "n_docs",
-        "n_tok_total",
-        "approx_distinct_tokens",
-        "approx_distinct_docs",
-        F.round(F.col("n_tok_total") / F.col("n_docs"), 4).alias("mean_doc_len"),
-    )
 
 
 def ul2_span_corruption(

@@ -27,14 +27,16 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .curation import hash_bucket as md5_bucket
+
 
 def hash_bucket(col: Column | str, bits: int, salt: str = "") -> Column:
-    """Deterministic engine-portable bucket code in [0, 2**bits): the
-    first 8 hex digits of md5 mod 2**bits (the repo's established
-    DuckDB-twin-able hash idiom — xxhash64 has no DuckDB twin)."""
+    """Deterministic engine-portable bucket code in [0, 2**bits):
+    ``curation.hash_bucket`` (first 8 hex digits of md5, the repo's
+    DuckDB-twin-able hash idiom — xxhash64 has no DuckDB twin) of the
+    salted string form."""
     c = F.col(col) if isinstance(col, str) else col
-    h = F.conv(F.substring(F.md5(F.concat(F.lit(salt), c.cast("string"))), 1, 8), 16, 10)
-    return (h.cast("bigint") % (1 << bits)).alias("bucket")
+    return md5_bucket(F.concat(F.lit(salt), c.cast("string")), 1 << bits)
 
 
 def day_code(ts: Column | str, origin: str, bits: int) -> Column:

@@ -239,7 +239,7 @@ def run_pipeline_resumable(
     # materialize BEFORE appending: the lineage plan reads the manifest it
     # is about to extend (lazy re-scan would anti-join away its own rows)
     lineage_rows = lineage.collect()
-    spark.createDataFrame(lineage_rows, lineage.schema).write.mode("append").parquet(
+    local_df(spark, lineage_rows, MANIFEST_SCHEMA).write.mode("append").parquet(
         _manifest_path(checkpoint_dir)
     )
     metrics = {

@@ -48,7 +48,6 @@ import lzma
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _MAGICS = (
     (b"\x1f\x8b", "gz"),

@@ -48,7 +48,11 @@ def write_table(
     depends on): ``overwritePartitions()`` on Iceberg, the
     ``partitionOverwriteMode=dynamic`` option on parquet. A
     whole-table replace (``createOrReplace``) would destroy previously
-    committed sources whose manifest rows say they are done."""
+    committed sources whose manifest rows say they are done.
+
+    The parquet branch writes ``_SUCCESS`` in the table root after the
+    commit: Spark's dynamic partition overwrite leaves none there, and
+    readers go by that marker as they do for every other table."""
     spark = df.sparkSession
     cat = iceberg_catalog(spark)
     if cat and "/" not in ident:
@@ -69,6 +73,8 @@ def write_table(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(ident)
+    fs, jpath, jvm = _hadoop_fs(spark, ident)
+    fs.create(jvm.org.apache.hadoop.fs.Path(jpath, "_SUCCESS"), True).close()
 
 
 def read_table(spark: SparkSession, ident: str) -> DataFrame:

@@ -485,91 +485,6 @@ class TestQualityClassifier:
         assert "BroadcastHashJoin" in plan
 
 
-class TestTrainQualityClassifier:
-    """train_quality_classifier — in-engine logistic regression over the
-    hashed features quality_classifier_score consumes."""
-
-    GOOD = [
-        ("g1", 1, "clean prose with useful content here today"),
-        ("g2", 1, "useful clean content and prose for training"),
-        ("g3", 1, "today we publish clean useful prose content"),
-    ]
-    BAD = [
-        ("b1", 0, "spam spam click click buy buy now now"),
-        ("b2", 0, "buy spam now click spam buy click now"),
-        ("b3", 0, "click buy spam now now spam buy click"),
-    ]
-
-    def _train(self, spark, iters=30, **kw):
-        from super_speedy_syslog_searcher_spark.operators.curation import (
-            train_quality_classifier,
-        )
-
-        df = spark.createDataFrame(
-            self.GOOD + self.BAD, "doc_id string, y int, text string"
-        )
-        w, bias = train_quality_classifier(
-            df, F.col("y") == 1, n_buckets=256, iters=iters, **kw
-        )
-        return df, w, bias
-
-    def test_trained_weights_separate_the_classes(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.curation import (
-            quality_classifier_score,
-        )
-
-        df, w, bias = self._train(spark)
-        scored = {
-            r["doc_id"]: r
-            for r in quality_classifier_score(
-                df, w, bias=bias, n_buckets=256
-            ).collect()
-        }
-        for doc_id, y, _ in self.GOOD + self.BAD:
-            assert scored[doc_id]["clf_keep"] == y, (doc_id, scored[doc_id])
-
-    def test_matches_python_reference(self, spark):
-        """Full-batch GD is RNG-free: the trained weights must match a
-        sequential numpy twin to float tolerance (sum-order ulps only)."""
-        import hashlib
-
-        import numpy as np
-
-        B, iters, lr = 256, 10, 2.0
-        df, w_df, bias = self._train(spark, iters=iters, lr=lr)
-
-        def bucket(word):
-            return int(hashlib.md5(word.encode()).hexdigest()[:8], 16) % B
-
-        rows = [(y, [bucket(t) for t in text.split()]) for _, y, text in self.GOOD + self.BAD]
-        w = np.zeros(B)
-        b0 = 0.0
-        for _ in range(iters):
-            grad = np.zeros(B)
-            ge = 0.0
-            for y, bs in rows:
-                z = b0 + w[bs].sum() / len(bs)
-                err = 1.0 / (1.0 + np.exp(-z)) - y
-                for bb in bs:
-                    grad[bb] += err / len(bs)
-                ge += err
-            w -= lr * grad / len(rows)
-            b0 -= lr * ge / len(rows)
-        got = {r["b"]: r["weight"] for r in w_df.collect()}
-        for bb in np.nonzero(w)[0]:
-            assert abs(got.get(int(bb), 0.0) - w[bb]) < 1e-9, bb
-        assert abs(bias - b0) < 1e-9
-
-    def test_empty_corpus(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.curation import (
-            train_quality_classifier,
-        )
-
-        df = spark.createDataFrame([], "doc_id string, y int, text string")
-        w, bias = train_quality_classifier(df, F.col("y") == 1, n_buckets=16, iters=2)
-        assert w.count() == 0 and bias == 0.0
-
-
 class TestCurationEdgeCases:
     def test_decontaminate_empty_bench_keeps_everything(self, spark):
         d = spark.createDataFrame(
@@ -1136,56 +1051,6 @@ class TestNgramNoveltyMaterialize:
         a = sorted(map(tuple, ngram_novelty(df, n=3).collect()))
         b = sorted(map(tuple, ngram_novelty(df, n=3, materialize=True).collect()))
         assert a == b
-
-
-class TestFilterBlockedDomains:
-    def test_suffix_boundary_semantics(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.curation import (
-            filter_blocked_domains,
-        )
-
-        rows = [
-            (1, "see https://cdn.example.com/a"),       # subdomain -> blocked
-            (2, "see https://example.com/b"),           # exact -> blocked
-            (3, "see https://notexample.com/c"),        # suffix w/o boundary -> kept
-            (4, "no urls at all"),                      # kept
-            (5, "https://ok.org/x and http://Bad.NET/y"),  # case-insensitive block
-            (6, "https://ok.org/z"),                    # kept
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        kept = sorted(
-            r["doc_id"]
-            for r in filter_blocked_domains(df, ["example.com", "bad.net"]).collect()
-        )
-        assert kept == [3, 4, 6]
-
-    def test_broadcast_hash_join_plan(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.curation import (
-            filter_blocked_domains,
-        )
-
-        df = spark.createDataFrame([(1, "https://a.b.c/x")], "doc_id long, text string")
-        plan = (
-            filter_blocked_domains(df, ["c"])
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        # equi-join on exploded label suffixes -> broadcast HASH join,
-        # never a nested-loop suffix scan
-        assert "BroadcastHashJoin" in plan and "NestedLoop" not in plan
-
-    def test_dataframe_blocklist_and_empty(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.curation import (
-            filter_blocked_domains,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "https://x.dev/a"), (2, "plain")], "doc_id long, text string"
-        )
-        bl = spark.createDataFrame([("x.dev",)], "blocked_domain string")
-        assert sorted(r["doc_id"] for r in filter_blocked_domains(df, bl).collect()) == [2]
-        assert filter_blocked_domains(df, []).count() == 2
 
 
 # ---------------------------------------------------------------------------

@@ -3,8 +3,6 @@ multimodal plumbing (SURVEY — 'beyond the reference' section)."""
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 import pytest
@@ -254,14 +252,6 @@ class TestMultimodal:
         rows = {r["media_id"]: r for r in extract_media_meta(df, decoder="real").collect()}
         assert not rows["a"]["ok"] and "unknown" in rows["a"]["error"]
         assert rows["b"]["ok"] and rows["b"]["width"] == 32 and rows["b"]["height"] == 16
-
-    def test_frame_sampling(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.multimodal import frame_sample_stub
-
-        df = spark.createDataFrame([("v", bytearray(bytes(300)))], "media_id string, payload binary")
-        frames = frame_sample_stub(df, every_ms=1000).collect()
-        assert len(frames) == 3  # 300 bytes * 10 ms = 3000 ms → 3 frames
-        assert [f["frame_no"] for f in frames] == [0, 1, 2]
 
 
 class TestBinaryFormats:
@@ -835,97 +825,6 @@ class TestKMeansSemDedup:
             .toString()
         )
         assert plan.count("ArrowEvalPython") == 0  # inputs come from the checkpoint
-
-
-class TestDecontaminateEmbeddings:
-    """similarity.decontaminate_embeddings — embedding-space benchmark
-    decontamination (nearest bench item per corpus row, map-only)."""
-
-    def _df(self, spark, rows):
-        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    def test_matches_python_reference(self, spark):
-        rng = np.random.RandomState(7)
-        corpus = [(i, rng.randn(8).tolist()) for i in range(50)]
-        bench = [(100 + j, rng.randn(8).tolist()) for j in range(5)]
-        from super_speedy_syslog_searcher_spark.operators.similarity import (
-            decontaminate_embeddings,
-        )
-
-        got = {
-            r["vec_id"]: r
-            for r in decontaminate_embeddings(
-                self._df(spark, corpus), self._df(spark, bench), threshold=0.5
-            ).collect()
-        }
-        M = np.asarray([v for _, v in bench])
-        M = M / np.linalg.norm(M, axis=1)[:, None]
-        for i, v in corpus:
-            x = np.asarray(v)
-            sims = (x / np.linalg.norm(x)) @ M.T
-            b = int(np.argmax(sims))
-            assert got[i]["bench_id"] == 100 + b, i
-            assert abs(got[i]["bench_sim"] - sims[b]) < 1e-12, i
-            assert got[i]["contaminated"] == int(sims[b] >= 0.5), i
-
-    def test_exact_copy_and_paraphrase_flagged_clean_not(self, spark):
-        bench = [(1, [1.0, 0.0, 0.0, 0.0])]
-        corpus = [
-            (10, [2.0, 0.0, 0.0, 0.0]),      # same direction → sim 1.0
-            (11, [0.9, 0.1, 0.0, 0.0]),      # near-paraphrase → sim ≈ 0.994
-            (12, [0.0, 0.0, 1.0, 0.0]),      # orthogonal → clean
-        ]
-        from super_speedy_syslog_searcher_spark.operators.similarity import (
-            decontaminate_embeddings,
-        )
-
-        got = {
-            r["vec_id"]: r["contaminated"]
-            for r in decontaminate_embeddings(
-                self._df(spark, corpus), self._df(spark, bench), threshold=0.95
-            ).collect()
-        }
-        assert got == {10: 1, 11: 1, 12: 0}
-
-    def test_empty_bench_flags_nothing(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.similarity import (
-            decontaminate_embeddings,
-        )
-
-        corpus = [(1, [1.0, 2.0])]
-        out = decontaminate_embeddings(
-            self._df(spark, corpus), self._df(spark, []).limit(0)
-        ).collect()
-        assert [(r["vec_id"], r["bench_id"], r["contaminated"]) for r in out] == [
-            (1, None, 0)
-        ]
-
-    def test_zero_norm_rows_are_clean(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.similarity import (
-            decontaminate_embeddings,
-        )
-
-        bench = [(1, [1.0, 0.0]), (2, [0.0, 0.0])]
-        corpus = [(10, [0.0, 0.0])]
-        r = decontaminate_embeddings(
-            self._df(spark, corpus), self._df(spark, bench), threshold=0.5
-        ).collect()[0]
-        assert r["bench_sim"] == 0.0 and r["contaminated"] == 0
-
-    def test_map_only_plan(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.similarity import (
-            decontaminate_embeddings,
-        )
-
-        corpus = [(i, [float(i), 1.0]) for i in range(20)]
-        bench = [(99, [1.0, 1.0])]
-        plan = (
-            decontaminate_embeddings(self._df(spark, corpus), self._df(spark, bench))
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Exchange" not in plan  # the corpus never shuffles
 
 
 class TestIncrementalLshIndex:

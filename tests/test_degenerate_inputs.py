@@ -2,7 +2,7 @@
 strings, whitespace-only docs, and EMPTY DataFrames without throwing —
 at 10^12 rows, empty documents are a certainty, and under Spark's ANSI
 mode a latent 0/0 is a task-killing ArithmeticException, not a NaN
-(this sweep caught exactly that in mixture_weights)."""
+(this sweep once caught exactly that in a mixture-rate operator)."""
 
 from __future__ import annotations
 
@@ -38,7 +38,6 @@ from super_speedy_syslog_searcher_spark.operators.tokens import (
     assemble_sequences,
     bigram_logprob,
     bpe_pair_stats,
-    mixture_weights,
     pack_sequences,
     vocab_stats,
 )
@@ -108,10 +107,6 @@ def test_parameterized_ops_survive_degenerate_docs(spark):
     dsir_weights(lang, F.col("lang") == "nope").collect()
     stratified_sample(lang, {"en": 50}).collect()
     length_quantiles(lang.select(F.lit("s").alias("source"), F.length("text").alias("n_chars"))).collect()
-    toks = spark.createDataFrame(
-        [("e", "s", [], 0)], "doc_id string, source string, tokens array<int>, n_tok int"
-    )
-    mixture_weights(toks, {"s": 1.0}).collect()
 
 
 def test_similarity_ops_survive_zero_norm_vectors(spark):

@@ -116,33 +116,3 @@ class TestFuzzyJoin:
         )
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-
-
-class TestFuzzyKeyClusters:
-    def test_variant_hostnames_canonicalize(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.dedup import fuzzy_key_clusters
-
-        rows = [
-            ("cdn.example.com",), ("cdn.exmple.com",), ("cdn.example.con",),
-            ("api.other.net",), ("api.other.nets",),
-            ("lonely.host.org",),
-            ("cdn.example.com",),  # duplicate rows collapse
-        ]
-        df = spark.createDataFrame(rows, "host string")
-        got = {r["host"]: r["canon"] for r in fuzzy_key_clusters(df, "host").collect()}
-        assert got["cdn.example.com"] == got["cdn.exmple.com"] == got["cdn.example.con"]
-        assert got["api.other.net"] == got["api.other.nets"]
-        assert got["lonely.host.org"] == "lonely.host.org"
-        assert got["cdn.example.com"] == min(
-            "cdn.example.com", "cdn.exmple.com", "cdn.example.con"
-        )
-        assert len(got) == 6  # every distinct key present exactly once
-
-    def test_transitive_chain_single_cluster(self, spark):
-        """aaaa ~ aaab ~ aabb: linked only through the middle key —
-        closure must unify all three."""
-        from super_speedy_syslog_searcher_spark.operators.dedup import fuzzy_key_clusters
-
-        df = spark.createDataFrame([("aaaa",), ("aaab",), ("aabb",)], "k string")
-        got = {r["k"]: r["canon"] for r in fuzzy_key_clusters(df, "k").collect()}
-        assert got == {"aaaa": "aaaa", "aaab": "aaaa", "aabb": "aaaa"}

@@ -67,23 +67,6 @@ class TestGrokParse:
         assert not miss["grok_matched"] and miss["clientip"] is None
 
 
-class TestExtractKV:
-    def test_pairs_quotes_and_duplicates(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.grok import extract_kv
-
-        rows = [
-            (1, 'level=info msg="disk full" dev=sda1 retry=1 retry=2'),
-            (2, "no pairs here"),
-        ]
-        df = spark.createDataFrame(rows, "id long, text string")
-        got = {r["id"]: (list(r["kv_keys"]), list(r["kv_vals"])) for r in extract_kv(df).collect()}
-        assert got[1] == (
-            ["level", "msg", "dev", "retry", "retry"],
-            ["info", "disk full", "sda1", "1", "2"],
-        )
-        assert got[2] == ([], [])
-
-
 class TestOptionalGroupNull:
     def test_absent_optional_group_is_null_not_empty(self, spark):
         """ADVICE r4: a matched row whose optional group did not

@@ -258,6 +258,34 @@ def test_missing_manifest_reads_as_a_local_empty_table(spark, tmp_path):
     assert manifest.count() == 0
 
 
+def test_resume_manifest_is_appended_from_a_local_table(spark, tmp_path, monkeypatch):
+    """The lineage rows go back to the JVM as an Arrow local table, not a
+    Python RDD from ``createDataFrame(list)``."""
+    from pyspark.sql import SparkSession
+
+    from super_speedy_syslog_searcher_spark.plans.pipeline import (
+        PipelineConfig,
+        read_manifest,
+        run_pipeline_resumable,
+    )
+
+    docs_pd, enrich_pd, _ = gen_corpus(n_docs=8, lines_per_doc=5, n_sources=3, seed=3)
+    docs = spark.createDataFrame(docs_pd, schema="doc_id string, tokens array<int>, n_tok int, source string")
+    lookup = spark.createDataFrame(enrich_pd)
+    real = SparkSession.createDataFrame
+
+    def create_data_frame(self, data, *args, **kwargs):
+        if isinstance(data, list) and data:
+            raise AssertionError("createDataFrame(list) builds a Python RDD")
+        return real(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", create_data_frame)
+    ckpt = str(tmp_path / "ckpt")
+    m = run_pipeline_resumable(docs, lookup, PipelineConfig(reference_year=REFERENCE_YEAR), str(tmp_path / "out"), ckpt)
+    assert not m["skipped"] and m["n_new_sources"] == docs_pd["source"].nunique()
+    assert {r["source"] for r in read_manifest(spark, ckpt).collect()} == set(docs_pd["source"])
+
+
 def test_checkpoint_resume(spark, tmp_path):
     from super_speedy_syslog_searcher_spark.plans.pipeline import (
         PipelineConfig,

@@ -108,63 +108,3 @@ class TestPcaProject:
             Xf = X.astype(np.float32).astype(np.float64)
             errs.append(float(((Xf - recon) ** 2).mean()))
         assert errs[0] > errs[1] > errs[2]
-
-
-class TestFrechetDistance:
-    def test_identical_corpora_zero(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.similarity import (
-            embedding_frechet_distance,
-        )
-
-        X = _gen(n=200, seed=31)
-        df = _df(spark, X)
-        got = embedding_frechet_distance(df, df)
-        assert got["n_a"] == got["n_b"] == 200
-        assert abs(got["frechet_sq"]) < 1e-6
-        assert abs(got["mean_term"]) < 1e-9
-
-    def test_pure_mean_shift_scores_shift_squared(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.similarity import (
-            embedding_frechet_distance,
-        )
-
-        X = _gen(n=300, seed=33)
-        delta = np.zeros(X.shape[1])
-        delta[0], delta[3] = 2.0, -1.0
-        got = embedding_frechet_distance(_df(spark, X), _df(spark, X + delta))
-        want = float(delta @ delta)
-        assert got["mean_term"] == pytest.approx(want, rel=1e-4)
-        assert abs(got["cov_term"]) < 1e-4
-        assert got["frechet_sq"] == pytest.approx(want, rel=1e-3)
-
-    def test_matches_numpy_twin(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.similarity import (
-            embedding_frechet_distance,
-        )
-
-        A = _gen(n=250, seed=35)
-        B = _gen(n=180, seed=36) * 1.5
-        got = embedding_frechet_distance(_df(spark, A), _df(spark, B))
-        Af = A.astype(np.float32).astype(np.float64)
-        Bf = B.astype(np.float32).astype(np.float64)
-        mu_a, mu_b = Af.mean(axis=0), Bf.mean(axis=0)
-        ca, cb = np.cov(Af.T, bias=True), np.cov(Bf.T, bias=True)
-        wa, va = np.linalg.eigh(ca)
-        s1 = (va * np.sqrt(np.maximum(wa, 0))) @ va.T
-        lam = np.linalg.eigvalsh(s1 @ cb @ s1)
-        want = float((mu_a - mu_b) @ (mu_a - mu_b)) + float(
-            np.trace(ca) + np.trace(cb) - 2 * np.sqrt(np.maximum(lam, 0)).sum()
-        )
-        assert got["frechet_sq"] == pytest.approx(want, rel=1e-6)
-        assert got["frechet_sq"] > 1.0  # genuinely different corpora
-
-    def test_layout_stable(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.similarity import (
-            embedding_frechet_distance,
-        )
-
-        X = _gen(n=220, seed=37)
-        Y = _gen(n=220, seed=38)
-        a = embedding_frechet_distance(_df(spark, X).coalesce(1), _df(spark, Y).coalesce(1))
-        b = embedding_frechet_distance(_df(spark, X).repartition(9), _df(spark, Y).repartition(5))
-        assert a["frechet_sq"] == pytest.approx(b["frechet_sq"], rel=1e-9)

@@ -273,7 +273,7 @@ def _routed_run(spark, corpus, out):
 
 def test_routed_sinks_commit_before_the_counter_tables(spark, corpus, tmp_path):
     """The routed commit (its last change is to the ``routed`` directory
-    itself: a dynamic-partition overwrite writes no ``_SUCCESS`` there) is
+    itself: the ``_SUCCESS`` marker written after the partition commit) is
     no newer than any counter table's commit."""
     out = str(tmp_path / "out")
     res = _routed_run(spark, corpus, out)
@@ -284,6 +284,22 @@ def test_routed_sinks_commit_before_the_counter_tables(spark, corpus, tmp_path):
         assert sum(r["messages"] for r in spark.read.parquet(os.path.join(out, "sink_counts")).collect()) == (
             spark.read.parquet(os.path.join(out, "routed")).count()
         )
+    finally:
+        res["parsed_lines"].unpersist()
+
+
+def test_routed_sinks_leave_a_commit_marker(spark, corpus, tmp_path):
+    """The routed table gets a ``_SUCCESS`` like every counter table, and
+    it is written after every sink partition is in place."""
+    out = str(tmp_path / "out")
+    res = _routed_run(spark, corpus, out)
+    try:
+        routed = os.path.join(out, "routed")
+        marker = os.stat(os.path.join(routed, "_SUCCESS")).st_mtime_ns
+        sinks = [d for d in os.listdir(routed) if d.startswith("sink_key=")]
+        assert sinks
+        for d in sinks:
+            assert os.stat(os.path.join(routed, d)).st_mtime_ns <= marker, d
     finally:
         res["parsed_lines"].unpersist()
 

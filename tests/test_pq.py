@@ -206,123 +206,3 @@ def test_adc_recall_on_separated_clusters(spark):
     rows = S.pq_topk_adc(codes_df, queries, books, k=5).collect()
     for r in rows:
         assert r["neighbor_id"] // 10 == r["query_id"] // 10  # same cluster
-
-
-def _twin_ivfpq(V, ids, coarse, books, qV, qids, k, nprobe):
-    m, kk, dsub = books.shape
-    # encode: nearest cell (L2, lowest id), residual codes
-    lists = np.empty(len(V), dtype=int)
-    codes = np.empty((len(V), m), dtype=int)
-    for i in range(len(V)):
-        dc = [float(((V[i] - coarse[l]) ** 2).sum()) for l in range(len(coarse))]
-        # engine expression: |c|^2 - 2<x,c>
-        expr = [
-            float((coarse[l] ** 2).sum() - 2.0 * (V[i] @ coarse[l]))
-            for l in range(len(coarse))
-        ]
-        lists[i] = int(np.argmin(expr))
-        r = (V[i] - coarse[lists[i]]).reshape(m, dsub)
-        for j in range(m):
-            e = [
-                float((books[j, c] ** 2).sum() - 2.0 * (r[j] @ books[j, c]))
-                for c in range(kk)
-            ]
-            codes[i, j] = int(np.argmin(e))
-    res = {}
-    for qi, qid in enumerate(qids):
-        expr = [
-            float((coarse[l] ** 2).sum() - 2.0 * (qV[qi] @ coarse[l]))
-            for l in range(len(coarse))
-        ]
-        probed = list(np.argsort(expr, kind="stable")[:nprobe])
-        rows = []
-        for i in range(len(V)):
-            if ids[i] == qid or lists[i] not in probed:
-                continue
-            r = (qV[qi] - coarse[lists[i]]).reshape(m, dsub)
-            dist = 0.0
-            for j in range(m):
-                dist += float(((r[j] - books[j, codes[i, j]]) ** 2).sum())
-            rows.append((dist, int(ids[i])))
-        rows.sort()
-        res[int(qid)] = [n for _, n in rows[:k]]
-    return res, lists, codes
-
-
-class TestResidualIvfPq:
-    def test_encode_and_topk_match_twin(self, spark, pq_data):
-        from super_speedy_syslog_searcher_spark.operators.similarity import (
-            ivfpq_encode,
-            ivfpq_topk,
-        )
-
-        V, df = pq_data
-        rng = np.random.default_rng(31)
-        coarse = rng.integers(-512, 512, size=(5, D)).astype(np.float64) / 1024.0
-        books = rng.integers(-256, 256, size=(M, KSUB, DSUB)).astype(np.float64) / 1024.0
-        enc = ivfpq_encode(df, books, coarse)
-        got_enc = {r["vec_id"]: (r["list_id"], list(r["codes"])) for r in enc.collect()}
-        want, lists, codes = _twin_ivfpq(
-            V, np.arange(len(V)), coarse, books, V[:4], np.arange(4), k=5, nprobe=2
-        )
-        for i in range(len(V)):
-            assert got_enc[i] == (int(lists[i]), list(map(int, codes[i]))), i
-        got = {}
-        for r in ivfpq_topk(enc, df.filter("vec_id < 4"), books, coarse, k=5, nprobe=2).collect():
-            got.setdefault(r["query_id"], []).append((r["rank"], r["neighbor_id"]))
-        for qid in range(4):
-            assert [n for _, n in sorted(got.get(qid, []))] == want[qid], qid
-
-    def test_residual_beats_plain_pq_on_clustered_data(self, spark):
-        """The point of residual encoding: with well-separated cells the
-        codebooks only describe within-cell structure, so residual
-        IVFADC's top-k agrees with exact L2 at least as often as plain
-        PQ using the same codebooks."""
-        from super_speedy_syslog_searcher_spark.operators.similarity import (
-            ivfpq_encode,
-            ivfpq_topk,
-            pq_encode,
-            pq_topk_adc,
-        )
-
-        rng = np.random.default_rng(17)
-        centers = rng.integers(-3, 4, size=(4, D)).astype(np.float64) * 16.0
-        V = np.concatenate(
-            [c + rng.integers(-256, 257, size=(12, D)) / 1024.0 for c in centers]
-        )
-        df = spark.createDataFrame(
-            [(i, [float(x) for x in V[i]]) for i in range(len(V))],
-            "vec_id long, embedding array<float>",
-        )
-        # train the codebooks on the RESIDUAL distribution (the paper's
-        # recipe) — random codebooks can't describe residuals and both
-        # variants degrade to noise
-        R = V - centers[np.arange(len(V)) // 12]
-        rdf = spark.createDataFrame(
-            [(i, [float(x) for x in R[i]]) for i in range(len(R))],
-            "vec_id long, embedding array<float>",
-        )
-        books = S.pq_train(rdf, m=M, ksub=KSUB, iters=3)
-        # exact L2 top-3 per query
-        def exact_top(qi):
-            d = ((V - V[qi]) ** 2).sum(axis=1)
-            order = sorted((float(d[i]), i) for i in range(len(V)) if i != qi)
-            return [n for _, n in order[:3]]
-
-        queries = df.filter("vec_id in (0, 12, 24, 36)")
-        enc = ivfpq_encode(df, books, centers)
-        res = {}
-        for r in ivfpq_topk(enc, queries, books, centers, k=3, nprobe=1).collect():
-            res.setdefault(r["query_id"], []).append(r["neighbor_id"])
-        plain = {}
-        for r in pq_topk_adc(pq_encode(df, books), queries, books, k=3).collect():
-            plain.setdefault(r["query_id"], []).append(r["neighbor_id"])
-        res_hits = sum(len(set(res.get(q, [])) & set(exact_top(q))) for q in (0, 12, 24, 36))
-        plain_hits = sum(
-            len(set(plain.get(q, [])) & set(exact_top(q))) for q in (0, 12, 24, 36)
-        )
-        assert res_hits > plain_hits
-        assert res_hits >= 6  # trained residual coding recovers true neighbors
-        # residual top-k stays within the query's own cluster cell
-        for q, ns in res.items():
-            assert all(n // 12 == q // 12 for n in ns)

@@ -8,7 +8,7 @@ digits, multiple SD elements, escaped quotes, and non-matching input.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,9 +17,7 @@ from super_speedy_syslog_searcher_spark.operators.syslog_rfc import (
     FACILITY_NAMES,
     SEVERITY_NAMES,
     decode_pri,
-    parse_rfc3164,
     parse_rfc5424,
-    sd_ids,
     sd_params,
 )
 
@@ -105,11 +103,8 @@ def test_rfc5424_no_match(spark):
 
 def test_sd_params_and_ids(spark):
     df = parse_rfc5424(spark.createDataFrame([(FULL_5424,)], "text string"))
-    out = df.select(
-        sd_params(F.col("sd")).alias("p"), sd_ids(F.col("sd")).alias("ids")
-    ).collect()[0]
+    out = df.select(sd_params(F.col("sd")).alias("p")).collect()[0]
     assert out["p"] == {"iut": "3", "ip": "10.0.0.9", "sw": "s4"}
-    assert out["ids"] == ["ex@32473", "origin"]
 
 
 def test_sd_params_escaped_quote_and_dup_lastwins(spark):
@@ -122,48 +117,9 @@ def test_sd_params_escaped_quote_and_dup_lastwins(spark):
     assert df2.select(sd_params(F.col("sd")).alias("p")).collect()[0]["p"] == {}
 
 
-def test_rfc3164(spark):
-    r = _parse_one(spark, "<14>Jan  2 03:04:05 myhost sshd[4123]: Accepted password", parse_rfc3164)
-    assert r["rfc3164_matched"]
-    assert r["facility"] == "user" and r["severity"] == "info"
-    assert r["ts_text"] == "Jan  2 03:04:05"
-    assert r["hostname"] == "myhost" and r["tag"] == "sshd" and r["pid"] == 4123
-    assert r["msg"] == "Accepted password"
-    # pid-less tag, no colon content
-    r2 = _parse_one(spark, "<86>Dec 31 23:59:59 h su: pam session opened", parse_rfc3164)
-    assert r2["facility"] == "authpriv" and r2["severity"] == "info"
-    assert r2["tag"] == "su" and r2["pid"] is None
-    assert not _parse_one(spark, "no pri here", parse_rfc3164)["rfc3164_matched"]
-
-
-def test_rfc3164_matches_rendered_family3(spark, corpus):
-    """The engine's own rfc3164-family corpus lines (sources/tokenized
-    gen_corpus) are valid RFC 3164 — the protocol parse agrees with the
-    generator's fixed <14> PRI and host/tag fields."""
-    from super_speedy_syslog_searcher_spark.functions.codec import decode_tokens_udf
-
-    docs_pd, _, _ = corpus
-    docs = spark.createDataFrame(
-        docs_pd[docs_pd["source"].str.startswith("rfc3164.")].head(5)
-    )
-    lines = docs.select(
-        F.explode(F.split(decode_tokens_udf("tokens"), "\n")).alias("text")
-    )
-    out = parse_rfc3164(lines).filter(F.col("text").startswith("<"))
-    got = out.collect()
-    assert got, "rfc3164-family corpus produced no <PRI> lines"
-    for r in got:
-        assert r["rfc3164_matched"], r["text"]
-        assert r["pri"] == 14 and r["facility"] == "user" and r["severity"] == "info"
-        assert r["hostname"] == "HOST" and r["tag"] == "dropbear"
-
-
 def test_sd_escaped_bracket_in_value(spark):
     line = '<14>1 - h a p m [x k="a\\]b"][y z="1"] m'
     df = parse_rfc5424(spark.createDataFrame([(line,)], "text string"))
-    r = df.select(
-        F.col("sd"), sd_params(F.col("sd")).alias("p"), sd_ids(F.col("sd")).alias("ids")
-    ).collect()[0]
+    r = df.select(F.col("sd"), sd_params(F.col("sd")).alias("p")).collect()[0]
     assert r["sd"] == '[x k="a\\]b"][y z="1"]'
     assert r["p"] == {"k": "a\\]b", "z": "1"}
-    assert r["ids"] == ["x", "y"]

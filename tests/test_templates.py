@@ -8,7 +8,6 @@ import re
 
 from super_speedy_syslog_searcher_spark.operators.templates import (
     TEMPLATE_MASKS,
-    extract_template_params,
     mine_templates,
 )
 
@@ -51,13 +50,3 @@ class TestTemplates:
         want = collections.Counter(_ref_template(t) for t in texts)
         got = {r["template"]: r["n"] for r in mine_templates(df).collect()}
         assert got == dict(want)
-
-    def test_param_extraction(self, spark):
-        df = spark.createDataFrame(
-            [(1, "sshd[1234]: accepted id=42 from 10.1.2.3")],
-            "doc_id long, text string",
-        )
-        r = extract_template_params(df).collect()[0]
-        assert r["template"] == "sshd[<NUM>]: accepted id=<NUM> from <IP>"
-        assert list(r["params"]) == ["sshd[1234]:", "id=42", "10.1.2.3"]
-        assert r["n_params"] == 3

@@ -9,7 +9,6 @@ from pyspark.sql.window import Window
 from super_speedy_syslog_searcher_spark.operators.tokens import (
     _with_stream_start,
     assemble_sequences,
-    mixture_weights,
     pack_sequences,
     vocab_stats,
 )
@@ -145,38 +144,6 @@ class TestAssembleSequences:
         assert rows[("s2", 1)] == 1
 
 
-class TestMixtureWeights:
-    def _docs(self, spark, totals):
-        rows = [(f"d{s}{i}", s, [0] * n, n) for s, tot in totals.items() for i, n in enumerate([tot])]
-        return spark.createDataFrame(
-            rows, "doc_id string, source string, tokens array<int>, n_tok int"
-        )
-
-    def test_binding_source_rate_one_and_mixture_hit(self, spark):
-        # corpus: a=1000, b=1000 tokens; target 80/20 → b binds (1000/0.2
-        # = 5000 > 1000/0.8 = 1250): T = 1250, rate_a = 1.0, rate_b = 0.25
-        df = self._docs(spark, {"a": 1000, "b": 1000})
-        rows = {r["source"]: r for r in mixture_weights(df, {"a": 0.8, "b": 0.2}).collect()}
-        assert rows["a"]["rate"] == 1.0
-        assert rows["b"]["rate"] == 0.25
-        assert rows["a"]["expected_tokens"] == 1000.0
-        assert rows["b"]["expected_tokens"] == 250.0
-
-    def test_untargeted_sources_excluded(self, spark):
-        df = self._docs(spark, {"a": 100, "b": 100, "c": 100})
-        out = mixture_weights(df, {"a": 0.5, "b": 0.5})
-        assert sorted(r["source"] for r in out.collect()) == ["a", "b"]
-
-    def test_rates_never_exceed_one(self, spark):
-        df = self._docs(spark, {"a": 10, "b": 990})
-        rows = mixture_weights(df, {"a": 0.5, "b": 0.5}).collect()
-        for r in rows:
-            assert r["rate"] <= 1.0
-        # a is tiny and binds: everything scales down to 2·10 tokens
-        got = {r["source"]: r["expected_tokens"] for r in rows}
-        assert got == {"a": 10.0, "b": 10.0}
-
-
 class TestVocabStats:
     def test_counts(self, spark):
         df = _mk_docs(spark, [("a", "s", [1, 1, 2]), ("b", "s", [2, 3])])
@@ -278,32 +245,6 @@ class TestPackRandomizedReference:
         for (src, s), (n_tok, toks) in asm.items():
             last = max(q for (t, q) in per_source if t == src)
             assert n_tok == MAX_LEN or s == last
-
-
-class TestMixtureEdgeCases:
-    def test_zero_token_source_is_excluded_not_divide_by_zero(self, spark):
-        df = spark.createDataFrame(
-            [("d1", "a", [1, 2], 2), ("d2", "b", [], 0)],
-            "doc_id string, source string, tokens array<int>, n_tok int",
-        )
-        rows = {r["source"]: r for r in
-                mixture_weights(df, {"a": 0.5, "b": 0.5}).collect()}
-        # source b has zero tokens: T = min(2/0.5, 0/0.5) = 0 → every rate 0
-        # is the honest answer (cannot hit a 50% share from zero tokens)
-        assert rows["b"]["n_tok_total"] == 0
-        assert rows["b"]["rate"] == 0.0
-        assert rows["a"]["rate"] == 0.0
-        assert rows["a"]["expected_tokens"] == 0.0
-
-    def test_zero_share_target_excluded(self, spark):
-        df = spark.createDataFrame(
-            [("d1", "a", [1, 2], 2), ("d2", "b", [3], 1)],
-            "doc_id string, source string, tokens array<int>, n_tok int",
-        )
-        rows = {r["source"]: r for r in
-                mixture_weights(df, {"a": 1.0, "b": 0.0}).collect()}
-        assert sorted(rows) == ["a"]
-        assert rows["a"]["rate"] == 1.0
 
 
 class TestTemperatureTargets:
@@ -774,13 +715,13 @@ class TestSampleToMixture:
             mixture_sample_stats,
         )
 
-        df, _ = self._corpus(spark)
+        df, rows = self._corpus(spark)
         ppm = {"a": 450_000, "b": 350_000, "c": 200_000}
         stats = {r["source"]: r for r in mixture_sample_stats(df, ppm).collect()}
-        rates = {
-            r["source"]: r["rate"]
-            for r in mixture_weights(df, {k: v / 1e6 for k, v in ppm.items()}).collect()
-        }
+        # float rates: rate_s = share_s * T / n_tok_s, T = min_s n_tok_s / share_s
+        n_tok = {s: sum(n for _, src, _, n in rows if src == s) for s in ppm}
+        budget = min(n_tok[s] / (ppm[s] / 1e6) for s in ppm)
+        rates = {s: round(ppm[s] / 1e6 * budget / n_tok[s], 6) for s in ppm}
         for s, r in rates.items():
             assert abs(stats[s]["keep_buckets"] / 1_000_000 - r) <= 3e-6
 
@@ -1205,113 +1146,3 @@ class TestLossMaskProperty:
                     ds = sorted(s - lo for s in starts if lo <= s < hi)
                     want[(src, sid)] = (stream[lo:hi], mask[lo:hi], ds)
             assert got == want, f"seed={seed}"
-
-
-class TestReplicateForMixture:
-    def _docs(self, spark, n_per_src):
-        rows = [
-            (f"{s}{i:03d}", s, [1, 2, 3], 3)
-            for s, n in n_per_src.items()
-            for i in range(n)
-        ]
-        return spark.createDataFrame(
-            rows, "doc_id string, source string, tokens array<int>, n_tok int"
-        )
-
-    def test_copy_counts_match_python_twin(self, spark):
-        import hashlib
-
-        from super_speedy_syslog_searcher_spark.operators.tokens import (
-            replicate_for_mixture,
-        )
-
-        NB = 1000
-        rates = {"lo": 2.5, "mid": 1.0, "zero": 0.4}
-        df = self._docs(spark, {"lo": 40, "mid": 10, "zero": 20, "other": 5})
-        out = replicate_for_mixture(df, rates, n_buckets=NB).collect()
-
-        def bucket(d):
-            return int(hashlib.md5(d.encode()).hexdigest()[:8], 16) % NB
-
-        want = {}
-        for r in df.collect():
-            d, s = r["doc_id"], r["source"]
-            if s in rates:
-                rt = rates[s]
-                n = int(rt) + (1 if bucket(d) < round((rt - int(rt)) * NB) else 0)
-            else:
-                n = 1
-            for e in range(n):
-                want[f"{d}#e{e}"] = (s, e)
-        got = {r["doc_id"]: (r["source"], r["epoch"]) for r in out}
-        assert got == want
-        # statistical sanity: 'lo' upsampled 2-3x, 'zero' heavily downsampled
-        n_lo = sum(1 for k in got if k.startswith("lo"))
-        assert 80 <= n_lo <= 120
-        assert sum(1 for k in got if k.startswith("other")) == 5
-
-    def test_rate_guard_and_no_shuffle(self, spark):
-        import pytest as _pytest
-
-        from super_speedy_syslog_searcher_spark.operators.tokens import (
-            replicate_for_mixture,
-        )
-
-        df = self._docs(spark, {"a": 2})
-        with _pytest.raises(ValueError):
-            replicate_for_mixture(df, {"a": 100.0})
-        plan = (
-            replicate_for_mixture(df, {"a": 1.5})
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Exchange hashpartitioning" not in plan
-
-
-class TestCorpusProfile:
-    def test_small_scale_exact_and_error_bound(self, spark):
-        from pyspark.sql import functions as F
-
-        from super_speedy_syslog_searcher_spark.operators.tokens import corpus_profile
-
-        rows = []
-        for d in range(40):
-            src = "a" if d % 2 == 0 else "b"
-            rows.append((f"d{d:03d}", src, [int(x) for x in range((d * 13) % 50, (d * 13) % 50 + 30)]))
-        df = spark.createDataFrame(rows, "doc_id string, source string, tokens array<int>")
-        got = {r["source"]: r for r in corpus_profile(df, rsd=0.02).collect()}
-        exact = {
-            r["source"]: r
-            for r in df.select("source", "doc_id", F.explode("tokens").alias("t"))
-            .groupBy("source")
-            .agg(
-                F.countDistinct("t").alias("dt"),
-                F.countDistinct("doc_id").alias("dd"),
-                F.count("*").alias("nt"),
-            )
-            .collect()
-        }
-        for s in ("a", "b"):
-            g, e = got[s], exact[s]
-            assert g["n_docs"] == 20 and g["n_tok_total"] == e["nt"]
-            # HLL++ stays exact below its sparse threshold at this scale
-            assert abs(g["approx_distinct_tokens"] - e["dt"]) <= max(2, 0.1 * e["dt"])
-            assert abs(g["approx_distinct_docs"] - e["dd"]) <= max(2, 0.1 * e["dd"])
-            assert g["mean_doc_len"] == round(e["nt"] / 20, 4)
-
-    def test_sketch_path_partial_agg(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.tokens import corpus_profile
-
-        df = spark.range(500).selectExpr(
-            "cast(id as string) as doc_id",
-            "case when id % 2 = 0 then 'x' else 'y' end as source",
-            "transform(sequence(1, 20), i -> cast(id * 20 + i as int)) as tokens",
-        )
-        plan = corpus_profile(df)._jdf.queryExecution().executedPlan().toString()
-        # the sketch must ride the two-phase (partial/final) agg path
-        assert plan.count("HashAggregate") >= 2 or "ObjectHashAggregate" in plan
-        r = {x["source"]: x for x in corpus_profile(df, rsd=0.05).collect()}
-        # 250 docs x 20 unique tokens each = 5000 distinct per source
-        for s in ("x", "y"):
-            assert abs(r[s]["approx_distinct_tokens"] - 5000) <= 0.15 * 5000

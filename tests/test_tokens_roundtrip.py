@@ -1,4 +1,4 @@
-"""Tokenizer round-trips: decode_bpe / decode_unigram invert the encoders."""
+"""Tokenizer round-trips: decode_bpe inverts apply_bpe."""
 
 from __future__ import annotations
 
@@ -8,11 +8,8 @@ from pyspark.sql import functions as F
 
 from super_speedy_syslog_searcher_spark.operators.tokens import (
     apply_bpe,
-    apply_unigram,
     decode_bpe,
-    decode_unigram,
     train_bpe,
-    train_unigram,
 )
 
 
@@ -84,47 +81,3 @@ class TestBpeRoundtrip:
         docs, originals = _token_docs(spark, seed=13)
         dec = {r["doc_id"]: list(r["tokens"]) for r in decode_bpe(docs, []).collect()}
         assert dec == {k: list(v) for k, v in originals.items()}
-
-
-class TestUnigramRoundtrip:
-    def test_decode_inverts_encode_when_unk_free(self, spark):
-        texts = [
-            ("a", "abcabcababc"),
-            ("b", "cabcab"),
-            ("c", "aabbcc"),
-            ("d", "abc"),
-        ]
-        df = spark.createDataFrame(texts, "doc_id string, text string")
-        vocab, _ = train_unigram(df, vocab_size=8, max_piece_len=3)
-        enc = apply_unigram(df, vocab, max_piece_len=3, emit_ids=True)
-        dec = {
-            r["doc_id"]: (r["text"], r["n_unk"])
-            for r in decode_unigram(enc, vocab).collect()
-        }
-        for doc_id, text in texts:
-            assert dec[doc_id] == (text, 0), doc_id
-
-    def test_unk_documents_decode_null_and_counted(self, spark):
-        train = spark.createDataFrame(
-            [("a", "ababab"), ("b", "babab")], "doc_id string, text string"
-        )
-        vocab, _ = train_unigram(train, vocab_size=6, max_piece_len=2)
-        probe = spark.createDataFrame(
-            [("x", "abZab"), ("y", "abab")], "doc_id string, text string"
-        )
-        enc = apply_unigram(probe, vocab, max_piece_len=2, emit_ids=True)
-        dec = {r["doc_id"]: r for r in decode_unigram(enc, vocab).collect()}
-        assert dec["x"]["text"] is None and dec["x"]["n_unk"] >= 1
-        assert dec["y"]["text"] == "abab" and dec["y"]["n_unk"] == 0
-
-    def test_decoder_mirrors_encoder_id_rule_on_reordered_vocab(self, spark):
-        """The id is the vocab LIST's own position (the encoder's rule) —
-        a caller-reordered vocab must still roundtrip."""
-        df = spark.createDataFrame(
-            [("a", "abcabcab"), ("b", "cbacba")], "doc_id string, text string"
-        )
-        vocab, _ = train_unigram(df, vocab_size=6, max_piece_len=2)
-        reordered = list(reversed(vocab))
-        enc = apply_unigram(df, reordered, max_piece_len=2, emit_ids=True)
-        dec = {r["doc_id"]: r["text"] for r in decode_unigram(enc, reordered).collect()}
-        assert dec == {"a": "abcabcab", "b": "cbacba"}
