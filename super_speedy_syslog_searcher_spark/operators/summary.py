@@ -17,14 +17,22 @@ Two groundings of the same counters: ``source_summary`` /
 ``doc_pattern_hit_miss`` read the docs table plus the messages of the
 fused kernel — what ``run_pipeline`` has, since it never materializes
 lines — and give the same rows.
+
+``counter_preagg`` + ``counter_tables`` give those rows (and the per-sink
+``route.sink_counts``) once more, for a caller that wants all three
+tables at once: one small aggregate collected to the driver, from which
+each table is derived in Python.
 """
 
 from __future__ import annotations
+
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.codec import doc_line_stats
+from .filters import dt_after_or_before
 
 
 def source_summary(parsed_lines: DataFrame, messages: DataFrame) -> DataFrame:
@@ -127,6 +135,122 @@ def doc_pattern_hit_miss(docs: DataFrame, parsed: DataFrame) -> DataFrame:
         .filter(F.col("n") > 0)
         .withColumn("kind", F.when(F.col("pattern_id") >= 0, "hit").otherwise("miss"))
     )
+
+
+SINK_COUNTS_DDL = "sink_key string, messages bigint, lines bigint, bytes bigint, dt_first timestamp, dt_last timestamp"
+SUMMARY_DDL = (
+    "source string, lines_processed bigint, lines_with_dt bigint, lines_dropped bigint, "
+    "bytes_processed bigint, syslines bigint, dt_first timestamp, dt_last timestamp"
+)
+PATTERN_COUNTS_DDL = "source string, pattern_id int, n bigint, kind string"
+
+
+def counter_preagg(docs: DataFrame, labelled: DataFrame, dt_a=None, dt_b=None) -> DataFrame:
+    """Every ``--summary`` counter of one run in at most sources × patterns
+    × 2 rows: ONE union grouped by (source, sink_key, pattern_id,
+    in_window). The docs leg gives each source's lines and chars
+    (``doc_line_stats``, docs with lines only) with ``in_window`` NULL;
+    the message leg is ``labelled`` = ``enrich(parsed, enrichment)`` —
+    every message of the kernel, before the -a/-b window, with its sink —
+    flagged by the window predicate of ``filters.dt_between``.
+    ``ts_min``/``ts_max`` are epoch microseconds, so the driver reads
+    instants, not local wall-clock times."""
+    lines, chars = doc_line_stats(F.col("tokens"))
+    doc_leg = docs.select(
+        "source",
+        F.lit(None).cast("string").alias("sink_key"),
+        F.lit(None).cast("int").alias("pattern_id"),
+        F.lit(None).cast("boolean").alias("in_window"),
+        lines.alias("n_lines"),
+        chars.cast("long").alias("n_chars"),
+        F.lit(None).cast("timestamp").alias("ts"),
+    ).filter(F.col("n_lines") > 0)
+    # a NULL ts fails the window as dt_between's filter drops it
+    in_window = F.coalesce(dt_after_or_before(F.col("ts"), dt_a, dt_b), F.lit(False))
+    msg_leg = labelled.select(
+        "source", "sink_key", "pattern_id", in_window.alias("in_window"), "n_lines", "n_chars", "ts"
+    )
+    return (
+        doc_leg.unionByName(msg_leg)
+        .groupBy("source", "sink_key", "pattern_id", "in_window")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum("n_lines").alias("lines"),
+            F.sum("n_chars").alias("chars"),
+            F.unix_micros(F.min("ts")).alias("ts_min"),
+            F.unix_micros(F.max("ts")).alias("ts_max"),
+        )
+    )
+
+
+def counter_tables(rows) -> dict[str, tuple[list[tuple], str]]:
+    """The three counter tables, as ``(rows, ddl)``, from the collected rows
+    of :func:`counter_preagg`. Each mirrors a DataFrame function row for row
+    and type for type:
+
+    - ``sink_counts`` ≙ ``route.sink_counts`` over the windowed, enriched
+      messages: the in-window message rows per sink;
+    - ``summary`` ≙ :func:`doc_source_summary`: one row per source, the
+      NULL-source group included, then the rollup's grand-total row (none
+      when there is no row at all, as ``rollup`` gives none);
+    - ``pattern_counts`` ≙ :func:`doc_pattern_hit_miss`: hits per
+      (source, pattern_id), and misses (pattern_id = -1) = lines − hits,
+      rows with n > 0 only.
+    """
+    sinks: dict = {}  # sink_key -> [messages, lines, bytes, ts_min, ts_max]
+    sources: dict = {}  # source -> [lines, with_dt, member_lines, chars, syslines, ts_min, ts_max]
+    hits: dict = {}  # (source, pattern_id) -> n
+    for r in rows:
+        src = sources.setdefault(r["source"], [0, 0, 0, 0, 0, None, None])
+        miss = (r["source"], -1)
+        if r["in_window"] is None:  # docs leg
+            src[0] += r["lines"]
+            src[3] += r["chars"]
+            hits[miss] = hits.get(miss, 0) + r["lines"]
+            continue
+        key = (r["source"], r["pattern_id"])
+        hits[key] = hits.get(key, 0) + r["n"]
+        hits[miss] = hits.get(miss, 0) - r["n"]
+        src[1] += r["n"]
+        if r["in_window"]:
+            src[2] += r["lines"]
+            src[4] += r["n"]
+            _widen(src, r["ts_min"], r["ts_max"])
+            sink = sinks.setdefault(r["sink_key"], [0, 0, 0, None, None])
+            sink[0] += r["n"]
+            sink[1] += r["lines"]
+            sink[2] += r["chars"]
+            _widen(sink, r["ts_min"], r["ts_max"])
+    if sources:
+        total = [0, 0, 0, 0, 0, None, None]
+        for acc in sources.values():
+            total[:5] = [t + a for t, a in zip(total[:5], acc)]
+            _widen(total, acc[5], acc[6])
+        summary = [*sources.items(), (None, total)]
+    else:
+        summary = []
+    return {
+        "sink_counts": ([(k, m, n, b, _utc(lo), _utc(hi)) for k, (m, n, b, lo, hi) in sinks.items()], SINK_COUNTS_DDL),
+        "summary": (
+            [(s, n, d, n - m, c, k, _utc(lo), _utc(hi)) for s, (n, d, m, c, k, lo, hi) in summary],
+            SUMMARY_DDL,
+        ),
+        "pattern_counts": (
+            [(s, p, n, "hit" if p is not None and p >= 0 else "miss") for (s, p), n in hits.items() if n > 0],
+            PATTERN_COUNTS_DDL,
+        ),
+    }
+
+
+def _widen(acc: list, lo: int | None, hi: int | None) -> None:
+    """Stretch the (ts_min, ts_max) in ``acc``'s last two slots over [lo, hi]."""
+    if lo is not None:
+        acc[-2] = lo if acc[-2] is None else min(acc[-2], lo)
+        acc[-1] = hi if acc[-1] is None else max(acc[-1], hi)
+
+
+def _utc(micros: int | None) -> datetime | None:
+    return None if micros is None else datetime(1970, 1, 1, tzinfo=timezone.utc) + timedelta(microseconds=micros)
 
 
 def rate_anomalies(

@@ -12,10 +12,12 @@ The Spark lifecycle equivalent of ``s4 <PATHS> -a A -b B`` (SURVEY §3.3):
     write partitioned by sink_key → summary aggregates.
 
 With ``out_dir`` the routed write runs first: it is the first Spark job
-of the call, and the counter plans are built only after its commit, so
-readers of the routed sinks wait for nothing else. The three counter
-tables (``sink_counts``, ``summary``, ``pattern_counts``) are then
-written together, one thread each.
+of the call, and the counter plan is built only after its commit, so
+readers of the routed sinks wait for nothing else. Then ONE small
+pre-aggregate (``summary.counter_preagg``) is collected, and the three
+counter tables (``sink_counts``, ``summary``, ``pattern_counts``) are
+derived from its rows on the driver and each written there as one
+parquet file plus ``_SUCCESS``: no Spark job writes a counter table.
 
 There is no sessionize or year-fix shuffle: every doc is whole inside
 one batch. The wide dependencies are the merge's range exchange and the
@@ -37,7 +39,6 @@ import time
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,8 +48,9 @@ from ..operators.enrich import enrich
 from ..operators.filters import dt_between
 from ..operators.merge import global_sort, with_source_order
 from ..operators.route import route_write, sink_counts
-from ..operators.summary import doc_pattern_hit_miss, doc_source_summary
-from ..session import local_df
+from ..operators.summary import counter_preagg, counter_tables, doc_pattern_hit_miss, doc_source_summary
+from ..session import arrow_table, local_df
+from ..sources.iceberg import write_parquet_file
 
 
 @dataclass
@@ -79,7 +81,8 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Full run. Returns the named intermediate/​output DataFrames; if
     ``out_dir`` is given, routed messages are fanned out to
-    ``out_dir/routed`` and summaries to ``out_dir/…``.
+    ``out_dir/routed`` and summaries to ``out_dir/…``, and the returned
+    counter tables are ``local_df`` tables of the written values.
 
     ``parsed_lines`` is the persisted kernel output: every message, before
     the -a/-b window (its grain is messages, not lines — the kernel never
@@ -90,51 +93,46 @@ def run_pipeline(
     # output — persist it so the Python stage runs once
     parsed = parse_messages_fused(docs, default_tz=cfg.default_tz, reference_year=cfg.reference_year).persist()
     messages = dt_between(parsed, cfg.dt_a, cfg.dt_b)
-    enriched = with_source_order(enrich(messages, enrichment), cfg.sources_in_order)
+    # enrich before the window: the counter pre-aggregate reads every
+    # message with its sink, and the optimizer pushes the window below the
+    # broadcast join, so the merge's plan is the same
+    labelled = enrich(parsed, enrichment)
+    enriched = with_source_order(dt_between(labelled, cfg.dt_a, cfg.dt_b), cfg.sources_in_order)
     merged = global_sort(enriched, num_partitions=cfg.num_partitions)
     try:
         if out_dir:
             # the routed sinks are what readers wait for: nothing runs or
             # is analysed ahead of their commit
             route_write(merged.drop("source_order"), os.path.join(out_dir, "routed"))
-        result = {
-            "parsed_lines": parsed,
-            "messages": messages,
-            "enriched": enriched,
-            "merged": merged,
-            "sink_counts": sink_counts(enriched),
-            "summary": doc_source_summary(docs, parsed, messages),
-            "pattern_counts": doc_pattern_hit_miss(docs, parsed),
-        }
-        if out_dir:
-            _write_together({name: result[name] for name in ("sink_counts", "summary", "pattern_counts")}, out_dir)
+            counters = _write_counters(docs, labelled, cfg, out_dir)
+        else:
+            counters = {
+                "sink_counts": sink_counts(enriched),
+                "summary": doc_source_summary(docs, parsed, messages),
+                "pattern_counts": doc_pattern_hit_miss(docs, parsed),
+            }
     except BaseException:
         parsed.unpersist()  # the caller gets no result to release it from
         raise
-    return result
+    return {"parsed_lines": parsed, "messages": messages, "enriched": enriched, "merged": merged, **counters}
 
 
-def _write_together(tables: dict[str, DataFrame], out_dir: str) -> None:
-    """Write each table to ``out_dir/<name>``, all at once, one thread per
-    table. ``InheritableThread`` carries the caller's job group and local
-    properties into each write. Every write finishes before the first
-    error (in table order) is re-raised."""
-    errors: dict[str, Exception] = {}
-
-    def write(name: str, df: DataFrame) -> None:
+def _write_counters(docs: DataFrame, labelled: DataFrame, cfg: PipelineConfig, out_dir: str) -> dict[str, DataFrame]:
+    """Collect the counter pre-aggregate (one action), write each counter
+    table to ``out_dir/<name>`` from the driver and return them as
+    ``local_df`` tables. Every table is attempted; the first error, in
+    table order, is re-raised after the last write."""
+    spark = docs.sparkSession
+    tables = counter_tables(counter_preagg(docs, labelled, cfg.dt_a, cfg.dt_b).collect())
+    error = None
+    for name, (rows, ddl) in tables.items():
         try:
-            df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
-        except Exception as e:  # re-raised on the caller's thread below
-            errors[name] = e
-
-    threads = [InheritableThread(target=write, args=item) for item in tables.items()]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    for name in tables:
-        if name in errors:
-            raise errors[name]
+            write_parquet_file(spark, arrow_table(rows, ddl), os.path.join(out_dir, name))
+        except Exception as e:  # re-raised once every table was attempted
+            error = error or e
+    if error is not None:
+        raise error
+    return {name: local_df(spark, rows, ddl) for name, (rows, ddl) in tables.items()}
 
 
 # --------------------------------------------------------------------------

@@ -10,6 +10,7 @@ to UTC and keep the original offset out-of-band).
 from __future__ import annotations
 
 import os
+from datetime import timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -60,11 +61,13 @@ def get_spark(
 
 
 def warm_python_workers(spark: SparkSession, tasks: int | None = None) -> None:
-    """Spin up the executor Python-worker pool and pre-import the heavy
-    modules (pandas/numpy + the parse kernel) so the first real UDF stage
-    doesn't pay 32 concurrent cold imports. Call from benchmarks/jobs
-    before the timed region; workers are reused afterwards
-    (spark.python.worker.reuse)."""
+    """Meant to start the executor Python-worker pool and pre-import the
+    parse kernel before a timed region; in fact it starts no Python worker.
+    ``count()`` needs no column, so Catalyst prunes the pandas UDF from the
+    plan and the job only counts ``n`` ids. The first UDF stage after it
+    still pays the Python daemon's cold start. A warm-up that evaluates the
+    UDF would move that cost into the benchmark's ``setup_s``, so it belongs
+    with the benchmark realignment in ROADMAP direction 1."""
     import pandas
 
     from pyspark.sql import functions as F
@@ -88,6 +91,14 @@ def local_df(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     an Arrow table is shipped to the JVM once and scans as a
     ``LocalTableScan``. Naive datetimes are read as local wall-clock time,
     as ``createDataFrame(list)`` and ``Row`` timestamps do."""
+    from pyspark.sql.types import StructType
+
+    return spark.createDataFrame(arrow_table(rows, ddl), StructType.fromDDL(ddl))
+
+
+def arrow_table(rows: list[tuple], ddl: str):
+    """``rows`` as a ``pyarrow.Table`` with the Arrow form of the ``ddl``
+    schema; naive datetimes are local wall-clock time."""
     import pyarrow as pa
 
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -98,8 +109,9 @@ def local_df(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     columns = [list(c) for c in zip(*rows)] if rows else [[] for _ in schema.fields]
     for field, values in zip(schema.fields, columns):
         if isinstance(field.dataType, TimestampType):
-            values[:] = [v.astimezone() if v is not None and v.tzinfo is None else v for v in values]
-    table = pa.Table.from_arrays(
+            # pyarrow keeps the wall-clock time of a non-UTC offset, so
+            # every value is handed over as a UTC instant
+            values[:] = [None if v is None else v.astimezone(timezone.utc) for v in values]
+    return pa.Table.from_arrays(
         [pa.array(c, type=t) for c, t in zip(columns, arrow_schema.types)], schema=arrow_schema
     )
-    return spark.createDataFrame(table, schema)

@@ -107,6 +107,31 @@ def fs_delete(spark: SparkSession, path: str) -> None:
         fs.delete(jpath, True)
 
 
+def write_parquet_file(spark: SparkSession, table, path: str) -> None:
+    """Replace the directory ``path`` with the ``pyarrow.Table`` ``table`` as
+    one ``part-00000.parquet`` plus ``_SUCCESS``, written from the driver:
+    no Spark job, for tables of a few dozen rows. The file is written under
+    a hidden name and renamed into place, and the marker comes last, so a
+    reader never sees a partial file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    fs, jpath, jvm = _hadoop_fs(spark, path)
+    if fs.exists(jpath):
+        fs.delete(jpath, True)
+    staged = jvm.org.apache.hadoop.fs.Path(jpath, ".part-00000.parquet.tmp")
+    out = fs.create(staged, True)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(staged, jvm.org.apache.hadoop.fs.Path(jpath, "part-00000.parquet")):
+        raise IOError(f"rename of the staged parquet file under {path} failed")
+    fs.create(jvm.org.apache.hadoop.fs.Path(jpath, "_SUCCESS"), True).close()
+
+
 def partition_file_stats(
     spark: SparkSession, base: str, prefix: str
 ) -> dict[str, list[tuple[str, int]]]:

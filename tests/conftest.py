@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import time
 from pathlib import Path
 
 import pytest
@@ -33,3 +34,18 @@ def corpus():
     from super_speedy_syslog_searcher_spark.sources.tokenized import gen_corpus
 
     return gen_corpus(n_docs=60, lines_per_doc=12, n_sources=12, seed=42)
+
+
+@pytest.fixture
+def driver_tz(monkeypatch):
+    """``driver_tz(zone)`` puts the driver process in ``zone`` (``TZ`` +
+    ``tzset``): ``collect()`` then returns naive wall-clock datetimes of that
+    zone. The zone is restored after the test."""
+
+    def set_zone(zone: str) -> None:
+        monkeypatch.setenv("TZ", zone)
+        time.tzset()
+
+    yield set_zone
+    monkeypatch.undo()
+    time.tzset()

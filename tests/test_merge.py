@@ -134,17 +134,25 @@ def test_run_pipeline_plans_read_no_python_rdd(spark, corpus, tmp_path):
         res["parsed_lines"].unpersist()
 
 
-def test_local_df_keeps_schema_and_values(spark):
+def test_local_df_keeps_schema_and_values(spark, driver_tz):
     """``local_df`` scans as a LocalTableScan with exactly the DDL schema and
     the values ``createDataFrame(list)`` gives, naive (local wall-clock) and
-    aware timestamps and NULLs included; no rows still types every column."""
+    aware timestamps (UTC and another offset) and NULLs included, in a UTC
+    and a non-UTC driver zone; no rows still types every column."""
     from super_speedy_syslog_searcher_spark.session import local_df
 
     ddl = "_pid int, source string, _base timestamp"
-    rows = [(0, "a", BASE), (1, None, datetime(2024, 1, 5, 3, 4, 5, 123456)), (2, "b", None)]
-    got = local_df(spark, rows, ddl)
-    assert got.schema == spark.createDataFrame([], ddl).schema
-    assert got.collect() == spark.createDataFrame(rows, ddl).collect()
+    rows = [
+        (0, "a", BASE),
+        (1, None, datetime(2024, 1, 5, 3, 4, 5, 123456)),
+        (2, "b", None),
+        (3, "c", datetime(2024, 7, 1, 12, tzinfo=timezone(timedelta(hours=5, minutes=30)))),
+    ]
+    for zone in ("UTC", "America/New_York"):
+        driver_tz(zone)
+        got = local_df(spark, rows, ddl)
+        assert got.schema == spark.createDataFrame([], ddl).schema
+        assert got.collect() == spark.createDataFrame(rows, ddl).collect(), zone
     assert "LocalTableScan" in got._jdf.queryExecution().executedPlan().toString()
     order = local_df(spark, [], "source string, source_order int")
     assert order.schema.simpleString() == "struct<source:string,source_order:int>" and order.count() == 0

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import threading
+from collections import Counter
 from datetime import datetime, timezone
 
 import pandas as pd
@@ -308,16 +309,16 @@ def test_failed_counter_write_lets_the_others_commit(spark, corpus, tmp_path, mo
     """A counter table whose write fails is re-raised only after the other
     two have committed; no writer thread and no cached kernel output is
     left behind."""
-    from pyspark.sql.readwriter import DataFrameWriter
+    from super_speedy_syslog_searcher_spark.plans import pipeline
 
-    real = DataFrameWriter.parquet
+    real = pipeline.write_parquet_file
 
-    def parquet(self, path, *args, **kwargs):
+    def write_parquet_file(spark, table, path):
         if path.endswith(os.sep + "summary"):
             raise RuntimeError("summary sink unavailable")
-        return real(self, path, *args, **kwargs)
+        return real(spark, table, path)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(pipeline, "write_parquet_file", write_parquet_file)
     out = str(tmp_path / "out")
     threads = threading.active_count()
     cached = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
@@ -329,3 +330,98 @@ def test_failed_counter_write_lets_the_others_commit(spark, corpus, tmp_path, mo
     assert not os.path.exists(os.path.join(out, "summary"))
     assert threading.active_count() == threads
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == cached
+
+
+def test_counter_tables_come_from_one_collect(spark, corpus, tmp_path, monkeypatch):
+    """After the routed write, run_pipeline(out_dir=…) runs only the jobs of
+    one collect, the counter pre-aggregate: no Spark job writes a counter
+    table."""
+    from super_speedy_syslog_searcher_spark.plans import pipeline
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"counters/{tmp_path.name}"
+    routed_jobs = []
+    real = pipeline.route_write
+
+    def route_write(*args, **kwargs):
+        real(*args, **kwargs)
+        routed_jobs.extend(tracker.getJobIdsForGroup(group))
+
+    monkeypatch.setattr(pipeline, "route_write", route_write)
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        res = _routed_run(spark, corpus, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    res["parsed_lines"].unpersist()
+    counter_jobs = set(tracker.getJobIdsForGroup(group)) - set(routed_jobs)
+    assert routed_jobs and counter_jobs
+    stages = {tracker.getStageInfo(s).name for j in counter_jobs for s in tracker.getJobInfo(j).stageIds}
+    assert len(stages) == 1 and next(iter(stages)).startswith(f"collect at {pipeline.__file__}:"), stages
+
+
+def _assert_counter_tables_equal_lazy(spark, docs, lookup, cfg, out) -> dict[str, list[tuple]]:
+    """run_pipeline(out_dir=…)'s written and returned counter tables hold the
+    rows (as multisets) and dtypes of the lazy DataFrame counters over the
+    same run. Returns the written rows per table."""
+    from super_speedy_syslog_searcher_spark.operators.route import sink_counts
+    from super_speedy_syslog_searcher_spark.operators.summary import doc_pattern_hit_miss, doc_source_summary
+
+    res = run_pipeline(docs, lookup, cfg, out_dir=out)
+    try:
+        lazy = {
+            "sink_counts": sink_counts(res["enriched"]),
+            "summary": doc_source_summary(docs, res["parsed_lines"], res["messages"]),
+            "pattern_counts": doc_pattern_hit_miss(docs, res["parsed_lines"]),
+        }
+        written = {}
+        for name, want in lazy.items():
+            want_rows = Counter(tuple(r) for r in want.collect())
+            back = spark.read.parquet(os.path.join(out, name))
+            for got in (back, res[name]):
+                assert got.dtypes == want.dtypes, name
+                assert Counter(tuple(r) for r in got.collect()) == want_rows, name
+            written[name] = [tuple(r) for r in back.collect()]
+        return written
+    finally:
+        res["parsed_lines"].unpersist()
+
+
+def test_written_counter_tables_equal_the_lazy_counters(spark, corpus, tmp_path, driver_tz):
+    """With an -a/-b window, a NULL-source doc, a doc without tokens, a doc
+    whose first lines carry no datetime and a source the enrichment table
+    does not list, under a non-UTC driver zone with DST."""
+    driver_tz("America/New_York")
+    docs_pd, enrich_pd, golden = corpus
+    extra = [
+        ("nullsrc/0", None, "(2023/06/01 12:00:01.1) ../a.c:1(x)\n(2023/06/01 12:00:02.1) ../a.c:2(x)"),
+        ("empty/0", "empty.000", ""),
+        ("lead/0", "lead.000", "no datetime here\nnor here\n(2023/06/01 12:30:00.5) ../b.c:3(y)\ncontinued"),
+        ("unlisted/0", "unlisted.000", "(2023/06/01 13:00:00.2) ../c.c:4(z)\n"),
+    ]
+    docs = spark.createDataFrame(docs_pd, schema=DOCS_SCHEMA).unionByName(_text_docs(spark, extra))
+    lookup = spark.createDataFrame(enrich_pd, schema=ENRICH_SCHEMA)
+    ts = golden["ts_expect"].sort_values()
+    cfg = PipelineConfig(
+        reference_year=REFERENCE_YEAR,
+        dt_a=ts.iloc[len(ts) // 3].to_pydatetime(),
+        dt_b=ts.iloc[2 * len(ts) // 3].to_pydatetime(),
+    )
+    written = _assert_counter_tables_equal_lazy(spark, docs, lookup, cfg, str(tmp_path / "out"))
+    summary = {r[0]: r for r in written["summary"] if r[0] is not None}
+    assert sum(r[0] is None for r in written["summary"]) == 2  # the NULL-source group and the grand total
+    # 4 lines, 1 with a datetime, the 2 ahead of it dropped
+    assert summary["lead.000"][1:4] == (4, 1, 2) and "empty.000" not in summary
+    assert "unknown.info" in {r[0] for r in written["sink_counts"]}
+
+
+def test_counter_tables_of_an_empty_docs_table(spark, corpus, tmp_path):
+    """No docs: every counter table is empty, the summary without a
+    grand-total row, as ``rollup`` gives none."""
+    lookup = spark.createDataFrame(corpus[1], schema=ENRICH_SCHEMA)
+    docs = spark.createDataFrame([], DOCS_SCHEMA)
+    written = _assert_counter_tables_equal_lazy(
+        spark, docs, lookup, PipelineConfig(reference_year=REFERENCE_YEAR), str(tmp_path / "out")
+    )
+    assert written == {"sink_counts": [], "summary": [], "pattern_counts": []}
