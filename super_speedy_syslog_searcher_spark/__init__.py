@@ -13,7 +13,7 @@ functions/   token codec, DTPD datetime-pattern table, vectorized parse,
              text-analysis column expressions
 operators/   sessionize, year-inference, dt filters, enrichment join,
              global merge sort, routing/fan-out, summary aggregates,
-             dedup, similarity search, multimodal plumbing
+             dedup, similarity search, media header metadata
 sources/     file-type catalog rules, synthetic tokenized corpus generator,
              fixed-struct (utmpx-family) decoder, journald export decoder,
              evtx-analogue decoder

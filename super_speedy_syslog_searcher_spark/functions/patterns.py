@@ -101,7 +101,6 @@ HOUR = r"(?P<hour>[01]\d|2[0-4]|\d)"
 MIN = r"(?P<minute>[0-5]\d)"
 SEC = r"(?P<second>[0-5]\d|60)"
 FRAC = r"(?P<frac>\d{1,9})"
-FRAC3 = r"(?P<frac>\d{3})"
 # numeric tz: ±HHMM | ±HH:MM | ±HH | Z; sign may be U+2212 (CGP_TZz)
 TZNUM = "(?P<tz>[+\\-\u2212][012]\\d(?::?[0-5]\\d)?|Z)"
 # named tz: 2-5 letters, resolved (or rejected) via tzmap — the word
@@ -119,7 +118,6 @@ LEVELS = (
 PRI = r"<\d{1,3}>"  # RFC 3164/5424 priority; max 191 (rsyslog LOG_MAXPRI)
 LB = r"[\[\(\{<]"  # left bracket family accepted by the reference
 RB = r"[\]\)\}>]"
-AMPM = r"(?P<ampm>(?i:AM|PM))"
 B12 = r"[ \t]{1,2}"  # RP_BLANK12
 # trailing guards (reference RP_NODIGIT / RP_NOALNUM / RP_NOALPHA as
 # zero-width lookaheads — nothing outside the dt group is consumed)
@@ -827,8 +825,6 @@ DATETIME_PARSE_DATAS: list[DTPD] = [
 
 for _i, _p in enumerate(DATETIME_PARSE_DATAS):
     object.__setattr__(_p, "pattern_id", _i)  # stable ids = table index
-
-PATTERN_BY_NAME = {p.name: p for p in DATETIME_PARSE_DATAS}
 
 # dummy year for no-year formats (reference datetime.rs:146-155)
 DUMMY_YEAR = 1972

@@ -61,7 +61,6 @@ from pyspark.sql.window import Window
 EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 IPV4_RE = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
 PHONE_RE = "\\b555-\\d{4}\\b"
-URL_RE = "https?://[^/ ]+[^ ]*"
 URL_DOMAIN_RE = "https?://([^/ ]+)"
 
 

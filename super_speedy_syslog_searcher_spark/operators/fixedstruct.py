@@ -71,9 +71,8 @@ LAYOUTS = [
 ]
 LAYOUT_BY_NAME = {l.name: l for l in LAYOUTS}
 
-# historical aliases (round-1 synthetic names) → real reference layouts
+# the layout a source without an elected one decodes with
 UTMPX = LAYOUT_BY_NAME["linux_x86_utmpx"]
-UTMP32 = LAYOUT_BY_NAME["linux_x86_acct_v3"]
 
 
 def pack_records(layout: Layout, ut_type: int, pid: int, user: str, tv_sec: int, tv_usec: int) -> bytes:

@@ -56,7 +56,6 @@ HEADER_INCOMPATIBLE_COMPRESSED_ZSTD = 1 << 3
 HEADER_INCOMPATIBLE_COMPACT = 1 << 4
 
 OBJECT_DATA = 1
-OBJECT_FIELD = 2
 OBJECT_ENTRY = 3
 OBJECT_DATA_HASH_TABLE = 4
 OBJECT_FIELD_HASH_TABLE = 5
@@ -78,7 +77,6 @@ _HEADER_FIXED = struct.Struct("<8sIIB7x16s16s16s16sQQQQQQQQQQQQQQQ")
 _HEADER_FIXED_SIZE = _HEADER_FIXED.size  # 208
 
 KEY_SOURCE_REALTIME = "_SOURCE_REALTIME_TIMESTAMP"
-KEY_REALTIME = "__REALTIME_TIMESTAMP"
 
 _DATA_PAYLOAD_OFF_REGULAR = 48  # hash..n_entries, 6×u64
 _DATA_PAYLOAD_OFF_COMPACT = 56  # + tail_entry_array_offset u32 + n u32

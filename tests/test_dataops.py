@@ -443,17 +443,18 @@ class TestLayoutElection:
 
     def test_mixed_layouts_elected_per_source(self, spark):
         from super_speedy_syslog_searcher_spark.operators.fixedstruct import (
-            UTMP32,
+            LAYOUT_BY_NAME,
             UTMPX,
             decode_fixedstruct,
             elect_layouts,
             pack_records,
         )
 
+        acct_v3 = LAYOUT_BY_NAME["linux_x86_acct_v3"]
         rows = []
         for i in range(12):
             rows.append(("dx", "big.src", i, bytearray(pack_records(UTMPX, 2, 100 + i, f"ux{i}", 1000 + i, 0))))
-            rows.append(("dy", "small.src", i, bytearray(pack_records(UTMP32, 3, 200 + i, f"uy{i}", 2000 + i, 0))))
+            rows.append(("dy", "small.src", i, bytearray(pack_records(acct_v3, 3, 200 + i, f"uy{i}", 2000 + i, 0))))
         df = spark.createDataFrame(rows, "doc_id string, source string, record_no int, record binary")
         elected = elect_layouts(df, doc_sample_mod=1)
         assert elected == {"big.src": "linux_x86_utmpx", "small.src": "linux_x86_acct_v3"}
@@ -928,68 +929,3 @@ class TestDedupReport:
         assert r["n_dropped_docs"] == 0 and r["n_clusters"] == 1
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Window" not in plan
-
-
-class TestResizeStub:
-    def test_resize_plumbing_and_containment(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.multimodal import (
-            build_jpeg,
-            build_png,
-            parse_image_header,
-            resize_stub,
-        )
-
-        rows = [
-            ("a", bytearray(build_png(640, 480))),
-            ("b", bytearray(build_jpeg(100, 50))),
-            ("c", bytearray(b"not an image")),
-            ("d", None),
-        ]
-        df = spark.createDataFrame(rows, "media_id string, payload binary")
-        got = {r["media_id"]: r for r in resize_stub(df, 224, 224).collect()}
-        assert got["a"]["ok"] and (got["a"]["src_width"], got["a"]["src_height"]) == (640, 480)
-        assert (got["a"]["width"], got["a"]["height"]) == (224, 224)
-        assert got["a"]["scale_x"] == round(224 / 640, 6)
-        # the stub payload re-parses at the target dimensions
-        assert parse_image_header(bytes(got["a"]["payload"]))[:2] == (224, 224)
-        assert got["b"]["kind"] == "jpeg" and got["b"]["ok"]
-        assert not got["c"]["ok"] and got["c"]["payload"] is None
-        assert not got["d"]["ok"]
-
-    def test_feature_stub_composes_with_similarity(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.multimodal import (
-            build_png,
-            embed_features_stub,
-        )
-        from super_speedy_syslog_searcher_spark.operators.similarity import cosine_topk
-
-        # two identical payloads + one different: the stub embedding must
-        # make the duplicate pair each other's top hit through the REAL
-        # ANN operator
-        pay1 = bytearray(build_png(64, 64) + b"xyz" * 40)
-        pay3 = bytearray(build_png(9, 9) + bytes(range(256)) * 2)
-        df = spark.createDataFrame(
-            [("m1", pay1), ("m2", bytearray(bytes(pay1))), ("m3", pay3)],
-            "media_id string, payload binary",
-        )
-        feats = embed_features_stub(df, dim=32).cache()
-        ids = {r["media_id"]: r["vec_id"] for r in feats.collect()}
-        corpus = feats.select("vec_id", "vec")
-        queries = feats.filter(F.col("media_id") == "m1").select("vec_id", "vec")
-        top = cosine_topk(corpus, queries, k=2, vec_col="vec").collect()
-        by_rank = {r["rank"]: r["neighbor_id"] for r in top}
-        # identical payload -> cosine 1 -> m2 is the rank-1 neighbor
-        assert by_rank[1] == ids["m2"]
-        assert by_rank[2] == ids["m3"]
-
-    def test_feature_stub_deterministic(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.multimodal import (
-            embed_features_stub,
-        )
-
-        df = spark.createDataFrame(
-            [("m1", bytearray(b"payload bytes"))], "media_id string, payload binary"
-        )
-        a = embed_features_stub(df, dim=16).collect()[0]
-        b = embed_features_stub(df.repartition(4), dim=16).collect()[0]
-        assert list(a["vec"]) == list(b["vec"]) and a["vec_id"] == b["vec_id"]

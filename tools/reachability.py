@@ -1,4 +1,5 @@
-"""Caller map of the package: print every top-level def no root reaches.
+"""Caller map of the package: print every top-level def and constant no
+root reaches.
 
 Roots are the code that runs outside the tests:
 
@@ -14,14 +15,16 @@ The map is name-level and uses only ``ast``. A package top-level def or
 constant is reached when a root file, or the body of a reached def or
 constant, mentions its name as a ``Name``, an ``Attribute`` or an imported
 name (``from m import a as b`` also links ``b`` to ``a``). Names are not
-resolved to modules, so one mention reaches every def of that name: the
-printed list is a lower bound on what is dead. Module-level statements
-other than defs, constants and imports run on import, so they count as
-roots too.
+resolved to modules, so one mention reaches every def or constant of that
+name: the printed list is a lower bound on what is dead. Module-level
+statements other than defs, constants and imports run on import, so they
+count as roots too.
 
-An unreached def stays only if it is listed in ``KEPT`` with its reason.
-``tests/test_reachability.py`` asserts the unreached set equals
-``set(KEPT)``, which also catches a stale entry.
+A constant is a top-level assignment target; dunder names such as
+``__all__`` are not reported. An unreached def or constant stays only if
+it is listed in ``KEPT`` with its reason. ``tests/test_reachability.py``
+asserts the unreached set equals ``set(KEPT)``, which also catches a stale
+entry.
 
 Usage: python tools/reachability.py   (exit 1 when the set differs from KEPT)
 """
@@ -36,11 +39,11 @@ PACKAGE = "super_speedy_syslog_searcher_spark"
 ROOT_FILES = ("__spark_entry__.py", "bench.py")
 ROOT_DIRS = ("perfbench", "tools", f"{PACKAGE}/plans", f"{PACKAGE}/streaming")
 
-# Unreached defs kept on purpose, keyed "module.name" relative to the package.
+# Unreached defs and constants kept on purpose, keyed "module.name" relative
+# to the package.
 # (a) s4 parity: implements an s4 behaviour the reference documents.
 # (b) test reference: a test checks a reached def against it.
 # (c) test fixture: builds inputs for the tests.
-# (d) deferred: slated for deletion in a prune of its own (see _MEDIA below).
 KEPT = {
     # s4 reads gz/bz2/lz4/xz/tar inputs transparently (SURVEY S4/S5)
     "sources.compressed.sniff_codec": "(a) s4 parity: codec sniffed from magic bytes",
@@ -68,37 +71,21 @@ KEPT = {
     "sources.tokenized.gen_year_rollover_doc": "(c) test fixture: year-rollover doc and golden",
     "functions.lz4_pure.lz4_frame_compress_stored": "(c) test fixture: .lz4 inputs",
     "functions.codec.decode_tokens_array": "(c) test fixture: decodes a token array in asserts",
-}
-
-# The media codec stack: pure-Python PNG/BMP/JPEG/GIF/WAV codecs and the
-# multimodal stages built on them. No root reaches it, but about 110 tests
-# check it, so it is deleted in a change of its own rather than with the rest.
-_MEDIA = {
-    "functions.imaging": (
-        "ImageFormatError", "_chunk", "_filter_line", "_paeth", "bilinear_resize",
-        "contained_decoder", "decode_bmp", "decode_png", "encode_bmp", "encode_png",
-    ),
-    "functions.jpeg": (
-        "_BitReader", "_BitWriter", "_HuffDecoder", "_build_enc_table", "_csize",
-        "_dct_matrix_fix", "_div_round_away", "_encode_block_symbols", "_extend",
-        "_grow_to", "_pad_edge", "_plane_blocks", "_subsample_420", "decode_jpeg",
-        "dequant_idct", "encode_jpeg", "fdct_quant", "quality_scale", "rgb_to_ycbcr",
-        "ycbcr_to_rgb",
-    ),
-    "functions.gif": (
-        "_interlace_row_order", "cube_quantize", "decode_gif", "encode_gif",
-        "lzw_decode", "lzw_encode",
-    ),
-    "functions.audio": (
-        "AudioFormatError", "_decode_wav", "_require", "audio_feature_vector",
-        "band_energies", "decode_wav", "decode_wav_pcm16", "encode_wav", "resample_linear",
-    ),
-    "operators.multimodal": (
-        "audio_window_stats", "embed_features_stub", "resample_audio", "resize_images",
-    ),
+    "entry_queries.US_EXACT_FAMS": "(c) test fixture: perfbench's routed-sink fixture reads it",
+    # constants that only the kept defs above read
+    "sources.compressed._MAGICS": "(a) s4 parity: the magic table of sniff_codec",
+    "operators.filters.BEFORE_RANGE": "(a) s4 parity: a dt_pass_filters result",
+    "operators.filters.IN_RANGE": "(a) s4 parity: a dt_pass_filters result",
+    "operators.filters.AFTER_RANGE": "(a) s4 parity: a dt_pass_filters result",
 }
 KEPT.update(
-    {f"{mod}.{name}": "(d) deferred: media codec stack" for mod, names in _MEDIA.items() for name in names}
+    {f"functions.lz4_pure.{n}": "(a) s4 parity: an xxh32/lz4 frame constant"
+     for n in ("_P1", "_P2", "_P3", "_P4", "_P5", "_M", "_LZ4F_MAGIC")}
+)
+KEPT.update(
+    {f"sources.catalog.{n}": "(a) s4 parity: a pathbuf_to_filetype table"
+     for n in ("TEXT", "FIXEDSTRUCT", "EVTX", "JOURNAL", "UNPARSABLE", "COMPRESSION_SUFFIXES",
+               "ROTATION_RE", "FIXEDSTRUCT_NAMES", "UNPARSABLE_EXTS")}
 )
 
 
@@ -133,9 +120,9 @@ def caller_map():
     """Return (defs, edges, roots).
 
     ``defs`` maps "module.name" to (name, path, first line, n lines) for every
-    package top-level function and class; ``edges`` maps a bare name to the
-    names mentioned by each def/constant/alias of that name; ``roots`` is the
-    set of names the roots mention.
+    package top-level function, class and constant; ``edges`` maps a bare name
+    to the names mentioned by each def/constant/alias of that name; ``roots``
+    is the set of names the roots mention.
     """
     defs: dict[str, tuple[str, Path, int, int]] = {}
     edges: dict[str, set[str]] = {}
@@ -150,9 +137,13 @@ def caller_map():
                 edges.setdefault(stmt.name, set()).update(_mentions(stmt))
             elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
                 targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
-                names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
-                for name in names:
-                    edges.setdefault(name, set()).update(_mentions(stmt))
+                names = [n for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+                for n in names:
+                    edges.setdefault(n.id, set()).update(_mentions(stmt))
+                    if isinstance(n.ctx, ast.Store) and not n.id.startswith("__"):
+                        defs[f"{mod}.{n.id}"] = (
+                            n.id, path, stmt.lineno, stmt.end_lineno - stmt.lineno + 1,
+                        )
                 if not names:
                     roots |= _mentions(stmt)
             elif isinstance(stmt, (ast.Import, ast.ImportFrom)):
@@ -169,7 +160,7 @@ def caller_map():
 
 
 def unreached() -> dict[str, tuple[str, Path, int, int]]:
-    """Every package top-level def that no root reaches."""
+    """Every package top-level def and constant that no root reaches."""
     defs, edges, roots = caller_map()
     seen: set[str] = set()
     todo = list(roots)
