@@ -1,13 +1,12 @@
 """Pure-Python PNG/BMP pixel codecs + numpy bilinear resize.
 
-No imaging library ships in this container, but PNG (zlib is stdlib)
-and uncompressed BMP are decodable without one — so the multimodal
-resize stage gets a REAL pixel kernel for these formats (VERDICT r4
-missing #2 / next-round #8). The sibling modules complete the set:
-``functions/jpeg.py`` (baseline JPEG, fixed-point integer pipeline)
-and ``functions/gif.py`` (GIF LZW) — the header-rebuild stub now fires
-only for genuinely undecodable payloads (progressive JPEG,
-palette/interlaced PNG, header-only fixtures).
+PNG (zlib is stdlib) and uncompressed BMP are decodable without an
+imaging library. This is the last module of the media codec stack: the
+JPEG/GIF/WAV codecs and the resize/feature/audio stages built on them
+are gone, no root reaches this one either, and it is deleted in a
+change of its own (``tools/reachability.py`` keeps it as "(d)
+deferred"). Header and duration metadata lives in
+``operators/multimodal.py`` and does not use it.
 
 Formats per the public specs:
 

@@ -1,5 +1,4 @@
-"""Pure-Python PNG/BMP codecs + bilinear kernel (functions/imaging.py)
-and the real-pixel resize operator (operators/multimodal.resize_images)."""
+"""Pure-Python PNG/BMP codecs and bilinear kernel (functions/imaging.py)."""
 
 from __future__ import annotations
 
@@ -129,170 +128,3 @@ class TestBilinear:
     def test_identity(self):
         img = _rand(6, 5, 3, seed=3)
         assert np.array_equal(bilinear_resize(img, 5, 6), img)
-
-
-class TestResizeOperator:
-    def test_real_kernel_on_png_and_bmp(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.multimodal import (
-            resize_images,
-        )
-
-        img = _rand(8, 8, 3, seed=11)
-        df = spark.createDataFrame(
-            [
-                ("png", bytearray(encode_png(img))),
-                ("bmp", bytearray(encode_bmp(img))),
-            ],
-            "media_id string, payload binary",
-        )
-        got = {r["media_id"]: r for r in resize_images(df, 4, 4).collect()}
-        want = bilinear_resize(img, 4, 4)
-        for kind, dec in (("png", decode_png), ("bmp", decode_bmp)):
-            r = got[kind]
-            assert r["ok"] and r["kernel"] == "bilinear"
-            assert (r["src_width"], r["src_height"]) == (8, 8)
-            assert np.array_equal(dec(bytes(r["payload"])), want)
-
-    def test_real_kernel_on_jpeg_and_gif(self, spark):
-        """r5 closes the stub class: real JPEG and GIF payloads run the
-        pixel kernel end to end through the Spark operator — decode →
-        bilinear → re-encode in-format — and the output payload decodes
-        to exactly what the local codec composition produces."""
-        from super_speedy_syslog_searcher_spark.functions.gif import (
-            decode_gif,
-            encode_gif,
-        )
-        from super_speedy_syslog_searcher_spark.functions.jpeg import (
-            decode_jpeg,
-            encode_jpeg,
-        )
-        from super_speedy_syslog_searcher_spark.operators.multimodal import (
-            resize_images,
-        )
-
-        img = _rand(16, 16, 3, seed=12)
-        payloads = {"jpeg": encode_jpeg(img, quality=85), "gif": encode_gif(img)}
-        df = spark.createDataFrame(
-            [(k, bytearray(v)) for k, v in payloads.items()],
-            "media_id string, payload binary",
-        )
-        got = {r["media_id"]: r for r in resize_images(df, 8, 8).collect()}
-        for kind, dec, enc in (
-            ("jpeg", decode_jpeg, encode_jpeg),
-            ("gif", decode_gif, encode_gif),
-        ):
-            r = got[kind]
-            assert r["ok"] and r["kernel"] == "bilinear", kind
-            assert (r["src_width"], r["src_height"]) == (16, 16)
-            want = enc(bilinear_resize(dec(payloads[kind]), 8, 8))
-            assert bytes(r["payload"]) == bytes(want)
-
-    def test_header_only_jpeg_falls_back_to_stub(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.multimodal import (
-            build_jpeg,
-            build_png,
-            parse_image_header,
-            resize_images,
-        )
-
-        df = spark.createDataFrame(
-            [
-                ("jpeg", bytearray(build_jpeg(64, 32))),
-                ("hdr_png", bytearray(build_png(64, 32))),
-                ("junk", bytearray(b"??")),
-            ],
-            "media_id string, payload binary",
-        )
-        got = {r["media_id"]: r for r in resize_images(df, 16, 16).collect()}
-        assert got["jpeg"]["kernel"] == "header-stub"
-        assert got["hdr_png"]["kernel"] == "header-stub"
-        assert parse_image_header(bytes(got["jpeg"]["payload"])) == (16, 16, "jpeg")
-        assert not got["junk"]["ok"] and got["junk"]["payload"] is None
-
-
-class TestPixelFeatures:
-    def test_real_pixel_kernel_for_png_bmp(self, spark):
-        """r5: embed_features computes from REAL pixels for png/bmp — a
-        re-encode of the same picture in the other format lands at
-        cosine ~1, an unrelated picture doesn't; byte-level features
-        could not do that (different container bytes, same pixels)."""
-        from super_speedy_syslog_searcher_spark.operators.multimodal import (
-            embed_features,
-        )
-
-        rng = np.random.RandomState(5)
-        a = rng.randint(0, 256, (32, 32, 3), dtype=np.uint8)
-        b = rng.randint(0, 256, (32, 32, 3), dtype=np.uint8)
-        df = spark.createDataFrame(
-            [
-                ("a_png", bytearray(encode_png(a))),
-                ("a_bmp", bytearray(encode_bmp(a))),
-                ("b_png", bytearray(encode_png(b))),
-            ],
-            "media_id string, payload binary",
-        )
-        rows = {r["media_id"]: r for r in embed_features(df, dim=64).collect()}
-        assert all(r["kernel"] == "pixels" for r in rows.values())
-
-        def cos(x, y):
-            x, y = np.asarray(x, dtype=np.float64), np.asarray(y, dtype=np.float64)
-            return float(x @ y / (np.linalg.norm(x) * np.linalg.norm(y)))
-
-        same = cos(rows["a_png"]["vec"], rows["a_bmp"]["vec"])
-        diff = cos(rows["a_png"]["vec"], rows["b_png"]["vec"])
-        assert same > 0.999999  # identical pixels, different container
-        assert diff < same - 0.001
-
-    def test_pixel_kernel_for_jpeg_and_gif(self, spark):
-        """Same picture as PNG / JPEG / GIF → all three run the pixels
-        kernel and land close in cosine (JPEG is lossy and GIF is
-        cube-quantized, so near-1 rather than exactly 1), and all are
-        farther from an unrelated picture."""
-        from super_speedy_syslog_searcher_spark.functions.gif import encode_gif
-        from super_speedy_syslog_searcher_spark.functions.jpeg import encode_jpeg
-        from super_speedy_syslog_searcher_spark.operators.multimodal import (
-            embed_features,
-        )
-
-        x = np.linspace(0, 255, 32)
-        a = np.rint(np.broadcast_to(x[None, :, None], (32, 32, 3))).astype(np.uint8)
-        b = np.rint(np.broadcast_to(x[::-1][:, None, None], (32, 32, 3))).astype(
-            np.uint8
-        )
-        df = spark.createDataFrame(
-            [
-                ("a_png", bytearray(encode_png(np.ascontiguousarray(a)))),
-                ("a_jpg", bytearray(encode_jpeg(np.ascontiguousarray(a), quality=90))),
-                ("a_gif", bytearray(encode_gif(np.ascontiguousarray(a)))),
-                ("b_png", bytearray(encode_png(np.ascontiguousarray(b)))),
-            ],
-            "media_id string, payload binary",
-        )
-        rows = {r["media_id"]: r for r in embed_features(df, dim=64).collect()}
-        assert all(r["kernel"] == "pixels" for r in rows.values())
-
-        def cos(x_, y_):
-            x_, y_ = np.asarray(x_, dtype=np.float64), np.asarray(y_, dtype=np.float64)
-            return float(x_ @ y_ / (np.linalg.norm(x_) * np.linalg.norm(y_)))
-
-        ref = rows["a_png"]["vec"]
-        diff = cos(ref, rows["b_png"]["vec"])
-        for alt in ("a_jpg", "a_gif"):
-            same = cos(ref, rows[alt]["vec"])
-            assert same > 0.99, (alt, same)
-            assert same > diff + 0.005, (alt, same, diff)
-
-    def test_fallback_kernel_labeled(self, spark):
-        from super_speedy_syslog_searcher_spark.operators.multimodal import (
-            build_jpeg,
-            build_png,
-            embed_features,
-        )
-
-        df = spark.createDataFrame(
-            [("j", bytearray(build_jpeg(8, 8))), ("hdr", bytearray(build_png(8, 8)))],
-            "media_id string, payload binary",
-        )
-        rows = {r["media_id"]: r for r in embed_features(df, dim=32).collect()}
-        assert rows["j"]["kernel"] == "byte-bigram"
-        assert rows["hdr"]["kernel"] == "byte-bigram"  # header-only: no pixels

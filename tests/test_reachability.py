@@ -20,7 +20,7 @@ def test_unreached_defs_are_exactly_the_kept_ones():
 
 
 def test_kept_reasons_name_one_of_the_grounds():
-    grounds = ("(a) s4 parity", "(b) test reference", "(c) test fixture")
+    grounds = ("(a) s4 parity", "(b) test reference", "(c) test fixture", "(d) deferred")
     for name, reason in reachability.KEPT.items():
         assert reason.startswith(grounds), name
 

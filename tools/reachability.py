@@ -44,6 +44,8 @@ ROOT_DIRS = ("perfbench", "tools", f"{PACKAGE}/plans", f"{PACKAGE}/streaming")
 # (a) s4 parity: implements an s4 behaviour the reference documents.
 # (b) test reference: a test checks a reached def against it.
 # (c) test fixture: builds inputs for the tests.
+# (d) deferred: the PNG/BMP codec, last of the media stack, deleted in a
+#     change of its own.
 KEPT = {
     # s4 reads gz/bz2/lz4/xz/tar inputs transparently (SURVEY S4/S5)
     "sources.compressed.sniff_codec": "(a) s4 parity: codec sniffed from magic bytes",
@@ -86,6 +88,12 @@ KEPT.update(
     {f"sources.catalog.{n}": "(a) s4 parity: a pathbuf_to_filetype table"
      for n in ("TEXT", "FIXEDSTRUCT", "EVTX", "JOURNAL", "UNPARSABLE", "COMPRESSION_SUFFIXES",
                "ROTATION_RE", "FIXEDSTRUCT_NAMES", "UNPARSABLE_EXTS")}
+)
+KEPT.update(
+    {f"functions.imaging.{n}": "(d) deferred: PNG/BMP codec and bilinear kernel"
+     for n in ("ImageFormatError", "contained_decoder", "_paeth", "decode_png", "_filter_line",
+               "_chunk", "encode_png", "decode_bmp", "encode_bmp", "bilinear_resize",
+               "_PNG_SIG", "_CHANNELS")}
 )
 
 
