@@ -18,7 +18,8 @@ sources/     file-type catalog rules, synthetic tokenized corpus generator,
              fixed-struct (utmpx-family) decoder, journald export decoder,
              evtx-analogue decoder
 plans/       end-to-end pipeline composition, checkpoint/resume + lineage
-streaming/   Structured Streaming variant of the pipeline
+streaming/   the pipeline under Structured Streaming (foreachBatch), and
+             stateful sequence packing
 """
 
 __version__ = "0.1.0"

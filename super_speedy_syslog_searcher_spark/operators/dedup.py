@@ -580,9 +580,7 @@ def lsh_band_index(
     builds internally.  Write it once (parquet/Iceberg, partitioned by
     ``band``), then dedup each future crawl delta against it with
     :func:`lsh_pairs_against_index` instead of re-banding the
-    ever-growing corpus — the production shape for continuous ingestion
-    (the batch twin of ``streaming.stateful.lsh_pairs_stateful``, whose
-    state store is exactly this index keyed by bucket)."""
+    ever-growing corpus — the production shape for continuous ingestion."""
     # docs with no n-grams (fewer than n words) would all share the
     # all-zero signature and therefore EVERY band bucket — at corpus
     # scale that is a quadratic candidate blowup among short docs. Drop

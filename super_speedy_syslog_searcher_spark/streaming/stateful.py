@@ -1,20 +1,9 @@
-"""Stateful streaming sessionization — ``applyInPandasWithState``.
+"""Stateful streaming sequence packing — ``applyInPandasWithState``.
 
-For line-grained streams (lines of a doc arrive across micro-batches —
-the tail -f shape), message assembly needs per-doc state: the OPEN
-message (datetime line + continuations seen so far) stays in the state
-store until the next datetime line closes it, exactly like the
-reference's in-flight Sysline during its sequential scan
-(/root/reference/src/readers/syslinereader.rs:1976-2192 — line-with-dt A
-accumulates until the next line-with-dt B).
-
-State per doc_id: (msg_count, open message fields + token array). A
-processing-time timeout flushes docs that stop sending lines — the
-stream analogue of EOF closing the last sysline.
-
-Scale notes: state size = one open message per active doc; eviction by
-timeout bounds it (the drop-ahead discipline, M4). The grouping shuffle
-is on doc_id — same key as the batch sessionizer.
+``pack_sequences_stateful`` carries each source's token offset in
+GroupState, so sequences keep filling across micro-batches and a
+checkpoint restart, and the chunk map equals the batch operator's
+(operators/tokens.pack_sequences).
 """
 
 from __future__ import annotations
@@ -24,109 +13,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-MESSAGES_OUT_SCHEMA = (
-    "doc_id string, source string, msg_no int, ts timestamp, ts_ns int, "
-    "dt_beg int, dt_end int, pattern_id int, text string, "
-    "tokens array<int>, n_lines int, n_chars long"
-)
-
-# state: counters + the open message, tokens flattened with newline seps
-STATE_SCHEMA = (
-    "msg_count int, source string, open_ts timestamp, open_ts_ns int, "
-    "open_dt_beg int, open_dt_end int, open_pattern_id int, "
-    "open_text string, open_tokens array<int>, open_n_lines int"
-)
-
-NEWLINE_TOKEN = 10
-
-
-def _emit(doc_id, source, msg_no, st) -> dict:
-    return {
-        "doc_id": doc_id, "source": source, "msg_no": msg_no,
-        "ts": st["ts"], "ts_ns": st["ts_ns"], "dt_beg": st["dt_beg"],
-        "dt_end": st["dt_end"], "pattern_id": st["pattern_id"],
-        "text": st["text"], "tokens": st["tokens"],
-        "n_lines": st["n_lines"], "n_chars": len(st["text"]),
-    }
-
-
-def sessionize_stateful(parsed_lines_stream: DataFrame, timeout_ms: int = 60_000) -> DataFrame:
-    """Streaming parsed lines (doc_id, source, line_no, line_tokens, text,
-    ts, ts_ns, dt_beg, dt_end, pattern_id) → messages stream.
-
-    A datetime line opens a message; datetime-less lines append; the next
-    datetime line (or state timeout) emits the closed message.
-    """
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        doc_id = key[0]
-        if state.hasTimedOut:
-            if state.exists:
-                (cnt, src, ts, ts_ns, dt_beg, dt_end, pid, text, tokens, n_lines) = state.get
-                state.remove()
-                if ts is not None:
-                    yield pd.DataFrame([
-                        _emit(doc_id, src, cnt + 1, {
-                            "ts": ts, "ts_ns": ts_ns, "dt_beg": dt_beg, "dt_end": dt_end,
-                            "pattern_id": pid, "text": text, "tokens": list(tokens),
-                            "n_lines": n_lines,
-                        })
-                    ])
-            return
-
-        if state.exists:
-            (cnt, source, o_ts, o_ts_ns, o_beg, o_end, o_pid, o_text, o_tokens, o_nl) = state.get
-            open_msg = None if o_ts is None else {
-                "ts": o_ts, "ts_ns": o_ts_ns, "dt_beg": o_beg, "dt_end": o_end,
-                "pattern_id": o_pid, "text": o_text, "tokens": list(o_tokens), "n_lines": o_nl,
-            }
-        else:
-            cnt, open_msg = 0, None
-
-        out = []
-        if not state.exists:
-            source = ""
-        for pdf in pdfs:
-            pdf = pdf.sort_values("line_no")
-            for row in pdf.itertuples(index=False):
-                source = row.source
-                has_dt = pd.notna(row.ts)
-                if has_dt:
-                    if open_msg is not None:
-                        cnt += 1
-                        out.append(_emit(doc_id, source, cnt, open_msg))
-                    open_msg = {
-                        "ts": row.ts, "ts_ns": int(row.ts_ns), "dt_beg": int(row.dt_beg),
-                        "dt_end": int(row.dt_end), "pattern_id": int(row.pattern_id),
-                        "text": row.text, "tokens": list(row.line_tokens), "n_lines": 1,
-                    }
-                elif open_msg is not None:
-                    open_msg["text"] += "\n" + row.text
-                    open_msg["tokens"] = open_msg["tokens"] + [NEWLINE_TOKEN] + list(row.line_tokens)
-                    open_msg["n_lines"] += 1
-                # leading datetime-less lines belong to no message (dropped)
-
-        if open_msg is None:
-            state.update((cnt, source, None, 0, -1, -1, -1, "", [], 0))
-        else:
-            state.update((
-                cnt, source, open_msg["ts"], open_msg["ts_ns"], open_msg["dt_beg"],
-                open_msg["dt_end"], open_msg["pattern_id"], open_msg["text"],
-                open_msg["tokens"], open_msg["n_lines"],
-            ))
-        state.setTimeoutDuration(timeout_ms)
-        if out:
-            yield pd.DataFrame(out)
-
-    return parsed_lines_stream.groupBy("doc_id").applyInPandasWithState(
-        fn,
-        outputStructType=MESSAGES_OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
 
 PACK_OUT_SCHEMA = (
     "source string, seq_id long, doc_id string, tok_off long, "
@@ -203,406 +89,4 @@ def pack_sequences_stateful(docs_stream: DataFrame, max_len: int = 512) -> DataF
         stateStructType=PACK_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-DEDUP_OUT_SCHEMA = "doc_id string, source string, fp string, n_dups_in_batch int"
-DEDUP_STATE_SCHEMA = "first_doc_id string"
-
-
-def dedup_exact_stateful(docs_stream: DataFrame, ttl_ms: int = 0) -> DataFrame:
-    """Streaming exact dedup: emit the FIRST occurrence of each content
-    fingerprint across micro-batches, drop every later re-delivery.
-
-    An at-least-once log source (kafka replay, crawl re-fetch, agent
-    retry after a partial ack) re-delivers identical payloads across
-    batches; the batch operator (``operators.dedup.exact_dedup_groups``,
-    reference analogue: the printed-offset dedup that keeps a processed
-    block from printing twice, /root/reference/src/readers/
-    blockreader.rs read-cache discipline) cannot see across batch
-    boundaries. Here the GROUP KEY IS THE FINGERPRINT itself
-    (md5(text), the same 16-byte key the batch op shuffles on), so the
-    state store holds ONE tiny row per distinct fingerprint — its
-    first doc_id — never a per-key set and never a growing blob:
-    state size = distinct corpus fingerprints, the floor for exact
-    streaming dedup.
-
-    Within a batch, the winner is the min doc_id (deterministic,
-    matching the batch op's ``keeper = min(id)``); ``n_dups_in_batch``
-    counts suppressed same-batch copies so downstream metrics can
-    account for dropped volume.
-
-    ``ttl_ms > 0`` bounds state with a processing-time eviction: a
-    fingerprint idle longer than the TTL is forgotten and a later
-    re-delivery is treated as new — the standard recall-for-memory
-    trade; leave 0 for exact semantics.
-    """
-    timeout = GroupStateTimeout.ProcessingTimeTimeout if ttl_ms > 0 else GroupStateTimeout.NoTimeout
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        fp = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf) == 0:
-            return
-        pdf = pdf.sort_values("doc_id")
-        if state.exists:
-            if ttl_ms > 0:
-                state.setTimeoutDuration(ttl_ms)  # re-delivery refreshes the TTL
-            return  # every row in this batch is a re-delivery
-        state.update((str(pdf["doc_id"].iloc[0]),))
-        if ttl_ms > 0:
-            state.setTimeoutDuration(ttl_ms)  # set AFTER update: needs live state
-        yield pd.DataFrame(
-            [
-                {
-                    "doc_id": pdf["doc_id"].iloc[0],
-                    "source": pdf["source"].iloc[0],
-                    "fp": fp,
-                    "n_dups_in_batch": int(len(pdf) - 1),
-                }
-            ]
-        )
-
-    from pyspark.sql import functions as F
-
-    hashed = docs_stream.select(
-        "doc_id", "source", F.md5(F.col("text").cast("binary")).alias("fp")
-    )
-    return hashed.groupBy("fp").applyInPandasWithState(
-        fn,
-        outputStructType=DEDUP_OUT_SCHEMA,
-        stateStructType=DEDUP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-LSH_PAIRS_OUT_SCHEMA = "a string, b string, band int, bucket long"
-LSH_PAIRS_STATE_SCHEMA = "root string"
-
-
-def lsh_pairs_stateful(docs_stream: DataFrame, k: int = 256, bands: int = 64, n: int = 3) -> DataFrame:
-    """Streaming MinHash-LSH near-dup candidate edges — the stream face
-    of ``operators.dedup.lsh_candidate_pairs(pair_mode="star")``.
-
-    A crawl/ingest stream needs duplicate candidates AS DOCS ARRIVE, not
-    after a batch pass; the batch op's bucket self-join cannot see across
-    micro-batches. Here the GROUP KEY IS THE BAND BUCKET ``(band,
-    bucket)`` and the state is ONE row per bucket: the bucket's HUB (the
-    min id of the bucket's first batch). Every later member emits one
-    edge to the hub — the streaming star. State size = distinct occupied
-    buckets (≤ bands × corpus/bucket-occupancy), never a member list and
-    never quadratic in bucket size: the same mega-bucket discipline as
-    the batch star mode.
-
-    Closure equivalence: a star centered on ANY bucket member has the
-    same transitive closure as the bucket's clique, so duplicate
-    clusters via ``connected_components`` over the emitted edges equal
-    the batch all-pairs clusters (asserted in ``tests/test_streaming.py``)
-    — the hub being first-seen-min rather than global-min changes which
-    edges appear, not which clusters form. Edges are normalized a < b;
-    a re-delivered member re-emits its (hub, member) edge — idempotent
-    under the downstream closure. Docs with no n-grams are dropped
-    before banding (same guard as batch: they'd join every bucket).
-    """
-    from ..operators.dedup import lsh_band_index
-
-    banded = lsh_band_index(docs_stream, "doc_id", "text", k=k, bands=bands, n=n)
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        band, bucket = key
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf) == 0:
-            return
-        ids = sorted(set(pdf["id"]))
-        if state.exists:
-            (root,) = state.get
-        else:
-            root = ids[0]
-            state.update((root,))
-        edges = [
-            {"a": min(root, m), "b": max(root, m), "band": int(band), "bucket": int(bucket)}
-            for m in ids
-            if m != root
-        ]
-        if edges:
-            yield pd.DataFrame(edges)
-
-    return banded.groupBy("band", "bucket").applyInPandasWithState(
-        fn,
-        outputStructType=LSH_PAIRS_OUT_SCHEMA,
-        stateStructType=LSH_PAIRS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-RATE_OUT_SCHEMA = (
-    "source string, bucket_ts timestamp, n long, mean_prior double, "
-    "z double, is_burst boolean"
-)
-# moments of CLOSED buckets + the one open bucket
-RATE_STATE_SCHEMA = "s1 long, s2 long, c long, cur_bucket long, cur_n long"
-
-
-def rate_anomalies_stateful(
-    events_stream: DataFrame,
-    bucket_ms: int = 3_600_000,
-    z_threshold: float = 2.0,
-    ts_col: str = "ts",
-    source_col: str = "source",
-    timeout_ms: int = 0,
-) -> DataFrame:
-    """ONLINE per-source volume burst detection — the streaming face of
-    ``operators.summary.rate_anomalies``. Each time bucket closes when
-    the first event of a LATER bucket arrives; the closed bucket is
-    scored against the moments of the buckets closed before it
-    (prior-only z — the batch operator scores against the whole
-    history, so the two agree only in the no-surprise limit; the pytest
-    pins this operator to a sequential online reference instead).
-
-    Contract (the ``pack_sequences_stateful`` discipline): each
-    source's events arrive in nondecreasing bucket order across
-    micro-batches — a regression raises rather than silently
-    mis-scoring. With ``timeout_ms > 0`` an idle source's final open
-    bucket is flushed by the processing-time timeout (the EOF
-    analogue); with 0 it stays open awaiting more events.
-
-    Scale: state is FIVE numbers per source (Σn, Σn², closed-bucket
-    count, open bucket id, open count) — constant per source forever;
-    the only shuffle keys on source. Moments are exact integers, so
-    restart from checkpoint reproduces identical scores.
-    """
-
-    def _score(src, bucket, n, s1, s2, c):
-        mean = s1 / c if c else None
-        z = None
-        if c >= 1:
-            var = s2 / c - mean * mean
-            sd = max(var, 0.0) ** 0.5
-            if sd > 0:
-                z = round((n - mean) / sd, 4)
-        return {
-            "source": src,
-            "bucket_ts": pd.Timestamp(bucket * bucket_ms, unit="ms"),
-            "n": n,
-            "mean_prior": round(mean, 4) if mean is not None else None,
-            "z": z,
-            "is_burst": bool(z is not None and abs(z) > z_threshold),
-        }
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (src,) = key
-        if state.hasTimedOut:
-            s1, s2, c, cur_bucket, cur_n = state.get
-            state.remove()
-            if cur_bucket is not None and cur_n:
-                yield pd.DataFrame([_score(src, cur_bucket, cur_n, s1, s2, c)])
-            return
-
-        s1, s2, c, cur_bucket, cur_n = state.get if state.exists else (0, 0, 0, None, 0)
-        out = []
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            buckets = pdf[ts_col].astype("int64") // (bucket_ms * 1_000_000)
-            for bucket, cnt in sorted(buckets.value_counts().items()):
-                bucket = int(bucket)
-                if cur_bucket is None:
-                    cur_bucket, cur_n = bucket, int(cnt)
-                elif bucket == cur_bucket:
-                    cur_n += int(cnt)
-                elif bucket > cur_bucket:
-                    out.append(_score(src, cur_bucket, cur_n, s1, s2, c))
-                    s1 += cur_n
-                    s2 += cur_n * cur_n
-                    c += 1
-                    cur_bucket, cur_n = bucket, int(cnt)
-                else:
-                    raise ValueError(
-                        f"source {src!r}: bucket {bucket} arrived after "
-                        f"{cur_bucket} — per-source event-time order regressed"
-                    )
-        state.update((s1, s2, c, cur_bucket, cur_n))
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
-        if out:
-            yield pd.DataFrame(out)
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return events_stream.groupBy(source_col).applyInPandasWithState(
-        fn,
-        outputStructType=RATE_OUT_SCHEMA,
-        stateStructType=RATE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-FUNNEL_OUT_SCHEMA = "user_id long, idx int, step string, ts timestamp, event_id long"
-# (furthest step reached, its pivot event, last event seen — order guard)
-FUNNEL_STATE_SCHEMA = "idx int, p_ts long, p_eid long, l_ts long, l_eid long"
-
-
-def funnel_stateful(
-    events_stream: DataFrame,
-    steps: list,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """ONLINE ordered-step funnel — the streaming face of
-    ``operators.funnel.funnel_conversion``. Emits one row per entity
-    per step ADVANCE (a step-reached changelog); counting rows per
-    ``idx`` downstream gives the live conversion funnel.
-
-    Equivalence with the batch operator: batch picks the EARLIEST
-    step-k event strictly after its step-(k-1) pick — an in-event-time
-    greedy walk. Streaming replays exactly that walk, so given the
-    contract below, furthest-step-per-entity ≡ batch on the same rows
-    (pinned across micro-batch splits and a checkpoint restart in
-    pytest).
-
-    Contract (the ``rate_anomalies_stateful`` discipline): each
-    entity's events arrive in nondecreasing (ts, event_id) order
-    across micro-batches — a regression RAISES rather than silently
-    undercounting (a late earlier-ts event could have been a missed
-    pivot; loud beats wrong).
-
-    Scale: state is FIVE numbers per entity, forever (no growth with
-    activity); the only shuffle keys on the entity. The step list is
-    plan-time config, never state.
-    """
-    n_steps = len(steps)
-    if not n_steps:
-        raise ValueError("funnel needs at least one step")
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (uid,) = key
-        idx, p_ts, p_eid, l_ts, l_eid = (
-            state.get if state.exists else (0, None, None, None, None)
-        )
-        out = []
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values([ts_col, id_col])
-            ts_ns = pdf[ts_col].astype("int64").to_numpy()
-            eids = pdf[id_col].to_numpy()
-            types = pdf[type_col].to_numpy()
-            for t, e, ty in zip(ts_ns, eids, types):
-                t, e = int(t), int(e)
-                if l_ts is not None and (t, e) < (l_ts, l_eid):
-                    raise ValueError(
-                        f"entity {uid!r}: event ({t}, {e}) arrived after "
-                        f"({l_ts}, {l_eid}) — per-entity event-time order regressed"
-                    )
-                l_ts, l_eid = t, e
-                if idx < n_steps and ty == steps[idx] and (
-                    p_ts is None or (t, e) > (p_ts, p_eid)
-                ):
-                    idx += 1
-                    p_ts, p_eid = t, e
-                    out.append(
-                        {
-                            "user_id": uid,
-                            "idx": idx,
-                            "step": steps[idx - 1],
-                            "ts": pd.Timestamp(t, unit="ns"),
-                            "event_id": e,
-                        }
-                    )
-        state.update((idx, p_ts, p_eid, l_ts, l_eid))
-        if out:
-            yield pd.DataFrame(out)
-
-    return events_stream.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=FUNNEL_OUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-MG_OUT_SCHEMA = "source string, key string, est long, n long"
-MG_STATE_SCHEMA = "keys array<string>, counts array<long>, n long"
-
-
-def mg_heavy_hitters_stateful(
-    docs_stream: DataFrame,
-    key_col: str = "key",
-    k: int = 64,
-    group_col: str = "source",
-) -> DataFrame:
-    """ONLINE Misra-Gries heavy hitters — the streaming face of
-    ``operators.sketch.mg_heavy_hitters``: per group, state is the
-    bounded MG(k) counter table (≤ k−1 keys + the running total n),
-    CONSTANT per group forever — the property that makes top-talker
-    tracking on an unbounded stream feasible at all. Each micro-batch
-    folds in vectorized (one value_counts + one decrement per batch,
-    no per-row Python) and emits the group's refreshed summary rows;
-    consumers keep the snapshot with the largest ``n``.
-
-    The MG guarantees hold at every emission for the prefix consumed
-    so far, regardless of how the stream was split into micro-batches
-    (pinned in tests across splits and a checkpoint restart):
-    ``est ≤ true_count``, ``true_count − est ≤ n/k``, and every key
-    above ``n/k`` of the prefix is present.
-
-    Scale: the only shuffle keys on the group column (same key as the
-    batch sketch's merge); state is ≤ k−1 (string, long) pairs + one
-    long per group.
-    """
-    from pyspark.sql import functions as F
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (src,) = key
-        if state.exists:
-            keys, counts, n = state.get
-            ctr = dict(zip(list(keys), [int(c) for c in counts]))
-            n = int(n)
-        else:
-            ctr, n = {}, 0
-        touched = False
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            touched = True
-            vc = pdf[key_col].value_counts()
-            n += int(vc.sum())
-            for kk, c in vc.items():
-                ctr[kk] = ctr.get(kk, 0) + int(c)
-            if len(ctr) >= k:
-                delta = sorted(ctr.values(), reverse=True)[k - 1]
-                ctr = {kk: c - delta for kk, c in ctr.items() if c - delta > 0}
-        state.update((list(ctr.keys()), [int(c) for c in ctr.values()], n))
-        if touched and ctr:
-            yield pd.DataFrame(
-                {
-                    "source": [src] * len(ctr),
-                    "key": list(ctr.keys()),
-                    "est": [int(c) for c in ctr.values()],
-                    "n": [n] * len(ctr),
-                }
-            )
-
-    return (
-        docs_stream.select(F.col(group_col).alias("source"), F.col(key_col).alias(key_col))
-        .groupBy("source")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=MG_OUT_SCHEMA,
-            stateStructType=MG_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
     )

@@ -70,38 +70,3 @@ def test_journal_reader_contains_any_corruption(xz):
             J.parse_journal_bytes(_flip(base, rng))
         except J.JournalFormatError:
             pass
-
-
-class TestImageCodecFuzz:
-    """Same contract for the PNG codec: a mutated payload must decode or
-    raise ImageFormatError — never crash, hang, or throw a foreign
-    exception type. This fuzz initially ESCAPED with struct.error (short
-    PNG chunks); the ``contained_decoder`` wrapper is the fix it bought."""
-
-    def _fuzz(self, payload: bytes, decode, seed: int, n: int = 300):
-        from super_speedy_syslog_searcher_spark.functions.imaging import (
-            ImageFormatError,
-        )
-
-        rng = random.Random(seed)
-        for _ in range(n):
-            b = bytearray(payload)
-            for _k in range(rng.randint(1, 4)):
-                b[rng.randrange(len(b))] = rng.randrange(256)
-            try:
-                decode(bytes(b))
-            except ImageFormatError:
-                pass
-
-    def test_png_decoder_contains_corruption(self):
-        import numpy as np
-
-        from super_speedy_syslog_searcher_spark.functions.imaging import (
-            decode_png,
-            encode_png,
-        )
-
-        img = (np.arange(10 * 14 * 3, dtype=np.int64) % 256).astype("uint8").reshape(
-            10, 14, 3
-        )
-        self._fuzz(encode_png(img, filter_type=4), decode_png, seed=7)

@@ -159,6 +159,22 @@ def test_sessionize_edge_shapes(spark):
     assert il[0]["text"].startswith("2024-01-05T10:00:00Z x")
 
 
+def test_line_grained_sessionize_matches_golden(spark, corpus):
+    """The line-grained lane (explode → parse_lines → sessionize) assembles
+    the messages the corpus golden lists: same keys, texts and line
+    counts. It applies no year fix, so timestamps are not compared."""
+    from super_speedy_syslog_searcher_spark.functions.parse import parse_lines
+    from super_speedy_syslog_searcher_spark.operators.sessionize import sessionize
+
+    docs_pd, _, golden = corpus
+    docs = spark.createDataFrame(docs_pd, schema=DOCS_SCHEMA)
+    msgs = sessionize(parse_lines(explode_lines(docs), reference_year=REFERENCE_YEAR))
+    cols = ["doc_id", "msg_no", "text", "n_lines"]
+    got = {tuple(r) for r in msgs.select(cols).collect()}
+    want = {tuple(r) for r in golden[cols].itertuples(index=False)}
+    assert got == want
+
+
 def test_doc_grained_counters_equal_line_grained(spark, corpus):
     """run_pipeline's summary and pattern counts, made from the docs table
     and the kernel's messages, are row- and schema-identical to the

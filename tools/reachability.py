@@ -6,10 +6,10 @@ Roots are the code that runs outside the tests:
 - the query registry: ``__spark_entry__.py``, whose ``queries()`` and
   ``oracle_sql()`` pull in the ``QUERIES``/``ORACLES`` tables of
   ``entry_queries*.py``;
-- ``bench.py``, ``perfbench/`` and ``tools/`` (test files excluded);
-- the package's ``plans/`` and ``streaming/`` modules.
+- ``bench.py``, ``perfbench/`` and ``tools/`` (test files excluded).
 
-Every def in a root file counts as reached.
+No package module is a root: a package def counts as reached only through
+these entry points.
 
 The map is name-level and uses only ``ast``. A package top-level def or
 constant is reached when a root file, or the body of a reached def or
@@ -37,15 +37,13 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 PACKAGE = "super_speedy_syslog_searcher_spark"
 ROOT_FILES = ("__spark_entry__.py", "bench.py")
-ROOT_DIRS = ("perfbench", "tools", f"{PACKAGE}/plans", f"{PACKAGE}/streaming")
+ROOT_DIRS = ("perfbench", "tools")
 
 # Unreached defs and constants kept on purpose, keyed "module.name" relative
 # to the package.
 # (a) s4 parity: implements an s4 behaviour the reference documents.
 # (b) test reference: a test checks a reached def against it.
 # (c) test fixture: builds inputs for the tests.
-# (d) deferred: the PNG/BMP codec, last of the media stack, deleted in a
-#     change of its own.
 KEPT = {
     # s4 reads gz/bz2/lz4/xz/tar inputs transparently (SURVEY S4/S5)
     "sources.compressed.sniff_codec": "(a) s4 parity: codec sniffed from magic bytes",
@@ -88,12 +86,6 @@ KEPT.update(
     {f"sources.catalog.{n}": "(a) s4 parity: a pathbuf_to_filetype table"
      for n in ("TEXT", "FIXEDSTRUCT", "EVTX", "JOURNAL", "UNPARSABLE", "COMPRESSION_SUFFIXES",
                "ROTATION_RE", "FIXEDSTRUCT_NAMES", "UNPARSABLE_EXTS")}
-)
-KEPT.update(
-    {f"functions.imaging.{n}": "(d) deferred: PNG/BMP codec and bilinear kernel"
-     for n in ("ImageFormatError", "contained_decoder", "_paeth", "decode_png", "_filter_line",
-               "_chunk", "encode_png", "decode_bmp", "encode_bmp", "bilinear_resize",
-               "_PNG_SIG", "_CHANNELS")}
 )
 
 
