@@ -20,6 +20,11 @@ sources/     file-type catalog rules, synthetic tokenized corpus generator,
 plans/       end-to-end pipeline composition, checkpoint/resume + lineage
 streaming/   the pipeline under Structured Streaming (foreachBatch), and
              stateful sequence packing
+session.py   the SparkSession factory; on local masters it runs the
+             Python workers under worker_daemon.py
+
+This file imports nothing: ``python -m ...worker_daemon`` runs it before
+the daemon has settled which pyspark to import.
 """
 
 __version__ = "0.1.0"

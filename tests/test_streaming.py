@@ -7,6 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from super_speedy_syslog_searcher_spark.streaming.pipeline import await_or_raise
+
 
 @pytest.fixture()
 def stream_dirs(tmp_path):
@@ -39,7 +41,7 @@ def test_stream_matches_batch(spark, corpus, stream_dirs):
         spark, stream_dirs["input"], stream_dirs["out"], stream_dirs["ckpt"], enrichment,
         reference_year=2023,
     )
-    q.awaitTermination(300)
+    await_or_raise(q, 300)
 
     routed = spark.read.parquet(stream_dirs["out"])
     batch_msgs = enrich(
@@ -60,11 +62,11 @@ def test_stream_resume_is_idempotent(spark, corpus, stream_dirs):
 
     enrichment = _write_docs(spark, corpus, stream_dirs["input"])
     q = stream_pipeline(spark, stream_dirs["input"], stream_dirs["out"], stream_dirs["ckpt"], enrichment)
-    q.awaitTermination(300)
+    await_or_raise(q, 300)
     n1 = spark.read.parquet(stream_dirs["out"]).count()
     # restart with same checkpoint and no new input → no duplicate writes
     q2 = stream_pipeline(spark, stream_dirs["input"], stream_dirs["out"], stream_dirs["ckpt"], enrichment)
-    q2.awaitTermination(300)
+    await_or_raise(q2, 300)
     n2 = spark.read.parquet(stream_dirs["out"]).count()
     assert n1 == n2
 
@@ -100,7 +102,7 @@ def test_stateful_packing_carries_offset_across_batches(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        await_or_raise(q, 300)
 
     run_once(batch1, "overwrite")
     run_once(batch2, "append")
@@ -145,7 +147,7 @@ def test_pack_stateful_out_of_order_doc_raises(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        await_or_raise(q, 300)
         return q
 
     run_once([("d5", "s", [1, 2, 3])], "overwrite")
@@ -164,8 +166,6 @@ def test_await_or_raise_on_undrained_stream(spark, tmp_path):
     import time as _time
 
     import pytest as _pytest
-
-    from super_speedy_syslog_searcher_spark.streaming.pipeline import await_or_raise
 
     src = str(tmp_path / "src")
     spark.range(0, 8).write.parquet(src)

@@ -12,6 +12,13 @@
 #     --conf spark.sql.shuffle.partitions=2000 \
 #     --conf spark.sql.adaptive.enabled=true \
 #     tools/run_pipeline_demo.py -a "2023-06-01" -b "2023-06-02" --out s3://bucket/routed
+#
+# session.get_spark runs the Python workers under the package's
+# worker_daemon module (the installed pyspark instead of $SPARK_HOME's
+# source zip) only on local masters whose package directory is on the
+# workers' path. A --py-files zip reaches a worker with its first task,
+# after the daemon has started, so with this zip the workers run Spark's
+# own daemon.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 OUT="${1:-dist}"
